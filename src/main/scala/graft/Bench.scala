@@ -1,93 +1,33 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 object Bench {
+
+  /** One query's measurement: seconds, whether it succeeded, and its jobs. */
+  final case class Run(name: String, sec: Double, ok: Boolean, jobs: Int)
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // events.parquet carries INT64 TIMESTAMP(NANOS); see Tables.events.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Warmup: JVM/codegen/parquet-reader classloading otherwise lands on
-    // whichever query happens to run first and distorts its number. Beyond
-    // the scan+agg warm, touch the operator families whose FIRST use loads
-    // large class graphs (WindowExec + unsafe sorter, broadcast hash join,
-    // Generate, shuffle writer): per-plan codegen still compiles per query,
-    // but the class loading and the Janino compiler itself warm here, off
-    // every query's clock — same warmup on both sides of the 2x gate.
-    locally {
-      import org.apache.spark.sql.functions._
-      import org.apache.spark.sql.expressions.Window
-      spark.read.parquet(s"$sfDir/region.parquet").count()
-      spark.range(1000000).selectExpr("sum(id * 2)").collect()
-      val r = spark.range(10000).toDF("id")
-      r.withColumn("w", row_number().over(
-          Window.partitionBy(col("id") % 10).orderBy(col("id"))))
-        .agg(max(col("w"))).collect()
-      r.join(broadcast(spark.range(100).toDF("id")), "id").count()
-      r.select(explode(split(lit("a b c"), " ")).as("t"))
-        .groupBy(col("t")).count().orderBy(col("t")).collect()
-      // The poly-fingerprint kernel backs the dedup/DSIR/qmodel families;
-      // its first ~10k evaluations run pre-C2 (measured: whichever
-      // fingerprint-heavy query lands first in a JVM paid up to 3×).
-      spark.range(100000).selectExpr("cast(id as string) AS s")
-        .select(graft.llm.TextAnalysis.fingerprint(col("s")).as("f"))
-        .agg(max(col("f"))).collect()
-    }
-    // Optional subset (comma-separated names) for local scale smokes —
-    // the driver never sets it, so driver runs always cover the registry.
-    val only = sys.env.get("SPARK_GRAFT_QUERIES").map(_.split(",").toSet)
     // Inter-query GC cadence (VERDICT r17 item 4): the unconditional
     // System.gc() between all 302 queries ran OUTSIDE every timed region
     // but its ~302 full-GC pauses were a large slice of the run's
     // wall-clock. Block/old-gen pressure is already released by the
-    // clearCache + unpersist below; a full GC every query was belt-and-
-    // braces. Every 4th query keeps at most 3 queries of dead checkpoint
-    // blocks pending (measured: per-query seconds and job counts flat vs
-    // the every-query cadence at sf0.1 — see OPTIMIZATION_r18.md).
+    // clearCache + unpersist in [[measure]]; a full GC every query was
+    // belt-and-braces. Every 4th query keeps at most 3 queries of dead
+    // checkpoint blocks pending (measured: per-query seconds and job counts
+    // flat vs the every-query cadence at sf0.1 — see OPTIMIZATION_r18.md).
     // SPARK_GRAFT_GC_EVERY=1 restores the old cadence; the timing
     // methodology (noop sink, per-query job groups) is unchanged.
-    val gcEvery = sys.env.get("SPARK_GRAFT_GC_EVERY").map(_.toInt).getOrElse(4)
-    var sinceGc = 0
+    val gcEvery = GraftSession.envInt("SPARK_GRAFT_GC_EVERY", 4)
+    val spark = GraftSession.create()
+    warmUp(spark, sfDir)
+    // Optional subset (comma-separated names) for local scale smokes —
+    // the driver never sets it, so driver runs always cover the registry.
+    val only = sys.env.get("SPARK_GRAFT_QUERIES").map(_.split(",").toSet)
     val results = SparkEntry.queries.toSeq
       .filter { case (name, _) => only.forall(_.contains(name)) }
-      .sortBy(_._1).map { case (name, fn) =>
-      // Job group per query → per-query job counts from the status tracker
-      // (VERDICT r6 item 8: seconds alone can't tell cold-JIT tax from a
-      // plan regression; the number of driver actions can).
-      spark.sparkContext.setJobGroup(name, name, interruptOnCancel = false)
-      val t0 = System.nanoTime()
-      // Noop sink, not count(): count() lets Catalyst prune unreferenced
-      // projections, so map-only queries would benchmark near-zero work.
-      // Evaluating every InternalRow measures the actual plan.
-      val ok =
-        try { fn(spark, sfDir).queryExecution.toRdd.foreach(_ => ()); true }
-        catch { case e: Throwable =>
-          System.err.println(s"[bench] $name failed: ${e.getMessage}"); false
-        }
-      val elapsed = (System.nanoTime() - t0) / 1e9
-      spark.sparkContext.clearJobGroup()
-      // Between queries: drop caches/localCheckpoint blocks (always), and
-      // periodically force a GC — persisted blocks otherwise live until
-      // their RDD is collected, and the accumulated block-manager +
-      // old-gen pressure from 60+ queries distorts whatever happens to run
-      // late in the sequence (measured: the q_text_* family at 10-80x its
-      // isolated time without any GC at all).
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-      sinceGc += 1
-      if (sinceGc >= gcEvery) { System.gc(); sinceGc = 0 }
-      // Read the group's job ids after the cleanup work above: the status
-      // store is fed by the async listener bus, and the cleanup (plus the
-      // periodic GC pause) doubles as its settle time.
-      val jobs = spark.sparkContext.statusTracker.getJobIdsForGroup(name).length
-      (name, elapsed, ok, jobs)
-    }
+      .sortBy(_._1).zipWithIndex.map { case ((name, fn), i) =>
+        measure(spark, sfDir, name, fn, gc = (i + 1) % gcEvery == 0)
+      }
     // A crashed query records its NEGATED partial time (visible failure
     // marker) and is excluded from the total rather than shrinking it.
     // The stdout line is kept SHORT (2-decimal times, no jobs map): the
@@ -99,10 +39,10 @@ object Bench {
     // comma-decimal locales and breaks the one-line JSON contract.
     def fmt(v: Double, dp: Int): String =
       String.format(java.util.Locale.ROOT, s"%.${dp}f", Double.box(v))
-    val qs = results.map { case (k, v, ok, _) => s"\"" + k + "\":" + fmt(if (ok) v else -v, 2) }
+    val qs = results.map { case Run(k, v, ok, _) => s"\"" + k + "\":" + fmt(if (ok) v else -v, 2) }
       .mkString("{", ",", "}")
-    val total = results.collect { case (_, v, true, _) => v }.sum
-    val detail = results.map { case (k, v, ok, j) =>
+    val total = results.collect { case Run(_, v, true, _) => v }.sum
+    val detail = results.map { case Run(k, v, ok, j) =>
       s"\"$k\":{\"sec\":${fmt(if (ok) v else -v, 3)},\"jobs\":$j}"
     }.mkString("{", ",", "}")
     try {
@@ -119,7 +59,7 @@ object Bench {
     // LAST JSON on stdout and fits any tail window, so the driver artifact
     // stays self-contained. Same "metric" shape so either line satisfies a
     // {"metric":...} scanner.
-    val nFail = results.count(!_._3)
+    val nFail = results.count(!_.ok)
     println(s"""{"metric":"total","value":${fmt(total, 3)},"unit":"sec","n_queries":${results.size},"n_failed":$nFail,"sf":"$sfDir"}""")
     spark.stop()
     // Job-count plan-regression gate (opt-in; the driver never sets this):
@@ -128,7 +68,7 @@ object Bench {
     // growth — job counts are plan-stable where seconds are load-hostage.
     sys.env.get("SPARK_GRAFT_ASSERT_JOBS").foreach { baselinePath =>
       val recorded = JobGate.loadBaseline(baselinePath)
-      val actual = results.collect { case (k, _, true, j) => k -> j }.toMap
+      val actual = results.collect { case Run(k, _, true, j) => k -> j }.toMap
       val violations = JobGate.compare(recorded, actual)
       if (violations.nonEmpty) {
         violations.foreach(v => System.err.println(s"[jobgate] $v"))
@@ -136,5 +76,69 @@ object Bench {
       } else System.err.println(
         s"[jobgate] ok: ${actual.size} queries within recorded job counts")
     }
+  }
+
+  /** Warm-up: JVM/codegen/parquet-reader classloading otherwise lands on
+    * whichever query happens to run first and distorts its number. Beyond
+    * the scan+agg warm, touch the operator families whose FIRST use loads
+    * large class graphs (WindowExec + unsafe sorter, broadcast hash join,
+    * Generate, shuffle writer): per-plan codegen still compiles per query,
+    * but the class loading and the Janino compiler itself warm here, off
+    * every query's clock — same warmup on both sides of the 2x gate.
+    */
+  def warmUp(spark: SparkSession, sfDir: String): Unit = {
+    import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.expressions.Window
+    spark.read.parquet(s"$sfDir/region.parquet").count()
+    spark.range(1000000).selectExpr("sum(id * 2)").collect()
+    val r = spark.range(10000).toDF("id")
+    r.withColumn("w", row_number().over(
+        Window.partitionBy(col("id") % 10).orderBy(col("id"))))
+      .agg(max(col("w"))).collect()
+    r.join(broadcast(spark.range(100).toDF("id")), "id").count()
+    r.select(explode(split(lit("a b c"), " ")).as("t"))
+      .groupBy(col("t")).count().orderBy(col("t")).collect()
+    // The poly-fingerprint kernel backs the dedup/DSIR/qmodel families;
+    // its first ~10k evaluations run pre-C2 (measured: whichever
+    // fingerprint-heavy query lands first in a JVM paid up to 3×).
+    spark.range(100000).selectExpr("cast(id as string) AS s")
+      .select(graft.llm.TextAnalysis.fingerprint(col("s")).as("f"))
+      .agg(max(col("f"))).collect()
+  }
+
+  /** Times one registry query the way every recorded number is taken, and
+    * counts its Spark jobs. `gc` adds a full GC after the cleanup (the
+    * caller's cadence). A failure is logged and returned as `ok = false`.
+    */
+  def measure(spark: SparkSession, sfDir: String, name: String,
+      fn: (SparkSession, String) => DataFrame, gc: Boolean): Run = {
+    // Job group per query → per-query job counts from the status tracker
+    // (VERDICT r6 item 8: seconds alone can't tell cold-JIT tax from a
+    // plan regression; the number of driver actions can).
+    spark.sparkContext.setJobGroup(name, name, interruptOnCancel = false)
+    val t0 = System.nanoTime()
+    // Noop sink, not count(): count() lets Catalyst prune unreferenced
+    // projections, so map-only queries would benchmark near-zero work.
+    // Evaluating every InternalRow measures the actual plan.
+    val ok =
+      try { fn(spark, sfDir).queryExecution.toRdd.foreach(_ => ()); true }
+      catch { case e: Throwable =>
+        System.err.println(s"[bench] $name failed: ${e.getMessage}"); false
+      }
+    val elapsed = (System.nanoTime() - t0) / 1e9
+    spark.sparkContext.clearJobGroup()
+    // Between queries: drop caches/localCheckpoint blocks (always), and
+    // periodically force a GC — persisted blocks otherwise live until
+    // their RDD is collected, and the accumulated block-manager +
+    // old-gen pressure from 60+ queries distorts whatever happens to run
+    // late in the sequence (measured: the q_text_* family at 10-80x its
+    // isolated time without any GC at all).
+    spark.catalog.clearCache()
+    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
+    if (gc) System.gc()
+    // The status store is fed by the async listener bus: read the group's
+    // job ids only once every event posted so far has been delivered.
+    GraftSession.drain(spark)
+    Run(name, elapsed, ok, spark.sparkContext.statusTracker.getJobIdsForGroup(name).length)
   }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale-smoke data generator: replicate the sf0.1 fact tables ×N with
@@ -33,14 +33,7 @@ object ScaleData {
         "transform each; do NOT chain two ScaleData passes — composed " +
         "transforms collide and same-width id offsets alias, planting " +
         "exact twins a real corpus doesn't have)")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.create()
     new java.io.File(out).mkdirs()
 
     // far above any real key at these scales, far below 2^53

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import scala.util.control.Breaks.{break, breakable}
 
@@ -8,7 +8,7 @@ import scala.util.control.Breaks.{break, breakable}
   * whose semantics are inherently order-dependent.
   *
   * Design for scale: the state machine is sequential *within one file* (a few
-  * thousand rows) but embarrassingly parallel *across files*. [[scanDataset]]
+  * thousand rows) but embarrassingly parallel *across files*. [[scanPerFile]]
   * therefore groups by FILE_ID and runs the exact scalar scan per group —
   * only the three flag columns + row index are shuffled (the wide `DATA`
   * array is pruned away by Catalyst), so at 100 TB the shuffle carries a few
@@ -108,38 +108,17 @@ object CalibrationScan {
     -1
   }
 
-  /** Driver-side variant for a single-file DataFrame: collects ONLY the flag
-    * columns ordered by the explicit row index (column pruning keeps the wide
-    * DATA array out of the scan entirely — ref SURVEY §4.2), then runs the
-    * exact scan. Collected payload is ~12 bytes/row: fine for per-file row
-    * counts, never applied to an unbounded table.
-    */
-  def scanSingleFile(
-      df: DataFrame,
-      channelCount: Long,
-      headerObsmode: String,
-      orderCol: String = "ROWIDX"): CalIndices = {
-    val rows = df
-      .select(col(orderCol), col("CALSTATE"), col("SWPVALID"), col("OBSMODE"))
-      .orderBy(col(orderCol))
-      .collect()
-      .map(r => Flags(r.getInt(1), r.getInt(2), r.getString(3)))
-      .toIndexedSeq
-    scan(rows, channelCount, headerObsmode)
-  }
-
-  /** [[scanSingleFile]] semantics with [[scanPerFile]] mechanics: the flag
-    * rows never leave the executors — the per-file mapGroups scan reduces
-    * them to ONE row and only that row is collected. Same CalIndices for a
-    * single-file frame (same `scan`, same ROWIDX ordering), without shipping
-    * O(rows) flag tuples through the driver: the round-6 bench measured the
-    * driver-side collect at ~15 s cold on a 600k-row fixture.
+  /** [[scan]] of a single-file frame in ROWIDX order, with [[scanPerFile]]
+    * mechanics: the flag rows never leave the executors — the per-file scan
+    * reduces them to ONE row and only that row is collected, instead of
+    * shipping O(rows) flag tuples through the driver (the round-6 bench
+    * measured a driver-side collect at ~15 s cold on a 600k-row fixture).
     */
   def scanSingleFileDistributed(
       df: DataFrame,
       channelCount: Long,
       headerObsmode: String): CalIndices = {
-    val r = scanPerFile(df, channelCount, headerObsmode)
+    val r = scanPerFile(df, "ROWIDX", lit(channelCount), headerObsmode)
       .select(col("data_start"), col("post_cal_start"), col("off_start"))
       .collect()
     if (r.isEmpty) scan(Vector.empty, channelCount, headerObsmode)
@@ -217,11 +196,15 @@ object CalibrationScan {
   }
 
   /** Scale path: one scan per file, parallel across files. Input needs
-    * FILE_ID + ROWIDX + the three flag columns; everything else is pruned
-    * before the shuffle. Returns one row per file with the three indices.
+    * FILE_ID, the order column `orderCol` (ROWIDX, or the post-filter
+    * positional `__pos` the continuum reduction scans by) and the three
+    * flag columns; everything else is pruned before the shuffle. `cc` is the
+    * interleave factor, constant within a file (a literal, or the per-file
+    * A3 aggregate joined on) and read off each file's first row. Returns one
+    * row per file with the three indices.
     *
     * Mechanics: secondary sort — `repartition(FILE_ID)` +
-    * `sortWithinPartitions(FILE_ID, ROWIDX)` puts each file's rows
+    * `sortWithinPartitions(FILE_ID, orderCol)` puts each file's rows
     * consecutive and ordered (Spark's spillable external sort), then one
     * `mapPartitions` runs [[scanStreaming]] per file, cutting on key
     * change — the same shape as `SdfitsWriter.writeObservations`. No
@@ -231,58 +214,20 @@ object CalibrationScan {
     */
   def scanPerFile(
       df: DataFrame,
-      channelCount: Long,
+      orderCol: String,
+      cc: Column,
       headerObsmode: String): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
     df.select(
         col("FILE_ID").cast("string"),
-        col("ROWIDX").cast("long"),
-        col("CALSTATE").cast("int"),
-        col("SWPVALID").cast("int"),
-        col("OBSMODE").cast("string"))
-      .repartition(col("FILE_ID"))
-      .sortWithinPartitions(col("FILE_ID"), col("ROWIDX"))
-      .as[(String, Long, Int, Int, String)]
-      .mapPartitions { it =>
-        val rows = it.buffered
-        def box(o: Option[Int]): java.lang.Long =
-          o.map(i => java.lang.Long.valueOf(i.toLong)).orNull
-        new Iterator[(String, java.lang.Long, Long, java.lang.Long)] {
-          def hasNext: Boolean = rows.hasNext
-          def next(): (String, java.lang.Long, Long, java.lang.Long) = {
-            val file = rows.head._1
-            val fileRows = new Iterator[Flags] {
-              def hasNext: Boolean = rows.hasNext && rows.head._1 == file
-              def next(): Flags = { val t = rows.next(); Flags(t._3, t._4, t._5) }
-            }
-            val r = scanStreaming(fileRows, channelCount, headerObsmode)
-            (file, box(r.dataStart), r.postCalStart.toLong, box(r.offStart))
-          }
-        }
-      }
-      .toDF("FILE_ID", "data_start", "post_cal_start", "off_start")
-  }
-
-  /** [[scanPerFile]] with a PER-FILE interleave factor: the input carries
-    * its own `__cc` column (constant within a file — the A3 aggregate
-    * joined on) instead of one global channelCount. Same secondary-sort
-    * mapPartitions shape, same O(1) scan state; the factor is read off
-    * each file's first row. Orders by `__pos` (the post-filter positional
-    * index the continuum reduction scans by), not ROWIDX.
-    */
-  def scanPerFileCc(df: DataFrame, headerObsmode: String): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(
-        col("FILE_ID").cast("string"),
-        col("__pos").cast("long"),
+        col(orderCol).cast("long"),
         col("CALSTATE").cast("int"),
         col("SWPVALID").cast("int"),
         col("OBSMODE").cast("string"),
-        col("__cc").cast("long"))
+        cc.cast("long"))
       .repartition(col("FILE_ID"))
-      .sortWithinPartitions(col("FILE_ID"), col("__pos"))
+      .sortWithinPartitions(col("FILE_ID"), col(orderCol))
       .as[(String, Long, Int, Int, String, Long)]
       .mapPartitions { it =>
         val rows = it.buffered

@@ -210,8 +210,8 @@ object Sampling {
     * top-k + one small merge, no staging); above it the range-partitioned
     * prefix form is 2.5× at k=3M and 1.75× at k=30M — where sort+limit
     * also funnels a corpus-fraction k through one merge task and the
-    * driver (`tools/TopFracBench` sweep at k=0.3M/0.9M/3M/30M on
-    * local[16], `BENCH_local_r17_topfrac.json`).
+    * driver (sweep at k=0.3M/0.9M/3M/30M on local[16], recorded in
+    * `BENCH_local_r17_topfrac.json`).
     */
   val DistKThreshold = 1000000L
 

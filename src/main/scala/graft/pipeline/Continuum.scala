@@ -67,7 +67,7 @@ object Continuum {
     // caches — rather than calling run() per file.
     val flagged = withPos(d2).cache()
     // Distributed ST1: flag rows reduce executor-side; one row reaches the
-    // driver (scanSingleFile semantics, pinned by q_st1_calscan).
+    // driver (scan semantics in ROWIDX order, pinned by q_st1_calscan).
     val idx = CalibrationScan.scanSingleFileDistributed(flagged, channelCount, header.obsmode)
     val dataStart = idx.dataStart.getOrElse(0)
     val postCal = idx.postCalStart
@@ -187,18 +187,18 @@ object Continuum {
     // the 15M-rows-per-file sf10 fixture. Now only the pre/post
     // calibration WINDOWS (tens of rows per file) ever reach a group
     // buffer: the ST1 indices come from the O(1)-state streaming scan
-    // ([[CalibrationScan.scanPerFileCc]], the scanPerFile shape with the
-    // per-file A3 factor as a column), broadcast back onto the integrated
+    // ([[CalibrationScan.scanPerFile]] by `__pos`, with the per-file A3
+    // factor as a column), broadcast back onto the integrated
     // frame; the spike-window filter bounds what the heights mapGroups
     // sees; and the data window reduces to a min/max/count aggregation.
     // The A9 branch decision becomes a codegen'd CaseWhen over the tiny
     // per-file frame — same op order as the mapGroups had, so
     // ContinuumAllSpec's bit-parity against [[run]] still pins it.
-    val idx = CalibrationScan.scanPerFileCc(
+    val idx = CalibrationScan.scanPerFile(
         integ.join(broadcast(cc), "FILE_ID")
           .select(col("FILE_ID"), col("__pos"), col("CALSTATE"),
             col("SWPVALID"), col("OBSMODE"), col("__cc")),
-        obsmode)
+        "__pos", col("__cc"), obsmode)
       .select(col("FILE_ID"),
         coalesce(col("data_start"), lit(0L)).as("__ds"),
         col("post_cal_start").as("__pc"))

@@ -450,8 +450,8 @@ object LlmQueries {
     * JVM (VERDICT r16 item 5): `q_sim_index_delta` warm-starts its merge
     * from it and `q_sim_index_release` commits it as the pinned v1 — both
     * certify LIFECYCLE discipline (warm-start merge, supersession,
-    * pinned-reader stability), not base-build throughput (depth economics
-    * live in tools/AnnUpdateBench), so they share one deterministic base
+    * pinned-reader stability), not base-build throughput (depth economics:
+    * PLANS.md, round 15, AnnUpdateBench), so they share one deterministic base
     * artifact instead of each paying its own ~40-job 1-round build.
     */
   private def knnBase1(s: SparkSession, dir: String): DataFrame =
@@ -1219,8 +1219,8 @@ object LlmQueries {
       // warm-start merge + supersession discipline, not base-build
       // depth — planted-delta recall is carried by updateKnnGraph's
       // exact delta-incident scoring (verified: 10/10 at sf0.01/sf0.1
-      // with either depth), and the build-depth economics live in
-      // tools/AnnUpdateBench, not here. The base graph is the SHARED
+      // with either depth), and the build-depth economics are in PLANS.md
+      // (round 15, AnnUpdateBench), not here. The base graph is the SHARED
       // staged artifact (knnBase1, also q_sim_index_release's v1).
       val v1 = SS.replace(knnBase1(s, dir), root)
       val merged = GraphAnn.updateKnnGraph(SS.read(s, root, v1), base, delta,

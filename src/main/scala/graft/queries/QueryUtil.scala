@@ -84,9 +84,9 @@ object QueryUtil {
   def withGlobalRowIdx(df: DataFrame, out: String = "ROWIDX",
       bucketWidth: Long = 4096L): DataFrame = {
     val withB = df.withColumn("__bkt", (col("l_orderkey") / bucketWidth).cast("long"))
-    // Deliberately single-partition (WindowAudit flags it): this window runs
-    // over the per-BUCKET counts — one row per 4096 source rows — not the
-    // data. A fixture-construction helper, not an engine operator.
+    // Deliberately single-partition (a constant key; `Probe windows` flags
+    // only keyless windows): this window runs over the per-BUCKET counts —
+    // one row per 4096 source rows — not the data. A fixture helper.
     val wOff = Window.partitionBy(lit(0)).orderBy(col("__bkt"))
       .rowsBetween(Window.unboundedPreceding, -1)
     val offs = withB.groupBy(col("__bkt")).agg(count(lit(1)).as("__cnt"))

@@ -438,7 +438,7 @@ object RadioQueries {
 
     // --- ST1: calibration-spike scan (scale path) ---------------------------
     "q_st1_calscan" -> ((s, dir) =>
-      CalibrationScan.scanPerFile(obsMultiFile(s, dir), channelCount = 1,
+      CalibrationScan.scanPerFile(obsMultiFile(s, dir), "ROWIDX", lit(1L),
           headerObsmode = "onoff")
         .orderBy(col("FILE_ID"))),
 

@@ -820,7 +820,7 @@ object ScaleQueries {
       // OTHER single-merge-task hazard): topFractionByScoreAuto probes k
       // with one count job and picks sort+limit vs the range-partitioned
       // prefix form on the measured ~1M-k crossover
-      // (tools/TopFracBench, BENCH_local_r17_topfrac.json). At oracle
+      // (recorded in BENCH_local_r17_topfrac.json). At oracle
       // scale the probe lands below it → sort+limit; ScaleOpsSpec pins
       // the dist branch and the identical-output contract, so the oracle
       // (same ranked cut) is form-independent.

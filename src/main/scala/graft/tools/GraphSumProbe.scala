@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.llm.{GraphAnn, Similarity}
 
@@ -16,13 +16,7 @@ import graft.llm.{GraphAnn, Similarity}
 object GraphSumProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession.create()
     // Shuffle-byte accounting per phase: wall-clock on a loaded host swings
     // up to 2.5x between identical runs, but bytes written to shuffle are a
     // deterministic property of the plan (guide §2 — the thing the fused
@@ -38,7 +32,7 @@ object GraphSumProbe {
     })
     def phaseBytes(): String = {
       // stage-completion events ride the async bus — settle before reading
-      Thread.sleep(2000)
+      graft.GraftSession.drain(spark)
       val s = s"shufWriteMB=${shufWrite.get / 1048576} shufReadMB=${shufRead.get / 1048576}"
       shufWrite.set(0L); shufRead.set(0L)
       s

@@ -55,9 +55,7 @@ class RobustFitSpec extends AnyFunSuite {
   }
 
   test("distributed RCR agrees with the local form on the outlier fixture") {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[4]").config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.GraftSession.create(cores = 4)
     import spark.implicits._
     val n = 200
     val x = Array.tabulate(n)(_.toDouble)

@@ -53,5 +53,14 @@ class ContinuumAllSpec extends SparkTestBase {
     val out = Continuum.runAll(df, header, Continuum.Params(0, 1))
     assert(out.groupBy($"FILE_ID").count().count() == 100)
     assert(out.count() == 100L * (40 - 32)) // data window = rows 16..23 per file
+    // The job count must not grow with the file count (per-file ST1/A8/A9
+    // run executor-side; a per-file driver loop would issue O(N) jobs).
+    def jobs(n: Int): Int = jobsOf {
+      Continuum.runAll(obs(n, rowsPerFile = 40), header, Continuum.Params(0, 1))
+        .queryExecution.toRdd.foreach(_ => ())
+      spark.catalog.clearCache()
+    }
+    val (j2, j100) = (jobs(2), jobs(100))
+    assert(j2 > 0 && j2 == j100, s"jobs at 2 files: $j2, at 100 files: $j100")
   }
 }

@@ -156,4 +156,21 @@ class PipelineSpec extends SparkTestBase {
     val expectedSpec = single.spectrum.as[(Int, Double, Double)].collect().toSeq
     assert(perFileSpec("0") == expectedSpec && perFileSpec("1") == expectedSpec)
   }
+
+  test("Pipeline.runAll issues the same number of jobs for 2 and 100 files") {
+    val rows = obs.collect()
+    def jobs(n: Int): Int = {
+      val many = spark.createDataFrame(java.util.Arrays.asList((0 until n).flatMap(f =>
+        rows.map(r => org.apache.spark.sql.Row.fromSeq(f.toString +: r.toSeq.tail))): _*),
+        obs.schema)
+      jobsOf {
+        val all = Pipeline.runAll(many, header, ifnum = 0, plnum = 1)
+        all.continuum.queryExecution.toRdd.foreach(_ => ())
+        all.spectrum.queryExecution.toRdd.foreach(_ => ())
+        spark.catalog.clearCache()
+      }
+    }
+    val (j2, j100) = (jobs(2), jobs(100))
+    assert(j2 > 0 && j2 == j100, s"jobs at 2 files: $j2, at 100 files: $j100")
+  }
 }

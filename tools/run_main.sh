@@ -1,7 +1,9 @@
 #!/bin/bash
 # Run a graft main class directly on the compiled classes + /opt/spark/jars,
 # bypassing the sbt server lock (lets Bench/Verify run while sbt compiles).
-# Usage: tools/run_main.sh graft.Bench [args...]   (env vars pass through)
+# Usage: tools/run_main.sh <main> [args...]   (env vars pass through)
+#   mains: graft.Bench, graft.Verify, graft.ScaleData, graft.tools.Probe,
+#          graft.tools.GraphSumProbe, graft.tools.StreamInvariance
 set -euo pipefail
 cd "$(dirname "$0")/.."
 CP="target/scala-2.13/classes:/opt/spark/jars/*"
