@@ -106,18 +106,11 @@ object ArrayOps {
     zip_with(a, divisor, (x, d) => x / d)
 
   /** Dot product of two numeric arrays, accumulated in double. Delegates to
-    * the native codegen'd kernel ([[graft.functions.DotProduct]]); the HOF
-    * form below pins its semantics.
+    * the native codegen'd kernel ([[graft.functions.DotProduct]]); its
+    * semantics are a `zip_with`/`aggregate` fold, pinned by
+    * `VectorKernelsSpec`.
     */
   def dot(a: Column, b: Column): Column = VectorKernels.dot(a, b)
-
-  /** HOF reference form of [[dot]] — interpreted (`aggregate`/`zip_with` are
-    * `CodegenFallback`); kept as the executable spec the native kernel is
-    * tested against.
-    */
-  def dotHof(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
-      lit(0.0), (s, v) => s + v)
 
   /** Euclidean norm. */
   def l2Norm(a: Column): Column = sqrt(dot(a, a))

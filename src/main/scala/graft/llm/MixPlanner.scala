@@ -334,7 +334,7 @@ object MixPlanner {
     * below ~1M rows in the largest domain the per-domain window wins
     * (one exchange, no staging); above it the range-partitioned prefix
     * form is 2.4× at 50M rows/domain and the only runnable form at
-    * corpus scale (`BENCH_local_r16_mixselect.json`, sweep at
+    * corpus scale (`bench/history/BENCH_local_r16_mixselect.json`, sweep at
     * 1e5/1e6/5e7 rows/domain on local[32]).
     */
   val DistDomainRowThreshold = 1000000L

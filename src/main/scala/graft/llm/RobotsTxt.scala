@@ -29,30 +29,12 @@ object RobotsTxt {
     * beats Disallow at ties, and path patterns support `*` plus the
     * terminal `$` anchor (the prefix-only fold silently never matched
     * a glob rule like `Disallow: "/" "*" ".pdf$"`). Null rules (no
-    * robots row) → allowed.
+    * robots row) → allowed. On wildcard-free rule sets, where RFC 9309
+    * matching degenerates to longest-prefix, kernel ≡ the interpreted
+    * prefix fold is pinned by `RobotsTxtSpec`.
     */
   private def allowDecision(rules: Column, path: Column): Column =
     coalesce(RobotsKernels.allowedPath(rules, path), lit(true))
-
-  /** The original interpreted prefix-only fold, kept as the executable
-    * spec the kernel is tested against on wildcard-free rule sets (where
-    * RFC 9309 matching degenerates to longest-prefix — RobotsTxtSpec pins
-    * the agreement).
-    */
-  private[llm] def prefixDecisionSpec(rules: Column, path: Column): Column = {
-    val folded = aggregate(
-      rules,
-      struct(lit(-1).as("l"), lit(true).as("allow")),
-      (acc, r) => {
-        val pl = length(r.getField("prefix"))
-        val better = path.startsWith(r.getField("prefix")) &&
-          (pl > acc.getField("l") ||
-            (pl === acc.getField("l") && r.getField("allow")))
-        when(better, struct(pl.as("l"), r.getField("allow").as("allow")))
-          .otherwise(acc)
-      })
-    coalesce(folded.getField("allow"), lit(true)) // no robots row → allowed
-  }
 
   /** Keep the rows of `urls` whose `urlCol` the domain's robots.txt allows
     * for the wildcard agent. `robots` carries one row per registrable

@@ -210,24 +210,13 @@ object TextAnalysis {
     * `h = (h*131 + code(c)) mod 1e9+7` — a pure integer fold, bit-identical
     * in any engine (the DuckDB oracle reproduces it with list_reduce).
     * Backed by the codegen'd [[graft.functions.PolyFingerprint]] kernel;
-    * the HOF form ([[fingerprintHof]]) is `CodegenFallback` and pays
-    * interpreted lambda dispatch per character — it dominated the poly-hash
-    * dedup certificates, which fingerprint every exploded shingle.
+    * the pure-built-ins HOF form is `CodegenFallback` and pays interpreted
+    * lambda dispatch per character — it dominated the poly-hash dedup
+    * certificates, which fingerprint every exploded shingle. Kernel ≡ HOF
+    * is pinned by `TextAnalysisSpec`.
     */
   def fingerprint(text: Column): Column =
     graft.functions.TextKernels.polyFingerprint(text)
-
-  /** The pure-built-ins HOF form of [[fingerprint]] (same values; kept as
-    * the cross-check the equivalence spec pins the kernel against).
-    * Folds over `split(text, "")` so each step is O(1); the earlier
-    * `substring(text, i, 1)` form re-seeked from the string start per
-    * character, O(len²) per row.
-    */
-  def fingerprintHof(text: Column): Column =
-    aggregate(
-      split(text, ""),
-      lit(0L),
-      (acc, c) => pmod(acc * lit(131L) + ascii(c).cast("long"), lit(1000000007L)))
 
   /** Character n-gram set (distinct), for Jaccard-style similarity.
     * Inputs shorter than n yield an empty set (guarded: Spark `sequence(1,0)`

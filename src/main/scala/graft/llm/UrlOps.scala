@@ -11,11 +11,11 @@ import graft.functions.UrlKernels
   *
   * The public API is backed by the single-pass native kernels in
   * [[graft.functions.UrlKernels]] — one compact codegen'd scan per field.
-  * The original `regexp_extract`-per-field Column formulation lives on as
-  * [[UrlOps.regexSpec]]: it IS the semantics (the DuckDB oracles mirror its
-  * regexes), but inlined ~15 regex engines per row into the generated Java,
-  * and the Janino compile of that expression tree dominated whole queries
-  * at bench scale. `UrlKernelsSpec` pins kernel ≡ regexSpec on fuzzed URLs.
+  * The original `regexp_extract`-per-field Column formulation IS the
+  * semantics (the DuckDB oracles mirror its regexes), but it inlined ~15
+  * regex engines per row into the generated Java, and the Janino compile
+  * of that expression tree dominated whole queries at bench scale. Kernel ≡
+  * that regexp formulation is pinned by `UrlKernelsSpec` on fuzzed URLs.
   *
   * The parse is the pragmatic crawl-pipeline subset of RFC 3986:
   * `scheme://host[:port][/path][?query][#fragment]` — userinfo is not
@@ -399,63 +399,5 @@ object UrlOps {
         when(keepPort, concat(lit(":"), port.cast("string"))).otherwise(lit("")),
         urlPath(u),
         when(q.isNotNull, concat(lit("?"), q)).otherwise(lit(""))))
-  }
-
-  /** The original regexp formulation of the parse — the executable
-    * specification the kernels and the DuckDB oracles both mirror.
-    * Not for the query path: each field is an independent regex pass and
-    * the composed `normalizeUrl` inlines ~15 of them per row.
-    */
-  object regexSpec {
-
-    def urlScheme(u: Column): Column =
-      nullIfEmpty(lower(regexp_extract(u, "^([A-Za-z][A-Za-z0-9+.-]*)://", 1)))
-
-    private def authority(u: Column): Column =
-      regexp_extract(u, "^[A-Za-z][A-Za-z0-9+.-]*://([^/?#]*)", 1)
-
-    def urlHost(u: Column): Column =
-      nullIfEmpty(lower(regexp_replace(authority(u), ":[0-9]*$", "")))
-
-    def urlPort(u: Column): Column =
-      nullIfEmpty(regexp_extract(authority(u), ":([0-9]+)$", 1)).cast("long")
-
-    def urlPath(u: Column): Column = {
-      val p = regexp_extract(u, "^[A-Za-z][A-Za-z0-9+.-]*://[^/?#]*([^?#]*)", 1)
-      when(p === "", lit("/")).otherwise(p)
-    }
-
-    def urlQuery(u: Column): Column =
-      nullIfEmpty(regexp_extract(u, "\\?([^#]*)", 1))
-
-    private def nullIfEmpty(c: Column): Column = when(c === "", lit(null)).otherwise(c)
-
-    def registeredDomain(host: Column): Column = {
-      val labels = split(host, "\\.")
-      val n = size(labels)
-      val last2 = concat_ws(".", element_at(labels, -2), element_at(labels, -1))
-      val last3 = concat_ws(".", element_at(labels, -3), last2)
-      // explicit null guard: concat_ws treats null labels as '', so without
-      // it a null host would fall through to an empty-string domain
-      when(host.isNull, lit(null))
-        .when(host.rlike("^[0-9.]+$"), host) // IPv4 literal
-        .when(n <= 2, host)
-        .when(last2.isin(multiLabelSuffixes: _*), last3)
-        .otherwise(last2)
-    }
-
-    def normalizeUrl(u: Column): Column = {
-      val scheme = urlScheme(u)
-      val host = urlHost(u)
-      val port = urlPort(u)
-      val keepPort = port.isNotNull &&
-        !((scheme === "http" && port === 80) || (scheme === "https" && port === 443))
-      when(scheme.isNull || host.isNull, lit(null)).otherwise(
-        concat(
-          scheme, lit("://"), host,
-          when(keepPort, concat(lit(":"), port.cast("string"))).otherwise(lit("")),
-          urlPath(u),
-          when(urlQuery(u).isNotNull, concat(lit("?"), urlQuery(u))).otherwise(lit(""))))
-    }
   }
 }

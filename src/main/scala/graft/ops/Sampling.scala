@@ -211,7 +211,7 @@ object Sampling {
     * prefix form is 2.5× at k=3M and 1.75× at k=30M — where sort+limit
     * also funnels a corpus-fraction k through one merge task and the
     * driver (sweep at k=0.3M/0.9M/3M/30M on local[16], recorded in
-    * `BENCH_local_r17_topfrac.json`).
+    * `bench/history/BENCH_local_r17_topfrac.json`).
     */
   val DistKThreshold = 1000000L
 

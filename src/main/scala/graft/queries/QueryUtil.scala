@@ -1,9 +1,9 @@
 package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.ops.Positions
 
 /** Shared builders for the driver-contract queries (`SparkEntry.queries`).
   *
@@ -67,197 +67,44 @@ object QueryUtil {
     array(col("l_quantity"), col("l_linenumber").cast("double"),
       (col("l_partkey") % 7).cast("double"), (col("l_suppkey") % 5).cast("double"))
 
-  /** Global 0-based row index over the unique lineitem 4-key order, computed
-    * WITHOUT a single-partition window over the DATA (VERDICT r3 item 5):
-    * row_number within monotone `l_orderkey` buckets (parallel windows) +
-    * cumulative bucket offsets computed in-plan on the tiny per-bucket
-    * counts frame (one row per bucket — bounded by max(l_orderkey)/
-    * bucketWidth, a few hundred at any tested SF; at 100 TB widen the
-    * bucket) and broadcast-joined back. The offsets running sum IS a
-    * single-partition window, but over the counts frame only — its
-    * `partitionBy(lit(0))` keeps Spark from warning about an empty
-    * partition spec while meaning exactly that. No driver collect: the
-    * former driver-side cumulative loop was an extra job per query.
-    * Values are identical to `row_number() OVER (ORDER BY 4-key) - 1`
-    * because the bucket is a monotone function of the leading order column.
-    */
-  def withGlobalRowIdx(df: DataFrame, out: String = "ROWIDX",
-      bucketWidth: Long = 4096L): DataFrame = {
-    val withB = df.withColumn("__bkt", (col("l_orderkey") / bucketWidth).cast("long"))
-    // Deliberately single-partition (a constant key; `Probe windows` flags
-    // only keyless windows): this window runs over the per-BUCKET counts —
-    // one row per 4096 source rows — not the data. A fixture helper.
-    val wOff = Window.partitionBy(lit(0)).orderBy(col("__bkt"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offs = withB.groupBy(col("__bkt")).agg(count(lit(1)).as("__cnt"))
-      .withColumn("__off", coalesce(sum(col("__cnt")).over(wOff), lit(0L)))
-      .drop("__cnt")
-    val w = Window.partitionBy(col("__bkt"))
-      .orderBy(col("l_orderkey"), col("l_linenumber"), col("l_partkey"), col("l_suppkey"))
-    withB.withColumn("__rn", (row_number().over(w) - 1).cast("long"))
-      .join(broadcast(offs), "__bkt")
-      .withColumn(out, col("__rn") + col("__off"))
-      .drop("__bkt", "__rn", "__off")
-  }
+  /** The lineitem 4-key: a unique row order, the fixture's FITS row order. */
+  val liKey: Seq[String] = Seq("l_orderkey", "l_linenumber", "l_partkey", "l_suppkey")
 
-  /** Single-file observation frame, continuum-flavored flag pattern:
-    * rows [0,8) diode-on spike, [8,16) diode-off spike, [16, L−16) science
-    * data, [L−16, L−8) post-cal diode-off, [L−8, L) post-cal diode-on.
-    * Designed so ST1 resolves data_start=16, post_cal_start=L−16.
+  /** The registry's observation fixture: `lineitem` projected into the
+    * SDFITS observation shape, ROWIDX = per-file 0-based position in
+    * [[liKey]] order ([[Positions.withPos]]), DATE_OBS = epoch + ROWIDX s.
+    *  - `files`: FILE_ID "0" for 1, else `l_orderkey % files`.
+    *  - `spikes`: the continuum pattern per file of n rows — diode-on
+    *    [0,8) and [n−8,n), diode-off [8,16) and [n−16,n−8), science data
+    *    between (ST1 resolves data_start = 16, post_cal_start = n−16) — with
+    *    FLAT spike levels: diode-on DATA sums to 8.0, diode-off to 2.0, so
+    *    the pre/post heights are exactly (6.0, 0.0), z = 0/0 = NaN takes the
+    *    mean-height branch, and the continuum gain has a closed-form oracle:
+    *    science intensity / 6. Without spikes every row is science data
+    *    (CALSTATE = SWPVALID = 0, the reference's F2 keep-set) over the
+    *    integer-valued [[int4]] (exact under any summation order).
+    *  - `offAt`: OBSMODE flips to 'onoff:off' at that per-file row; None
+    *    keeps 'onoff:on' throughout.
     */
-  def obsContinuum(s: SparkSession, dir: String): DataFrame = {
-    withGlobalRowIdx(li(s, dir))
-      .crossJoin(broadcast(li(s, dir).agg(count(lit(1)).as("__n"))))
-      .select(
-        lit("0").as("FILE_ID"),
-        col("ROWIDX"),
-        expr("timestampadd(SECOND, ROWIDX, TIMESTAMP '2024-01-01 00:00:00')").as("DATE_OBS"),
-        data4.as("DATA"),
-        lit(0).as("IFNUM"),
-        lit(1).as("PLNUM"),
-        when(col("ROWIDX") < 8 || col("ROWIDX") >= col("__n") - 8, 1).otherwise(0).as("CALSTATE"),
-        when(col("ROWIDX") < 16 || col("ROWIDX") >= col("__n") - 16, 0).otherwise(1).as("SWPVALID"),
-        when(col("ROWIDX") < 100, lit("onoff:on")).otherwise(lit("onoff:off")).as("OBSMODE"))
-  }
-
-  /** Single-file observation frame, spectrum-flavored: every row is science
-    * data (CALSTATE=0, SWPVALID=0 — the reference's F2 keep-set), OBSMODE
-    * flips to 'onoff:off' at row 100, integer-valued 4-channel DATA.
-    */
-  def obsSpectrum(s: SparkSession, dir: String): DataFrame = {
-    withGlobalRowIdx(li(s, dir))
-      .select(
-        lit("0").as("FILE_ID"),
-        col("ROWIDX"),
-        expr("timestampadd(SECOND, ROWIDX, TIMESTAMP '2024-01-01 00:00:00')").as("DATE_OBS"),
-        int4.as("DATA"),
-        lit(0).as("IFNUM"),
-        lit(1).as("PLNUM"),
-        lit(0).as("CALSTATE"),
-        lit(0).as("SWPVALID"),
-        when(col("ROWIDX") < 100, lit("onoff:on")).otherwise(lit("onoff:off")).as("OBSMODE"))
-  }
-
-  /** Per-file 0-based row index over the 4-key order, WITHOUT a
-    * file-partitioned window (a fixture with 4 FILE_IDs would sort the
-    * whole table through 4 tasks — the sf1 smoke measured that window at
-    * 8.5 s of q_spectrum_all's 13.9 s): row_number within (file, monotone
-    * orderkey bucket) partitions — parallelism = files × buckets — plus
-    * cumulative per-(file, bucket) offsets from a tiny counts frame,
-    * broadcast back. Values identical to `row_number() OVER (PARTITION BY
-    * file ORDER BY 4-key) − 1` because the bucket is monotone in the
-    * leading order column. The [[withGlobalRowIdx]] trick, per file.
-    */
-  def withPerFileRowIdx(df: DataFrame, fileCol: String, out: String = "ROWIDX",
-      bucketWidth: Long = 4096L, fileCountCol: Option[String] = None): DataFrame = {
-    val withB = df.withColumn("__bkt", (col("l_orderkey") / bucketWidth).cast("long"))
-    val wOff = Window.partitionBy(col(fileCol)).orderBy(col("__bkt"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    // Per-file TOTALS ride the same tiny counts frame when requested
-    // (window over the full file partition) — a separate groupBy(file)
-    // count would scan the input a second time and materialize a second
-    // broadcast stage for the same information.
-    val wTot = Window.partitionBy(col(fileCol))
-      .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    val offs0 = withB.groupBy(col(fileCol), col("__bkt")).agg(count(lit(1)).as("__cnt"))
-      .withColumn("__off", coalesce(sum(col("__cnt")).over(wOff), lit(0L)))
-    val offs = fileCountCol
-      .fold(offs0)(n => offs0.withColumn(n, sum(col("__cnt")).over(wTot)))
-      .drop("__cnt")
-    val w = Window.partitionBy(col(fileCol), col("__bkt"))
-      .orderBy(col("l_orderkey"), col("l_linenumber"), col("l_partkey"), col("l_suppkey"))
-    withB.withColumn("__rn", (row_number().over(w) - 1).cast("long"))
-      .join(broadcast(offs), Seq(fileCol, "__bkt"))
-      .withColumn(out, col("__rn") + col("__off"))
-      .drop("__bkt", "__rn", "__off")
-  }
-
-  /** Multi-file spectrum-flavored observation: FILE_ID = l_orderkey % 4,
-    * every row science data (CALSTATE=0, SWPVALID=0), OBSMODE flips to
-    * 'onoff:off' at per-file row 100, integer-valued 4-channel DATA (exact
-    * under any summation order).
-    */
-  def obsSpectrumMulti(s: SparkSession, dir: String): DataFrame = {
-    val fid = col("l_orderkey") % 4
-    withPerFileRowIdx(li(s, dir).withColumn("FILE_ID", fid.cast("string")), "FILE_ID")
-      .select(
-        col("FILE_ID"), col("ROWIDX"),
-        expr("timestampadd(SECOND, ROWIDX, TIMESTAMP '2024-01-01 00:00:00')").as("DATE_OBS"),
-        int4.as("DATA"),
-        lit(0).as("IFNUM"), lit(1).as("PLNUM"),
-        lit(0).as("CALSTATE"), lit(0).as("SWPVALID"),
-        when(col("ROWIDX") < 100, lit("onoff:on")).otherwise(lit("onoff:off")).as("OBSMODE"))
-  }
-
-  /** Multi-file observation flags (FILE_ID = l_orderkey % 4) with the same
-    * per-file pattern as [[obsContinuum]] — the ST1 scale-path input.
-    */
-  def obsMultiFile(s: SparkSession, dir: String): DataFrame = {
-    val fid = col("l_orderkey") % 4
-    val base = li(s, dir).withColumn("FILE_ID", fid.cast("string"))
-    withPerFileRowIdx(base, "FILE_ID", fileCountCol = Some("__n"))
-      .select(
-        col("FILE_ID"), col("ROWIDX"),
-        when(col("ROWIDX") < 8 || col("ROWIDX") >= col("__n") - 8, 1).otherwise(0).as("CALSTATE"),
-        when(col("ROWIDX") < 16 || col("ROWIDX") >= col("__n") - 16, 0).otherwise(1).as("SWPVALID"),
-        when(col("ROWIDX") < 100, lit("onoff:on")).otherwise(lit("onoff:off")).as("OBSMODE"))
-  }
-
-  /** Multi-file FULL observation (flags + DATE_OBS + DATA), continuum
-    * pattern per file with FLAT calibration spike levels (diode-on rows sum
-    * to 8.0, diode-off to 2.0 → height exactly (6.0, 0.0) on both sides,
-    * z = 0/0 = NaN → mean-height branch) so the whole multi-file reduction
-    * has a closed-form oracle: science intensity / 6.
-    */
-  def obsMultiFileFull(s: SparkSession, dir: String): DataFrame = {
-    val fid = col("l_orderkey") % 4
-    val withFid = li(s, dir).withColumn("FILE_ID", fid.cast("string"))
-    val base = withPerFileRowIdx(withFid, "FILE_ID", fileCountCol = Some("__n"))
-    val spike = col("ROWIDX") < 16 || col("ROWIDX") >= col("__n") - 16
-    val diodeOn = col("ROWIDX") < 8 || col("ROWIDX") >= col("__n") - 8
-    base.select(
-      col("FILE_ID"), col("ROWIDX"),
+  def obs(lineitem: DataFrame, files: Int, spikes: Boolean, offAt: Option[Int]): DataFrame = {
+    val fid = if (files == 1) lit("0") else (col("l_orderkey") % files).cast("string")
+    val pos = Positions.withPos(lineitem.withColumn("FILE_ID", fid), ordCols = liKey,
+      out = "ROWIDX", bucketWidth = 4096L, countCol = Option.when(spikes)("__n"))
+    val at = col("ROWIDX")
+    val spike = at < 16 || at >= col("__n") - 16
+    val diodeOn = at < 8 || at >= col("__n") - 8
+    pos.select(
+      col("FILE_ID"), at,
       expr("timestampadd(SECOND, ROWIDX, TIMESTAMP '2024-01-01 00:00:00')").as("DATE_OBS"),
-      when(spike && diodeOn, array(lit(2.0), lit(2.0), lit(2.0), lit(2.0)))
-        .when(spike, array(lit(0.5), lit(0.5), lit(0.5), lit(0.5)))
-        .otherwise(data4).as("DATA"),
+      (if (spikes) when(spike && diodeOn, array(lit(2.0), lit(2.0), lit(2.0), lit(2.0)))
+         .when(spike, array(lit(0.5), lit(0.5), lit(0.5), lit(0.5)))
+         .otherwise(data4)
+       else int4).as("DATA"),
       lit(0).as("IFNUM"), lit(1).as("PLNUM"),
-      when(diodeOn, 1).otherwise(0).as("CALSTATE"),
-      when(spike, 0).otherwise(1).as("SWPVALID"),
-      lit("onoff:on").as("OBSMODE"))
-  }
-
-  /** Single-file FULL observation with the [[obsMultiFileFull]] FLAT spike
-    * levels (diode-on sums to 8.0, diode-off to 2.0 → pre/post heights
-    * exactly (6.0, 0.0), z = 0/0 = NaN → mean branch) so the END-TO-END
-    * Continuum.run has a closed-form oracle: science intensity / 6 at
-    * t = ROWIDX.
-    */
-  def obsContinuumFlat(s: SparkSession, dir: String): DataFrame =
-    obsContinuumFlatFrom(li(s, dir))
-
-  /** 1/5-sampled [[obsContinuumFlat]] — the bounded fixture for the FULL
-    * driver composition (q_pipeline_full runs continuum AND spectrum over
-    * it; the lossless-composition proof doesn't need the whole table).
-    */
-  def obsContinuumFlatSampled(s: SparkSession, dir: String): DataFrame =
-    obsContinuumFlatFrom(li(s, dir).filter(col("l_orderkey") % 5 === 0))
-
-  private def obsContinuumFlatFrom(lineitem: DataFrame): DataFrame = {
-    val base = withGlobalRowIdx(lineitem)
-      .crossJoin(broadcast(lineitem.agg(count(lit(1)).as("__n"))))
-    val spike = col("ROWIDX") < 16 || col("ROWIDX") >= col("__n") - 16
-    val diodeOn = col("ROWIDX") < 8 || col("ROWIDX") >= col("__n") - 8
-    base.select(
-      lit("0").as("FILE_ID"), col("ROWIDX"),
-      expr("timestampadd(SECOND, ROWIDX, TIMESTAMP '2024-01-01 00:00:00')").as("DATE_OBS"),
-      when(spike && diodeOn, array(lit(2.0), lit(2.0), lit(2.0), lit(2.0)))
-        .when(spike, array(lit(0.5), lit(0.5), lit(0.5), lit(0.5)))
-        .otherwise(data4).as("DATA"),
-      lit(0).as("IFNUM"), lit(1).as("PLNUM"),
-      when(diodeOn, 1).otherwise(0).as("CALSTATE"),
-      when(spike, 0).otherwise(1).as("SWPVALID"),
-      lit("onoff:on").as("OBSMODE"))
+      (if (spikes) when(diodeOn, 1).otherwise(0) else lit(0)).as("CALSTATE"),
+      (if (spikes) when(spike, 0).otherwise(1) else lit(0)).as("SWPVALID"),
+      offAt.fold(lit("onoff:on"))(k =>
+        when(at < k, lit("onoff:on")).otherwise(lit("onoff:off"))).as("OBSMODE"))
   }
 
   /** The synthetic observation header shared by the pipeline queries:

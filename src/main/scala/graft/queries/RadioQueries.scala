@@ -438,13 +438,14 @@ object RadioQueries {
 
     // --- ST1: calibration-spike scan (scale path) ---------------------------
     "q_st1_calscan" -> ((s, dir) =>
-      CalibrationScan.scanPerFile(obsMultiFile(s, dir), "ROWIDX", lit(1L),
-          headerObsmode = "onoff")
+      CalibrationScan.scanPerFile(obs(li(s, dir), 4, spikes = true, offAt = Some(100)),
+          "ROWIDX", lit(1L), headerObsmode = "onoff")
         .orderBy(col("FILE_ID"))),
 
     // --- §3 pipeline compositions ------------------------------------------
     "q_pipeline_validate" -> ((s, dir) => {
-      val obs = withGlobalRowIdx(li(s, dir))
+      val obs = Positions.withPos(li(s, dir).withColumn("FILE_ID", lit("0")),
+          ordCols = liKey, out = "ROWIDX", bucketWidth = 4096L)
         .select(col("ROWIDX"),
           (col("l_quantity") - 2.0).as("TSYS"),
           array(col("l_quantity"),
@@ -470,12 +471,13 @@ object RadioQueries {
       // 1/5-sampled: the per-file path issues several driver-synchronous
       // jobs and doesn't need a 600k-row "observation" to prove the
       // composition — q_continuum_all is the volume/scale demonstration.
-      Continuum.run(obsContinuumFlatSampled(s, dir), obsHeader(4), Continuum.Params(ifnum = 0, plnum = 1))),
+      Continuum.run(obs(li(s, dir).filter(col("l_orderkey") % 5 === 0), 1, spikes = true,
+        offAt = None), obsHeader(4), Continuum.Params(ifnum = 0, plnum = 1))),
 
     "q_continuum_all" -> ((s, dir) =>
       // Multi-file scale path: N files reduced in ONE job chain (per-file
       // ST1 + A8 + A9 executor-side; flat spikes make the gain oracle exact).
-      Continuum.runAll(obsMultiFileFull(s, dir), obsHeader(4),
+      Continuum.runAll(obs(li(s, dir), 4, spikes = true, offAt = None), obsHeader(4),
         Continuum.Params(ifnum = 0, plnum = 1))),
 
     "q_pipeline_atmosphere" -> ((s, dir) => {
@@ -555,15 +557,17 @@ object RadioQueries {
       // stages are lossless. Bounded input (1/5): the full driver runs BOTH
       // reductions eagerly, and the composition proof doesn't need 600k
       // rows.
-      Pipeline.run(obsContinuumFlatSampled(s, dir), obsHeader(4), ifnum = 0, plnum = 1).continuum),
+      Pipeline.run(obs(li(s, dir).filter(col("l_orderkey") % 5 === 0), 1, spikes = true,
+        offAt = None), obsHeader(4), ifnum = 0, plnum = 1).continuum),
 
     "q_pipeline_spectrum" -> ((s, dir) =>
-      Spectrum.run(obsSpectrum(s, dir), obsHeader(4), Spectrum.Params(ifnum = 0, plnum = 1))),
+      Spectrum.run(obs(li(s, dir), 1, spikes = false, offAt = Some(100)), obsHeader(4),
+        Spectrum.Params(ifnum = 0, plnum = 1))),
 
     "q_spectrum_all" -> ((s, dir) =>
       // Multi-file spectrum scale path: per-file ON/OFF spectra in ONE
       // groupBy(FILE_ID, half) aggregation pass.
-      Spectrum.runAll(obsSpectrumMulti(s, dir), obsHeader(4),
+      Spectrum.runAll(obs(li(s, dir), 4, spikes = false, offAt = Some(100)), obsHeader(4),
         Spectrum.Params(ifnum = 0, plnum = 1)))
   )
 

@@ -11,6 +11,7 @@ import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.types._
 
 import SdfitsFormat.ColSpec
+import SdfitsWriter.Header
 
 /** DataSource V2 write half of the sdfits connector:
   * `df.write.format("sdfits").mode("append"|"overwrite").save(dir)` writes
@@ -39,15 +40,14 @@ private[sdfits] object SdfitsWrite {
 
   final case class TempFile(temp: String, dest: String) extends WriterCommitMessage
 
-  def headerFromOptions(opts: Map[String, String])
-      : (Seq[(String, String)], Seq[(String, String)], Seq[String]) = {
+  def headerFromOptions(opts: Map[String, String]): Header = {
     val hv = opts.collect { case (k, v) if k.startsWith("header.") =>
       k.stripPrefix("header.").toUpperCase -> v }.toSeq.sortBy(_._1)
     val sv = opts.collect { case (k, v) if k.startsWith("sheader.") =>
       k.stripPrefix("sheader.").toUpperCase -> v }.toSeq.sortBy(_._1)
     val hist = opts.collect { case (k, v) if k.startsWith("history.") =>
       k.stripPrefix("history.") -> v }.toSeq.sortBy(_._1.toInt).map(_._2)
-    (hv, sv, hist)
+    Header(hv, sv, hist)
   }
 }
 
@@ -70,13 +70,15 @@ private[sdfits] class SdfitsWriteBuilder(
 
 private[sdfits] class SdfitsBatchWrite(
     schema: StructType, path: String, truncate: Boolean, queryId: String,
-    header: (Seq[(String, String)], Seq[(String, String)], Seq[String]))
+    header: Header)
     extends BatchWrite {
 
+  // Unsupported column types fail here, on the driver, before any task runs.
+  private val codes = schema.fields.map(f => SdfitsWriter.codeOf(f.dataType))
   private val conf = new SerializableWritable(SdfitsTableProvider.driverConf())
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
-    new SdfitsDataWriterFactory(schema, path, queryId, header, conf)
+    new SdfitsDataWriterFactory(schema, codes, path, queryId, header, conf)
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val fs = new Path(path).getFileSystem(conf.value)
@@ -101,26 +103,26 @@ private[sdfits] class SdfitsBatchWrite(
 }
 
 private[sdfits] class SdfitsDataWriterFactory(
-    schema: StructType, path: String, queryId: String,
-    header: (Seq[(String, String)], Seq[(String, String)], Seq[String]),
-    conf: SerializableWritable[Configuration])
+    schema: StructType, codes: Array[Char], path: String, queryId: String,
+    header: Header, conf: SerializableWritable[Configuration])
     extends DataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    new SdfitsDataWriter(schema, path, queryId, header, conf.value, partitionId, taskId)
+    new SdfitsDataWriter(schema, codes, path, queryId, header, conf.value, partitionId, taskId)
 }
 
 /** Buffers one partition's cells (observation-bounded), derives the fixed
   * FITS repeats, writes the temp file on commit.
   */
 private[sdfits] class SdfitsDataWriter(
-    schema: StructType, path: String, queryId: String,
-    header: (Seq[(String, String)], Seq[(String, String)], Seq[String]),
-    conf: Configuration, partitionId: Int, taskId: Long)
+    schema: StructType, codes: Array[Char], path: String, queryId: String,
+    header: Header, conf: Configuration, partitionId: Int, taskId: Long)
     extends DataWriter[InternalRow] {
 
   private val fields = schema.fields
   private val rows = ArrayBuffer.empty[Seq[Any]]
 
+  // The column types were checked against SdfitsWriter.codeOf on the
+  // driver, so the match below covers every type that reaches a task.
   override def write(record: InternalRow): Unit = {
     val cells = new Array[Any](fields.length)
     var i = 0
@@ -133,8 +135,6 @@ private[sdfits] class SdfitsDataWriter(
         case StringType  => record.getUTF8String(i).toString
         case ArrayType(DoubleType, _) => record.getArray(i).toDoubleArray()
         case ArrayType(FloatType, _)  => record.getArray(i).toFloatArray()
-        case other => throw new IllegalArgumentException(
-          s"sdfits: cannot encode ${other.simpleString}")
       }
       i += 1
     }
@@ -153,22 +153,11 @@ private[sdfits] class SdfitsDataWriter(
               case a: Array[Double] => a.length
               case a: Array[Float]  => a.length
             }
-          }.toSet
-          require(sizes.size == 1,
-            s"sdfits: ragged vector column '${f.name}' ($sizes) — FITS requires a fixed repeat")
-          math.max(1, sizes.head)
+          }.toSeq
+          SdfitsWriter.fixedRepeat(f.name, sizes.min, sizes.max)
         case _ => 1
       }
-      val code = f.dataType match {
-        case DoubleType | ArrayType(DoubleType, _) => 'D'
-        case FloatType | ArrayType(FloatType, _)   => 'E'
-        case IntegerType                           => 'J'
-        case LongType                              => 'K'
-        case StringType                            => 'A'
-        case other => throw new IllegalArgumentException(
-          s"sdfits: cannot encode ${other.simpleString}")
-      }
-      ColSpec(f.name, repeat, code)
+      ColSpec(f.name, repeat, codes(i))
     }
     // The job's queryId is part of the destination name so append jobs are
     // additive: two appends into the same directory write disjoint file
@@ -179,7 +168,7 @@ private[sdfits] class SdfitsDataWriter(
     val temp = new Path(path, f".part-$queryId-$partitionId%05d.fits.inprogress-$taskId")
     val fs = temp.getFileSystem(conf)
     val os = fs.create(temp, true)
-    try SdfitsFormat.write(os, header._1, header._2, header._3, cols,
+    try SdfitsFormat.write(os, header.values, header.stringValues, header.history, cols,
       rows.iterator, rows.length)
     finally os.close()
     SdfitsWrite.TempFile(temp.toString, dest.toString)

@@ -36,8 +36,10 @@ object SdfitsWriter {
 
   /** Supported frame column types → FITS TFORM codes (the SDFITS subset the
     * reader speaks: scalar D/E/J/K, fixed rA strings, fixed rD/rE vectors).
+    * The one type table of both write surfaces (this object and the DSv2
+    * `format("sdfits")` writer).
     */
-  private def codeOf(dt: DataType): Char = dt match {
+  private[sdfits] def codeOf(dt: DataType): Char = dt match {
     case DoubleType                 => 'D'
     case FloatType                  => 'E'
     case IntegerType                => 'J'
@@ -49,6 +51,15 @@ object SdfitsWriter {
       throw new IllegalArgumentException(
         s"sdfits: cannot encode ${other.simpleString} (supported: double, float," +
           " int, long, string, array<double>, array<float>)")
+  }
+
+  /** The fixed FITS repeat of a vector column whose rows hold `lo..hi`
+    * elements; a ragged column (lo != hi) fails.
+    */
+  private[sdfits] def fixedRepeat(name: String, lo: Int, hi: Int): Int = {
+    require(lo == hi,
+      s"sdfits: ragged vector column '$name' ($lo..$hi) — FITS requires a fixed repeat")
+    math.max(hi, 1)
   }
 
   /** One pass over `df`: (column specs with fixed repeats, row count).
@@ -77,9 +88,7 @@ object SdfitsWriter {
           val lo = if (row.isNullAt(i)) 0 else row.getInt(i)
           val hi = if (row.isNullAt(i + 1)) 0 else row.getInt(i + 1)
           i += 2
-          require(lo == hi,
-            s"sdfits: ragged vector column '${f.name}' ($lo..$hi) — FITS requires a fixed repeat")
-          math.max(hi, 1)
+          fixedRepeat(f.name, lo, hi)
         case _ => 1
       }
       ColSpec(f.name, repeat, code)

@@ -1,5 +1,6 @@
 package graft.functions
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import graft.SparkTestBase
 
@@ -13,12 +14,20 @@ class VectorKernelsSpec extends SparkTestBase {
   private val rnd = new scala.util.Random(7)
   private def vec(n: Int): Seq[Double] = Seq.fill(n)(rnd.nextDouble() * 2 - 1)
 
+  /** HOF reference form of `ArrayOps.dot` — interpreted (`aggregate`/
+    * `zip_with` are `CodegenFallback`); the executable spec the native
+    * kernel is tested against.
+    */
+  private def dotHof(a: Column, b: Column): Column =
+    aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
+      lit(0.0), (s, v) => s + v)
+
   test("dot: native == HOF bit-exactly on random pairs") {
     val rows = Seq.fill(50)((vec(16), vec(16))) :+ ((Seq.empty[Double], Seq.empty[Double]))
     val df = rows.toDF("a", "b")
     val got = df.select(
       VectorKernels.dot($"a", $"b").as("native"),
-      ArrayOps.dotHof($"a", $"b").as("hof")).collect()
+      dotHof($"a", $"b").as("hof")).collect()
     got.foreach { r =>
       assert(java.lang.Double.doubleToLongBits(r.getDouble(0)) ==
         java.lang.Double.doubleToLongBits(r.getDouble(1)))
@@ -34,7 +43,7 @@ class VectorKernelsSpec extends SparkTestBase {
     ).toDF("a", "b")
     val rows = df.select(
       VectorKernels.dot($"a", $"b").as("native"),
-      ArrayOps.dotHof($"a", $"b").as("hof")).collect()
+      dotHof($"a", $"b").as("hof")).collect()
     rows.foreach { r => assert(r.isNullAt(0) == r.isNullAt(1), s"row $r") }
     assert(rows(0).getDouble(0) == 11.0)
     assert(rows(1).isNullAt(0) && rows(2).isNullAt(0) && rows(3).isNullAt(0))

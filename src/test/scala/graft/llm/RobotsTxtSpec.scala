@@ -1,5 +1,6 @@
 package graft.llm
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import graft.SparkTestBase
 import graft.functions.RobotsKernels
@@ -13,6 +14,25 @@ class RobotsTxtSpec extends SparkTestBase {
       .select(explode(RobotsKernels.wildcardRules(col("t"))).as("r"))
       .select(col("r.allow"), col("r.prefix"))
       .as[(Boolean, String)].collect().toSeq
+
+  /** The original interpreted prefix-only fold, the executable spec the
+    * kernel is tested against on wildcard-free rule sets (where RFC 9309
+    * matching degenerates to longest-prefix).
+    */
+  private def prefixDecisionSpec(rules: Column, path: Column): Column = {
+    val folded = aggregate(
+      rules,
+      struct(lit(-1).as("l"), lit(true).as("allow")),
+      (acc, r) => {
+        val pl = length(r.getField("prefix"))
+        val better = path.startsWith(r.getField("prefix")) &&
+          (pl > acc.getField("l") ||
+            (pl === acc.getField("l") && r.getField("allow")))
+        when(better, struct(pl.as("l"), r.getField("allow").as("allow")))
+          .otherwise(acc)
+      })
+    coalesce(folded.getField("allow"), lit(true)) // no robots row → allowed
+  }
 
   test("parser: records, agent scoping, comments, unknown directives") {
     val txt =
@@ -156,7 +176,7 @@ class RobotsTxtSpec extends SparkTestBase {
     val viaKernel = df.select(coalesce(
         RobotsKernels.allowedPath(col("r"), col("p")), lit(true)))
       .as[Boolean].collect().toSeq
-    val viaFold = df.select(RobotsTxt.prefixDecisionSpec(col("r"), col("p")))
+    val viaFold = df.select(prefixDecisionSpec(col("r"), col("p")))
       .as[Boolean].collect().toSeq
     assert(viaKernel == viaFold)
   }

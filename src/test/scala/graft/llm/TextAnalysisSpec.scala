@@ -12,6 +12,18 @@ class TextAnalysisSpec extends SparkTestBase {
   private def one[T: org.apache.spark.sql.Encoder](c: org.apache.spark.sql.Column, text: String): T =
     Seq(text).toDF("text").select(c).as[T].head()
 
+  /** The pure-built-ins HOF form of `TextAnalysis.fingerprint` (same
+    * values; the cross-check the kernel is pinned against). Folds over
+    * `split(text, "")` so each step is O(1); the earlier
+    * `substring(text, i, 1)` form re-seeked from the string start per
+    * character, O(len²) per row.
+    */
+  private def fingerprintHof(text: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
+    aggregate(
+      split(text, ""),
+      lit(0L),
+      (acc, c) => pmod(acc * lit(131L) + ascii(c).cast("long"), lit(1000000007L)))
+
   test("token and subword counts") {
     assert(one[Int](TextAnalysis.tokenCount($"text"), "a  b\tc") == 3)
     assert(one[Int](TextAnalysis.subwordCount($"text"), "don't stop-2x") == 7)
@@ -66,7 +78,7 @@ class TextAnalysisSpec extends SparkTestBase {
       "mixed 语言 text with ünïcode", "a" * 500)
     samples.foreach { s =>
       val kernel = one[Long](TextAnalysis.fingerprint($"text"), s)
-      val hof = one[Long](TextAnalysis.fingerprintHof($"text"), s)
+      val hof = one[Long](fingerprintHof($"text"), s)
       assert(kernel == hof, s"kernel vs HOF mismatch on ${s.take(30)}")
     }
   }

@@ -84,6 +84,21 @@ class SdfitsWriterSpec extends SparkTestBase {
     assert(e.getMessage.contains("ragged"))
   }
 
+  test("a boolean column is rejected by both write surfaces with one message") {
+    val df = frame(4).withColumn("flag", col("rowkey") % 2 === 0)
+    def rootMessage(e: Throwable): String =
+      Iterator.iterate(e)(_.getCause).takeWhile(_ != null).toSeq.last.getMessage
+    val viaWriter = intercept[IllegalArgumentException] {
+      SdfitsWriter.writeObservation(df, Seq("rowkey"), "/tmp/unused.fits", Header())
+    }.getMessage
+    val dir = Files.createTempDirectory("graft-sw-bool").toFile.getAbsolutePath + "/obs"
+    val viaDsv2 = rootMessage(intercept[Exception] {
+      df.write.format("sdfits").mode("append").save(dir)
+    })
+    assert(viaWriter.contains("cannot encode boolean (supported: "), viaWriter)
+    assert(viaDsv2 == viaWriter)
+  }
+
   test("DSv2 write: df.write.format(sdfits) round-trips, one file per partition") {
     val dir = Files.createTempDirectory("graft-sw-dsv2").toFile.getAbsolutePath + "/obs"
     frame(40).repartition(3).sortWithinPartitions(col("rowkey"))

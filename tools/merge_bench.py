@@ -8,7 +8,7 @@ recording for untouched queries — that is a plan change, not noise, and
 must be explained in the commit, not silently absorbed.
 
 Usage: merge_bench.py PRIOR OUT what-text NEW_QUERY[,NEW_QUERY...] RUN1 [RUN2 ...]
-  PRIOR: existing BENCH_local_*.json (or '-' for none)
+  PRIOR: existing bench/history/BENCH_local_*.json (or '-' for none)
   OUT:   path to write merged {what, total, sf, queries} artifact
   NEW_QUERY: comma-separated names whose code is new/changed this round
              (prior rows for them, if any, are ignored)
