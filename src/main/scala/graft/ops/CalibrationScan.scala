@@ -28,11 +28,21 @@ import scala.util.control.Breaks.{break, breakable}
   */
 object CalibrationScan {
 
-  /** Flag triple per row, in time order. */
-  final case class Flags(calstate: Int, swpvalid: Int, obsmode: String)
+  /** The three flags of one row, in time order, and its ROWIDX (read only
+    * by [[scanStreaming]], which reports the ROWIDX its indices point at).
+    */
+  final case class Flags(calstate: Int, swpvalid: Int, obsmode: String, rowidx: Long = 0L)
 
   /** The three indices the reference returns (ref utils.py:214). */
   final case class CalIndices(dataStart: Option[Int], postCalStart: Int, offStart: Option[Int])
+
+  /** [[CalIndices]] plus the ROWIDX of the row at the data start (row 0 when
+    * there is none) and at the post-cal start. A multi-file consumer
+    * compares ROWIDX against these instead of numbering rows: a row's index
+    * is the rank of its ROWIDX in the file, so `index < dataStart` holds
+    * exactly when `ROWIDX < dataStartRowidx`. Undefined for an empty input.
+    */
+  final case class KeyedIndices(idx: CalIndices, dataStartRowidx: Long, postCalRowidx: Long)
 
   /** Exact scalar port of `find_calibrations` (ref utils.py:126-214). */
   def scan(rows: IndexedSeq[Flags], channelCount: Long, headerObsmode: String): CalIndices = {
@@ -118,7 +128,7 @@ object CalibrationScan {
       df: DataFrame,
       channelCount: Long,
       headerObsmode: String): CalIndices = {
-    val r = scanPerFile(df, "ROWIDX", lit(channelCount), headerObsmode)
+    val r = scanPerFile(df, lit(channelCount), headerObsmode)
       .select(col("data_start"), col("post_cal_start"), col("off_start"))
       .collect()
     if (r.isEmpty) scan(Vector.empty, channelCount, headerObsmode)
@@ -140,12 +150,14 @@ object CalibrationScan {
     * main machine completes pre-cal), `rows(ind−1)` becomes a
     * previous-value register, and the reference's `break` becomes a freeze
     * flag (the iterator is still drained for the row count and off-start
-    * scan, which the reference reads after its loop anyway).
+    * scan, which the reference reads after its loop anyway). The ROWIDX
+    * of the rows the indices point at ride along in the same registers:
+    * set wherever an index is set, from the current or the previous row.
     */
   def scanStreaming(
       rows: Iterator[Flags],
       channelCount: Long,
-      headerObsmode: String): CalIndices = {
+      headerObsmode: String): KeyedIndices = {
     // main machine (ref utils.py:126-178)
     var dataStart: Option[Int] = None
     var postCal: Option[Int] = None
@@ -160,16 +172,24 @@ object CalibrationScan {
     var fbFrozen = false
     var fbPrevSwp = -1
     var offStart = -1
+    // ROWIDX of the first and previous rows, and of the rows dataStart,
+    // postCal and fbPostCal point at
+    var firstKey = 0L
+    var prevKey = 0L
+    var dsKey = 0L
+    var pcKey = 0L
+    var fbPcKey = 0L
     var ind = 0
     while (rows.hasNext) {
       val r = rows.next()
+      if (ind == 0) firstKey = r.rowidx
       if (!frozen) {
         if (r.calstate == 1) calStarted = true
         if (calStarted && r.calstate == 0 && r.swpvalid == 1 && !preCalComplete) {
-          dataStart = Some(ind); preCalComplete = true
+          dataStart = Some(ind); dsKey = r.rowidx; preCalComplete = true
         }
         if (ind > 0 && preCalComplete && r.swpvalid == 0 && prevSwp == 0) {
-          if (postCal.isEmpty) postCal = Some(ind - 1)
+          if (postCal.isEmpty) { postCal = Some(ind - 1); pcKey = prevKey }
         } else postCal = None
         if (preCalComplete && r.calstate == 0 && r.swpvalid == 1) counter += 1
         if (counter <= 3 * channelCount && r.swpvalid == 0 && dataStart.exists(_ != 0)) {
@@ -180,31 +200,43 @@ object CalibrationScan {
       }
       if (!fbFrozen) {
         if (ind > 0 && r.swpvalid == 0 && fbPrevSwp == 0) {
-          if (fbPostCal.isEmpty) fbPostCal = Some(ind - 1)
+          if (fbPostCal.isEmpty) { fbPostCal = Some(ind - 1); fbPcKey = prevKey }
         } else fbPostCal = None
         if (r.swpvalid == 0 && r.calstate == 1) fbFrozen = true
         fbPrevSwp = r.swpvalid
       }
       if (offStart < 0 && r.obsmode != null && r.obsmode.contains("onoff:off")) offStart = ind
+      prevKey = r.rowidx
       ind += 1
     }
-    if (!preCalComplete) { dataStart = Some(0); postCal = fbPostCal }
-    val postCalFinal = postCal.filter(_ != 0).getOrElse(ind - 1)
+    if (!preCalComplete) {
+      dataStart = Some(0); dsKey = firstKey
+      postCal = fbPostCal; pcKey = fbPcKey
+    }
+    // `if not post_cal_start_ind` falls back to the last row (len−1)
+    val postCalTruthy = postCal.filter(_ != 0)
     val off =
       if (headerObsmode == "onoff" && offStart >= 0) Some(offStart) else None
-    CalIndices(dataStart, postCalFinal, off)
+    KeyedIndices(CalIndices(dataStart, postCalTruthy.getOrElse(ind - 1), off), dsKey,
+      if (postCalTruthy.isDefined) pcKey else prevKey)
   }
 
-  /** Scale path: one scan per file, parallel across files. Input needs
-    * FILE_ID, the order column `orderCol` (ROWIDX, or the post-filter
-    * positional `__pos` the continuum reduction scans by) and the three
-    * flag columns; everything else is pruned before the shuffle. `cc` is the
-    * interleave factor, constant within a file (a literal, or the per-file
-    * A3 aggregate joined on) and read off each file's first row. Returns one
-    * row per file with the three indices.
+  /** Scale path: one scan per file, parallel across files, in ROWIDX
+    * order. Input needs FILE_ID, ROWIDX and the three flag columns;
+    * everything else is pruned before the shuffle. `cc` is the interleave
+    * factor, constant within a file (a literal, or the per-file A3
+    * aggregate joined on) and read off each file's first row. Returns one
+    * row per file: the three indices (`data_start`, `post_cal_start`,
+    * `off_start`) and the ROWIDX at the data start and at the post-cal
+    * start (`data_start_rowidx`, `post_cal_start_rowidx`, see
+    * [[KeyedIndices]]).
+    *
+    * ROWIDX must be unique within a file — a row's index is its ROWIDX
+    * rank. The scan walks each file in ROWIDX order, so a duplicate is two
+    * equal adjacent keys and fails the task with the file and the ROWIDX.
     *
     * Mechanics: secondary sort — `repartition(FILE_ID)` +
-    * `sortWithinPartitions(FILE_ID, orderCol)` puts each file's rows
+    * `sortWithinPartitions(FILE_ID, ROWIDX)` puts each file's rows
     * consecutive and ordered (Spark's spillable external sort), then one
     * `mapPartitions` runs [[scanStreaming]] per file, cutting on key
     * change — the same shape as `SdfitsWriter.writeObservations`. No
@@ -214,39 +246,50 @@ object CalibrationScan {
     */
   def scanPerFile(
       df: DataFrame,
-      orderCol: String,
       cc: Column,
       headerObsmode: String): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
     df.select(
         col("FILE_ID").cast("string"),
-        col(orderCol).cast("long"),
+        col("ROWIDX").cast("long"),
         col("CALSTATE").cast("int"),
         col("SWPVALID").cast("int"),
         col("OBSMODE").cast("string"),
         cc.cast("long"))
       .repartition(col("FILE_ID"))
-      .sortWithinPartitions(col("FILE_ID"), col(orderCol))
+      .sortWithinPartitions(col("FILE_ID"), col("ROWIDX"))
       .as[(String, Long, Int, Int, String, Long)]
       .mapPartitions { it =>
         val rows = it.buffered
         def box(o: Option[Int]): java.lang.Long =
           o.map(i => java.lang.Long.valueOf(i.toLong)).orNull
-        new Iterator[(String, java.lang.Long, Long, java.lang.Long)] {
+        new Iterator[(String, java.lang.Long, Long, java.lang.Long, Long, Long)] {
           def hasNext: Boolean = rows.hasNext
-          def next(): (String, java.lang.Long, Long, java.lang.Long) = {
+          def next(): (String, java.lang.Long, Long, java.lang.Long, Long, Long) = {
             val file = rows.head._1
             val cc = rows.head._6
             val fileRows = new Iterator[Flags] {
+              private var n = 0L
+              private var prev = 0L
               def hasNext: Boolean = rows.hasNext && rows.head._1 == file
-              def next(): Flags = { val t = rows.next(); Flags(t._3, t._4, t._5) }
+              def next(): Flags = {
+                val t = rows.next()
+                if (n > 0 && t._2 == prev)
+                  throw new IllegalArgumentException(
+                    s"duplicate ROWIDX ${t._2} in file $file: ROWIDX must be unique within a file")
+                n += 1; prev = t._2
+                Flags(t._3, t._4, t._5, t._2)
+              }
             }
-            val r = scanStreaming(fileRows, cc, headerObsmode)
-            (file, box(r.dataStart), r.postCalStart.toLong, box(r.offStart))
+            val k = scanStreaming(fileRows, cc, headerObsmode)
+            val r = k.idx
+            (file, box(r.dataStart), r.postCalStart.toLong, box(r.offStart),
+              k.dataStartRowidx, k.postCalRowidx)
           }
         }
       }
-      .toDF("FILE_ID", "data_start", "post_cal_start", "off_start")
+      .toDF("FILE_ID", "data_start", "post_cal_start", "off_start",
+        "data_start_rowidx", "post_cal_start_rowidx")
   }
 }

@@ -29,17 +29,6 @@ object Continuum {
       excludeTime: Seq[(Double, Double)] = Nil,
       strictCompat: Boolean = false)
 
-  /** Positional index within the (already filtered) frame — the reference's
-    * implicit row position (F9). Bucketed form ([[graft.ops.Positions]])
-    * on BOTH paths (r14): a constant FILE_ID would constant-fold a
-    * per-file window's partition key away and funnel every row through
-    * one WindowExec partition, and even the genuine multi-file window
-    * parallelizes only by file COUNT — the sf10 certificate measured it
-    * at 20× for 10× data on a 4-file fixture. The bucketed offsets side
-    * re-reads the checkpointed/cached upstream, a narrow extra scan.
-    */
-  private def withPos(df: DataFrame): DataFrame = Positions.withPos(df)
-
   def run(df: DataFrame, header: Header, p: Params): DataFrame = {
     // A3 — sweep-interleave factor from the PRE-filter table (continuum.py:24-28).
     val channelCount = Integration.sweepInterleaveFactor(df)
@@ -65,7 +54,12 @@ object Continuum {
     // consumed (the harness does this between queries). Callers looping
     // over MANY files should use [[runAll]] — one job chain, no per-file
     // caches — rather than calling run() per file.
-    val flagged = withPos(d2).cache()
+    // `__pos` is the reference's implicit row position (F9), in the
+    // bucketed form ([[graft.ops.Positions]]): a constant FILE_ID would
+    // constant-fold a per-file window's partition key away and funnel
+    // every row through one WindowExec partition. ([[runAll]] numbers no
+    // rows: it compares ROWIDX thresholds.)
+    val flagged = Positions.withPos(d2).cache()
     // Distributed ST1: flag rows reduce executor-side; one row reaches the
     // driver (scan semantics in ROWIDX order, pinned by q_st1_calscan).
     val idx = CalibrationScan.scanSingleFileDistributed(flagged, channelCount, header.obsmode)
@@ -96,13 +90,17 @@ object Continuum {
     * synchronous jobs per file, which at 100k files makes the driver loop the
     * bottleneck; here the driver issues a constant number of jobs total).
     *
-    * Plan shape: one narrow projection computes (t, intensity) for every row
-    * (column pruning keeps the wide DATA out of everything downstream of
-    * A1); per-file ST1 + A8 + the A9 branch decision run executor-side in a
-    * `groupByKey(FILE_ID).mapGroups` over the pruned five-column frame (a
-    * file's rows must fit one executor's memory — they are one observation);
-    * the resulting per-file gain parameters broadcast-join back onto the
-    * integrated frame and the division is a codegen'd `when` expression.
+    * Plan shape: two `localCheckpoint`s and no position window.
+    *  - `base`: one narrow projection computes (t, intensity) for every row
+    *    (the wide DATA never reaches anything downstream of A1).
+    *  - `idx`: the per-file ST1 scan over the F1-filtered `base` (secondary
+    *    sort, O(1) state per file) yields one row per file with the ROWIDX
+    *    thresholds of the data window.
+    *  - The A8 heights (a mapGroups over the spike windows only), the data
+    *    window's t extent (a plain aggregate) and the final gain division
+    *    each reread `base` through the same narrow filter and broadcast-join
+    *    the per-file frame; every window test is a ROWIDX comparison. The
+    *    A9 branch decision is a codegen'd `when` over the per-file frame.
     *
     * Semantics per file are identical to [[run]] (same scan, same fits, same
     * truthiness/z/strictCompat branches, interpolation over the data
@@ -121,7 +119,7 @@ object Continuum {
     // (A1 after the F7 channel crop, both per-row), so the checkpoint holds
     // nine scalar columns and never the channel vectors. Both the A3
     // interleave aggregate (pre-filter semantics, continuum.py:24-28) and
-    // the filtered integ frame below re-read this materialization —
+    // the filtered frame below re-read this materialization —
     // previously each evaluated the full source independently, and the sf1
     // smoke measured the multi-file fixture at ~7 s PER evaluation (the
     // dominant term of q_continuum_all's 5× ratio for 10× data).
@@ -162,61 +160,48 @@ object Continuum {
     if (p.includeTime.nonEmpty || p.excludeTime.nonEmpty)
       d = d.filter(RangeFilters.timeRangePredicate(col("t"), p.includeTime, p.excludeTime))
 
-    // Materialized ONCE (localCheckpoint): integ feeds both the mapGroups
-    // params side and the final join side — unmaterialized, the per-file
-    // position window would run twice for the same information. Bucketed
-    // positions (Positions.withPos) rather than a per-FILE window, for the
-    // same rows-not-file-count parallelism reason as Spectrum.runAll (the
-    // offsets side re-reads the cheap checkpointed base, so the extra
-    // pass is a narrow scan).
-    val integ = Positions.withPos(d).select(
-      col("FILE_ID"),
-      col("__pos").cast("long").as("__pos"),
-      col("CALSTATE"), col("SWPVALID"), col("OBSMODE"),
-      col("t"), col("intensity"))
-      .localCheckpoint()
-
-    val strict = p.strictCompat
-    val obsmode = header.obsmode
-    // Per-file gain parameters: mode 0 = identity, 1 = divide by constant
-    // `pv`, 2 = divide by the height interpolated between (t1, pv)..(t2, qv).
+    // Every consumer below rereads the checkpointed `base` through this
+    // narrow filter — no row positions. The reference slices by row
+    // POSITION within the filtered file (F9), but a position is the rank
+    // of the row's ROWIDX (unique per file, checked by the scan), so each
+    // position threshold becomes a ROWIDX threshold: the scan reports the
+    // ROWIDX at the data start and at the post-cal start, and
+    // `pos < data_start` ⇔ `ROWIDX < __ds`, `pos >= post_cal_start` ⇔
+    // `ROWIDX >= __pc` — as Spectrum.runAll does for its off index (r14).
     //
     // Bounded per-group memory (VERDICT r14 item 4): the former shape
     // materialized each file's FULL row set in one mapGroups (`it.toArray`)
     // — fine for real observations (thousands of rows), pathological on
     // the 15M-rows-per-file sf10 fixture. Now only the pre/post
     // calibration WINDOWS (tens of rows per file) ever reach a group
-    // buffer: the ST1 indices come from the O(1)-state streaming scan
-    // ([[CalibrationScan.scanPerFile]] by `__pos`, with the per-file A3
-    // factor as a column), broadcast back onto the integrated
-    // frame; the spike-window filter bounds what the heights mapGroups
-    // sees; and the data window reduces to a min/max/count aggregation.
-    // The A9 branch decision becomes a codegen'd CaseWhen over the tiny
-    // per-file frame — same op order as the mapGroups had, so
-    // ContinuumAllSpec's bit-parity against [[run]] still pins it.
-    val idx = CalibrationScan.scanPerFile(
-        integ.join(broadcast(cc), "FILE_ID")
-          .select(col("FILE_ID"), col("__pos"), col("CALSTATE"),
-            col("SWPVALID"), col("OBSMODE"), col("__cc")),
-        "__pos", col("__cc"), obsmode)
+    // buffer: the ST1 thresholds come from the O(1)-state streaming scan
+    // ([[CalibrationScan.scanPerFile]], with the per-file A3 factor as a
+    // column), broadcast back onto the filtered frame; the spike-window
+    // filter bounds what the heights mapGroups sees; and the data window
+    // reduces to a min/max/count aggregation. The A9 branch decision
+    // becomes a codegen'd CaseWhen over the tiny per-file frame — same op
+    // order as the mapGroups had, so ContinuumAllSpec's bit-parity against
+    // [[run]] still pins it.
+    val idx = CalibrationScan.scanPerFile(d.join(broadcast(cc), "FILE_ID"), col("__cc"),
+        header.obsmode)
       .select(col("FILE_ID"),
-        coalesce(col("data_start"), lit(0L)).as("__ds"),
-        col("post_cal_start").as("__pc"))
+        col("data_start_rowidx").as("__ds"),
+        col("post_cal_start_rowidx").as("__pc"))
       .localCheckpoint() // per-file frame, read three times below
+    val rid = col("ROWIDX")
 
     // Spike rows only — the bounded group payload (diode on/off rows of
     // the two calibration windows; the height fit reads nothing else).
-    val spikes = integ.join(broadcast(idx), "FILE_ID")
-      .filter((col("__pos") < col("__ds") || col("__pos") >= col("__pc")) &&
-        col("SWPVALID") === 0)
-      .select(col("FILE_ID"), col("__pos"),
-        (col("__pos") < col("__ds")).as("__pre"),
+    val spikes = d.join(broadcast(idx), "FILE_ID")
+      .filter((rid < col("__ds") || rid >= col("__pc")) && col("SWPVALID") === 0)
+      .select(col("FILE_ID"), rid,
+        (rid < col("__ds")).as("__pre"),
         (col("CALSTATE") === 1).as("__on"), col("t"), col("intensity"))
     val heights = spikes
       .as[(String, Long, Boolean, Boolean, Double, Double)]
       .groupByKey(_._1)
       .mapGroups { (file, it) =>
-        val rows = it.toArray.sortBy(_._2) // tens of rows: spike windows only
+        val rows = it.toArray.sortBy(_._2) // tens of rows: spike windows only, ROWIDX order
         def h(pre: Boolean): Option[GainCal.Height] = {
           val w = rows.filter(_._3 == pre)
           val on = w.filter(_._4)
@@ -235,12 +220,14 @@ object Continuum {
         "__postDef", "__postD", "__postSd")
 
     // Data-window extent: a plain aggregation — no group buffer at all.
-    val winStats = integ.join(broadcast(idx), "FILE_ID")
-      .filter(col("__pos") >= col("__ds") && col("__pos") < col("__pc"))
+    val winStats = d.join(broadcast(idx), "FILE_ID")
+      .filter(rid >= col("__ds") && rid < col("__pc"))
       .groupBy(col("FILE_ID"))
       .agg(min(col("t")).as("__w1"), max(col("t")).as("__w2"),
         count(lit(1)).as("__wn"))
 
+    // Per-file gain parameters: mode 0 = identity, 1 = divide by constant
+    // `pv`, 2 = divide by the height interpolated between (t1, pv)..(t2, qv).
     // Branch decision mirrors GainCal.applyGain exactly (same IEEE op
     // order as the scalar form: z = |a−b| / sqrt(sd_a² + sd_b²)). The
     // zero-denominator case is guarded EXPLICITLY rather than divided:
@@ -264,7 +251,7 @@ object Continuum {
     val zero5 = dec5(0, lit(0.0), lit(0.0), lit(0.0), lit(0.0))
     val mode1 = (v: Column) => dec5(1, v, lit(0.0), lit(0.0), lit(0.0))
     val drift =
-      if (strict) zero5
+      if (p.strictCompat) zero5
       else when(winEmpty, zero5)
         .when(col("__w2") === col("__w1"), mode1(avgH))
         .otherwise(dec5(2, a, b, col("__w1"), col("__w2")))
@@ -283,12 +270,12 @@ object Continuum {
         decision.getField("t1").as("__t1"),
         decision.getField("t2").as("__t2"))
 
-    // Broadcast the tiny per-file parameter table back onto the integrated
+    // Broadcast the tiny per-file parameter table back onto the filtered
     // frame; the gain division is a codegen'd expression (same op order as
     // GainCal.applyGain for bit parity with the single-file path).
     val h = col("__p") + (col("__q") - col("__p")) * ((col("t") - col("__t1")) / (col("__t2") - col("__t1")))
-    integ.join(broadcast(params), "FILE_ID")
-      .filter(col("__pos") >= col("__ds") && col("__pos") < col("__pc"))
+    d.join(broadcast(params), "FILE_ID")
+      .filter(rid >= col("__ds") && rid < col("__pc"))
       .select(col("FILE_ID"), col("t"),
         when(col("__mode") === 2, col("intensity") / h)
           .when(col("__mode") === 1, col("intensity") / col("__p"))

@@ -100,10 +100,11 @@ object Spectrum {
   }
 
   /** Multi-file scale path (the [[graft.pipeline.Continuum.runAll]] analog):
-    * spectra for N files in ONE job chain. The per-file off-transition index
-    * comes from the distributed ST1 scan (flag columns only — DATA pruned),
-    * broadcast-joins back, and the ON/OFF vector sums aggregate in a single
-    * groupBy(FILE_ID, half) pass with map-side partial whole-array sums.
+    * spectra for N files in ONE job chain, with no position window and no
+    * checkpoint. The per-file off threshold is a ROWIDX aggregate over the
+    * slim flag columns (DATA pruned), broadcast-joined back; the ON and OFF
+    * vector sums are two conditional sums in ONE groupBy(FILE_ID)
+    * aggregate with map-side partial whole-array sums.
     * Output: one row per (FILE_ID, channel).
     */
   def runAll(df: DataFrame, header: Header, p: Params): DataFrame = {
@@ -148,24 +149,23 @@ object Spectrum {
           .agg(min(col("ROWIDX")).as("__first_row"),
             first(lit(null).cast("long")).as("__off_row"))
 
-    // Python truthiness (ref spectrum.py:62): off index 0 or absent → no split.
-    val halves = slim
+    // ONE aggregate per file: the ON and OFF halves are two conditional
+    // vector sums (VectorSumAgg skips the null rows the `when` leaves).
+    // Mirrors run() exactly: a
+    // file WITHOUT a real off index (Python truthiness, ref spectrum.py:62:
+    // off index 0 or absent) returns its plain sum; a file WITH one returns
+    // on−off. Neither half of a split file is empty (its first row is ON,
+    // its first off row OFF), so the difference needs no emptiness test.
+    val split = !(col("__off_row").isNull || col("__off_row") === col("__first_row"))
+    val on = !split || col("ROWIDX") < col("__off_row")
+    val data = ArrayOps.fillNulls(col("DATA"))
+    val spec = slim
       .join(broadcast(offs), "FILE_ID")
-      .withColumn("__split",
-        !(col("__off_row").isNull || col("__off_row") === col("__first_row")))
-      .withColumn("__on", !col("__split") || col("ROWIDX") < col("__off_row"))
-      .groupBy(col("FILE_ID"), col("__on"))
-      .agg(VectorSum.vecSum(ArrayOps.fillNulls(col("DATA"))).as("s"),
-        first(col("__split")).as("__split"))
-
-    // Mirrors run() exactly: a file WITHOUT a real off index returns its
-    // plain sum; a file WITH one returns on−off — null (→ no rows after the
-    // posexplode) when either half is empty, same as the single-file path.
-    val spec = halves.groupBy(col("FILE_ID"))
+      .groupBy(col("FILE_ID"))
       .agg(
-        first(when(col("__on"), col("s")), ignoreNulls = true).as("s_on"),
-        first(when(!col("__on"), col("s")), ignoreNulls = true).as("s_off"),
-        first(col("__split")).as("__split"))
+        VectorSum.vecSum(when(on, data)).as("s_on"),
+        VectorSum.vecSum(when(!on, data)).as("s_off"),
+        first(split).as("__split"))
       .select(col("FILE_ID"),
         when(!col("__split"), col("s_on"))
           .otherwise(ArrayOps.vecDiff(col("s_on"), col("s_off"))).as("spectrum"))

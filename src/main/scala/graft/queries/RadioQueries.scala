@@ -439,7 +439,8 @@ object RadioQueries {
     // --- ST1: calibration-spike scan (scale path) ---------------------------
     "q_st1_calscan" -> ((s, dir) =>
       CalibrationScan.scanPerFile(obs(li(s, dir), 4, spikes = true, offAt = Some(100)),
-          "ROWIDX", lit(1L), headerObsmode = "onoff")
+          lit(1L), headerObsmode = "onoff")
+        .select(col("FILE_ID"), col("data_start"), col("post_cal_start"), col("off_start"))
         .orderBy(col("FILE_ID"))),
 
     // --- §3 pipeline compositions ------------------------------------------
@@ -566,7 +567,7 @@ object RadioQueries {
 
     "q_spectrum_all" -> ((s, dir) =>
       // Multi-file spectrum scale path: per-file ON/OFF spectra in ONE
-      // groupBy(FILE_ID, half) aggregation pass.
+      // groupBy(FILE_ID) aggregation pass.
       Spectrum.runAll(obs(li(s, dir), 4, spikes = false, offAt = Some(100)), obsHeader(4),
         Spectrum.Params(ifnum = 0, plnum = 1)))
   )

@@ -2,6 +2,7 @@ package graft.tools
 
 import java.util.concurrent.ConcurrentLinkedQueue
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.{Window => LWindow}
@@ -16,7 +17,10 @@ import graft.{Bench, GraftSession, SparkEntry}
   * Usage: tools/run_main.sh graft.tools.Probe <mode> <sfDir> <q1,q2,...|all> [outDir] [suffix]
   *
   *  - `time`: Bench's warm-up, then Bench's per-query measurement; one
-  *    `TIMED <q> <sec> s jobs=<n>` line per query.
+  *    `TIMED <q> <sec> s jobs=<n> compiles=<n>` line per query, where
+  *    `compiles` counts the Janino classes the measured run compiled (a
+  *    warm rerun compiles none while its classes fit Spark's codegen
+  *    cache, so a growing count flags a grown working set).
   *  - `jobs`: one warm pass, then the measured pass with one line per Spark
   *    job (duration, stage count, stage names and task counts) — which
   *    actions make up a query's job count.
@@ -82,8 +86,10 @@ object Probe {
       val fn = registry(name)
       try mode match {
         case "time" =>
+          val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
           val r = Bench.measure(spark, sfDir, name, fn, gc = true)
-          println(f"TIMED $name ${r.sec}%.2f s jobs=${r.jobs}")
+          val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0
+          println(f"TIMED $name ${r.sec}%.2f s jobs=${r.jobs} compiles=$compiles")
           r.ok
         case "jobs" => auditJobs(spark, sfDir, name, fn)
         case "plan" =>

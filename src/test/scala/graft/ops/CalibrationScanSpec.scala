@@ -111,12 +111,20 @@ class CalibrationScanSpec extends AnyFunSuite {
     // The one-pass O(1)-state form must agree with the reference-exact
     // array scan on EVERY input: all flag sequences up to length 7 over
     // the 3 meaningful flag states × obsmode on/off, plus seeded random
-    // length-200 sequences across channel counts.
+    // length-200 sequences across channel counts. Rows carry increasing
+    // ROWIDX with gaps, and the ROWIDX the streaming form reports must be
+    // those of the rows at the array scan's data start (row 0 when there
+    // is none) and post-cal start.
     val states = Seq((1, 0), (0, 0), (0, 1))
     def check(r: IndexedSeq[Flags], cc: Long, mode: String): Unit = {
       val a = scan(r, cc, mode)
       val b = CalibrationScan.scanStreaming(r.iterator, cc, mode)
-      assert(a == b, s"mismatch on $r cc=$cc mode=$mode: $a vs $b")
+      assert(a == b.idx, s"mismatch on $r cc=$cc mode=$mode: $a vs ${b.idx}")
+      if (r.nonEmpty) {
+        val keys = (r(a.dataStart.getOrElse(0)).rowidx, r(a.postCalStart).rowidx)
+        assert((b.dataStartRowidx, b.postCalRowidx) == keys,
+          s"ROWIDX mismatch on $r cc=$cc mode=$mode: $keys vs $b")
+      }
     }
     for (len <- 0 to 7) {
       val combos = Seq.fill(len)(states.indices).foldLeft(Seq(Seq.empty[Int])) {
@@ -125,16 +133,18 @@ class CalibrationScanSpec extends AnyFunSuite {
       combos.foreach { p =>
         val r = p.zipWithIndex.map { case (si, i) =>
           val (c, s) = states(si)
-          Flags(c, s, if (i % 3 == 2) "onoff:off" else "onoff:on")
+          Flags(c, s, if (i % 3 == 2) "onoff:off" else "onoff:on", 10L * i + i % 3)
         }.toIndexedSeq
         check(r, 1, "onoff"); check(r, 1, "none")
       }
     }
     val rnd = new scala.util.Random(7)
     for (_ <- 0 until 200) {
+      var key = rnd.nextInt(1000).toLong - 500
       val r = IndexedSeq.fill(200) {
         val (c, s) = states(rnd.nextInt(3))
-        Flags(c, s, if (rnd.nextInt(10) == 0) "x onoff:off y" else "onoff:on")
+        key += 1 + rnd.nextInt(5)
+        Flags(c, s, if (rnd.nextInt(10) == 0) "x onoff:off y" else "onoff:on", key)
       }
       check(r, 1 + rnd.nextInt(4), if (rnd.nextBoolean()) "onoff" else "none")
     }

@@ -19,33 +19,72 @@ class ContinuumAllSpec extends SparkTestBase {
   /** nFiles observations with per-file varying science levels and drifting
     * calibration spikes (pre level differs from post → exercises the z-test
     * branches; file index varies the data so files are not identical).
+    * Row i of file f sits at t = i s with ROWIDX `rowidx(f, i)`. With
+    * `interleave`, every row is followed by one of another IFNUM or PLNUM
+    * (a diode-on spike F1 must drop) at the next ROWIDX, so the kept rows'
+    * ROWIDX are never their positions.
     */
-  private def obs(nFiles: Int, rowsPerFile: Int = 64): DataFrame = {
-    val rows = for (f <- 0 until nFiles; i <- 0 until rowsPerFile) yield {
+  private def obs(nFiles: Int, rowsPerFile: Int = 64,
+      rowidx: (Int, Int) => Long = (_, i) => i.toLong,
+      interleave: Boolean = false): DataFrame = {
+    val rows = for (f <- 0 until nFiles; i <- 0 until rowsPerFile;
+        other <- if (interleave) Seq(false, true) else Seq(false)) yield {
       val (cal, swp, level) =
-        if (i < 8) (1, 0, 2.0 + f)
+        if (other) (1, 0, 100.0)
+        else if (i < 8) (1, 0, 2.0 + f)
         else if (i < 16) (0, 0, 0.5)
         else if (i < rowsPerFile - 16) (0, 1, 1.0 + 0.1 * f + 0.001 * i)
         else if (i < rowsPerFile - 8) (0, 0, 0.5)
         else (1, 0, 2.5 + f)
-      (f.toString, i.toLong,
+      val (ifnum, plnum) = if (!other) (0, 1) else if (i % 2 == 0) (1, 1) else (0, 0)
+      val ridx = if (interleave) 2 * rowidx(f, i) + (if (other) 1 else 0) else rowidx(f, i)
+      (f.toString, ridx,
         java.sql.Timestamp.valueOf(s"2024-01-01 00:${"%02d".format(i / 60)}:${"%02d".format(i % 60)}"),
-        Seq.fill(4)(level), 0, 1, cal, swp, "onoff:on")
+        Seq.fill(4)(level), ifnum, plnum, cal, swp, "onoff:on")
     }
     rows.toDF("FILE_ID", "ROWIDX", "DATE_OBS", "DATA", "IFNUM", "PLNUM",
       "CALSTATE", "SWPVALID", "OBSMODE")
   }
 
-  test("runAll reproduces run() file-by-file (including the drift branch)") {
-    val df = obs(3)
-    val all = Continuum.runAll(df, header, Continuum.Params(0, 1))
+  /** runAll's rows for each file equal run() on that file alone. */
+  private def assertParity(df: DataFrame, nFiles: Int, p: Continuum.Params): Unit = {
+    val all = Continuum.runAll(df, header, p)
       .as[(String, Double, Double)].collect()
       .groupBy(_._1).view.mapValues(_.map(r => (r._2, r._3)).toSeq).toMap
-    for (f <- 0 until 3) {
-      val single = Continuum.run(df.filter($"FILE_ID" === f.toString), header,
-        Continuum.Params(0, 1)).as[(Double, Double)].collect().toSeq
-      assert(all(f.toString) == single, s"file $f diverged")
+    for (f <- 0 until nFiles) {
+      val single = Continuum.run(df.filter($"FILE_ID" === f.toString), header, p)
+        .as[(Double, Double)].collect().toSeq
+      assert(single.nonEmpty && all(f.toString) == single, s"file $f diverged")
     }
+  }
+
+  test("runAll reproduces run() file-by-file (including the drift branch)") {
+    assertParity(obs(3), 3, Continuum.Params(0, 1))
+  }
+
+  test("runAll reproduces run() when ROWIDX has gaps") {
+    assertParity(obs(3, rowidx = (f, i) => 5L * i + f + (if (i > 30) 1000 else 0)), 3,
+      Continuum.Params(0, 1))
+  }
+
+  test("runAll reproduces run() with interleaved rows of another IFNUM/PLNUM") {
+    assertParity(obs(3, interleave = true), 3, Continuum.Params(0, 1))
+  }
+
+  test("runAll reproduces run() under an includeTime filter") {
+    // drops rows 0..5 and 59..63: the data window starts at position 10,
+    // not at ROWIDX 10
+    assertParity(obs(3), 3, Continuum.Params(0, 1, includeTime = Seq((5.5, 58.5))))
+  }
+
+  test("a duplicate (FILE_ID, ROWIDX) fails loudly, naming the file and the ROWIDX") {
+    val df = obs(2).filter(!($"FILE_ID" === "1" && $"ROWIDX" === 21L))
+      .union(obs(2).filter($"FILE_ID" === "1" && $"ROWIDX" === 20L))
+    val e = intercept[Exception] {
+      Continuum.runAll(df, header, Continuum.Params(0, 1)).collect()
+    }
+    val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).map(_.getMessage)
+    assert(msgs.exists(m => m != null && m.contains("duplicate ROWIDX 20 in file 1")), e)
   }
 
   test("runAll handles many files in one plan (driver issues O(1) jobs)") {

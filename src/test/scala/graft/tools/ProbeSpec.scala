@@ -34,6 +34,15 @@ class ProbeSpec extends SparkTestBase {
       .startsWith("== Physical Plan =="))
   }
 
+  test("time prints seconds, jobs and codegen compiles per query") {
+    // not a query the other tests measure: Bench counts a query's jobs by
+    // its job group, and the status tracker keeps a group's earlier jobs
+    val (code, out, _) = probe("time", sf, "q_c2_freqrange")
+    assert(code == 0)
+    assert("""(?m)^TIMED q_c2_freqrange \d+\.\d\d s jobs=\d+ compiles=\d+$""".r
+      .findFirstIn(out).isDefined, out)
+  }
+
   test("jobs reports the job count Bench measures") {
     val (code, out, _) = probe("jobs", sf, "q_st1_calscan")
     assert(code == 0)
