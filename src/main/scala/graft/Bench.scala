@@ -106,16 +106,21 @@ object Bench {
       .agg(max(col("f"))).collect()
   }
 
+  private val measurements = new java.util.concurrent.atomic.AtomicLong()
+
   /** Times one registry query the way every recorded number is taken, and
     * counts its Spark jobs. `gc` adds a full GC after the cleanup (the
     * caller's cadence). A failure is logged and returned as `ok = false`.
     */
   def measure(spark: SparkSession, sfDir: String, name: String,
       fn: (SparkSession, String) => DataFrame, gc: Boolean): Run = {
-    // Job group per query → per-query job counts from the status tracker
-    // (VERDICT r6 item 8: seconds alone can't tell cold-JIT tax from a
-    // plan regression; the number of driver actions can).
-    spark.sparkContext.setJobGroup(name, name, interruptOnCancel = false)
+    // Job group per measurement → per-query job counts from the status
+    // tracker (VERDICT r6 item 8: seconds alone can't tell cold-JIT tax
+    // from a plan regression; the number of driver actions can). The
+    // tracker keeps a group's earlier jobs, so the group id is unique to
+    // this measurement; the description stays the query name.
+    val group = s"$name#${measurements.incrementAndGet()}"
+    spark.sparkContext.setJobGroup(group, name, interruptOnCancel = false)
     val t0 = System.nanoTime()
     // Noop sink, not count(): count() lets Catalyst prune unreferenced
     // projections, so map-only queries would benchmark near-zero work.
@@ -139,6 +144,6 @@ object Bench {
     // The status store is fed by the async listener bus: read the group's
     // job ids only once every event posted so far has been delivered.
     GraftSession.drain(spark)
-    Run(name, elapsed, ok, spark.sparkContext.statusTracker.getJobIdsForGroup(name).length)
+    Run(name, elapsed, ok, spark.sparkContext.statusTracker.getJobIdsForGroup(group).length)
   }
 }

@@ -95,10 +95,6 @@ object ArrayOps {
   def vecDiff(a: Column, b: Column): Column =
     zip_with(a, b, (x, y) => x - y)
 
-  /** Element-wise scale (C8-style application of a per-row factor). */
-  def vecScale(a: Column, k: Column): Column =
-    transform(a, x => x * k)
-
   /** C8 — inverse-transmission application: per-channel division
     * (ref atmosphere_correction.py:83-84, `DATA *= 1/transmission`).
     */

@@ -42,8 +42,8 @@ object Dedup {
     * kernel: the whole signature computes in one compiled loop per ROW — no
     * explode, no 64-column hash aggregate, no shuffle; at scale the
     * signature job is a pure map over the corpus. Values are bit-identical
-    * to [[minhashSignature]] (HOF) and [[minhashSignaturesExploded]]
-    * (explode+agg), pinned by DedupSpec/SigKernelsSpec. Docs with fewer
+    * to [[minhashSignature]] (HOF) and to the explode+aggregate form,
+    * pinned by DedupSpec/SigKernelsSpec. Docs with fewer
     * than `shingleSize` tokens have no shingles and drop out (they cannot
     * be near-duplicates under this measure).
     */
@@ -56,26 +56,6 @@ object Dedup {
     df.select(col(idCol).as("id"),
         graft.functions.SigKernels.minhashMurmur(col(textCol), shingleSize, numHashes).as("sig"))
       .filter(col("sig").isNotNull)
-
-  /** The round-3/4 explode+aggregate formulation of [[minhashSignatures]]
-    * (same values): explode shingles to rows, aggregate numHashes salted
-    * murmur3 columns with map-side partial `min`s. Correct and distributed,
-    * but the 64-column hash aggregate generates a huge codegen class (slow
-    * to JIT on a cold JVM) and shuffles one row per doc per partition —
-    * kept as the cross-check the specs pin the kernel against.
-    */
-  def minhashSignaturesExploded(
-      df: DataFrame,
-      idCol: String = "doc_id",
-      textCol: String = "text",
-      numHashes: Int = 64,
-      shingleSize: Int = 3): DataFrame = {
-    val shingled = df.select(col(idCol).as("id"),
-      explode(TextAnalysis.wordNgrams(col(textCol), shingleSize)).as("sh"))
-    val mins = (0 until numHashes).map(i => min(hash(col("sh"), lit(i))).as(s"h$i"))
-    shingled.groupBy(col("id")).agg(mins.head, mins.tail: _*)
-      .select(col("id"), array((0 until numHashes).map(i => col(s"h$i")): _*).as("sig"))
-  }
 
   /** LSH band keys from a MinHash signature: hash of each band's slice.
     * Docs sharing any band key are candidate near-duplicates
@@ -209,25 +189,6 @@ object Dedup {
         graft.functions.SigKernels.minhashPoly(col(textCol), shingleSize, numHashes).as("sig"))
       .filter(col("sig").isNotNull)
 
-  /** Explode+aggregate formulation of [[minhashSignaturesPoly]] (same
-    * values) — the specs' cross-check; see [[minhashSignaturesExploded]].
-    */
-  def minhashSignaturesPolyExploded(
-      df: DataFrame,
-      idCol: String = "doc_id",
-      textCol: String = "text",
-      numHashes: Int = 64,
-      shingleSize: Int = 3): DataFrame = {
-    val p = 1000000007L
-    val shingled = df.select(col(idCol).as("id"),
-        explode(TextAnalysis.wordNgrams(col(textCol), shingleSize)).as("sh"))
-      .withColumn("fp", TextAnalysis.fingerprint(col("sh")))
-    val mins = (0 until numHashes).map(i =>
-      min((lit(2L * i + 1) * col("fp") + lit(31L * i + 7)) % p).as(s"h$i"))
-    shingled.groupBy(col("id")).agg(mins.head, mins.tail: _*)
-      .select(col("id"), array((0 until numHashes).map(i => col(s"h$i")): _*).as("sig"))
-  }
-
   /** Plain-text LSH band keys (the slice rendered as a string, not
     * xxhash64 of it) — reproducible in the oracle; the hashed form
     * ([[lshBandKeys]]) shuffles 8 bytes per key and is the scale default.
@@ -284,7 +245,8 @@ object Dedup {
   }
 
   /** SimHash signatures via the one-pass kernel (same values as
-    * [[simhash64]] and [[simhashSignaturesExploded]]): xxhash64 per token,
+    * [[simhash64]] and the explode+vote aggregate, pinned by
+    * SigKernelsSpec): xxhash64 per token,
     * occurrence-weighted votes, sign-pack — all in one compiled loop per
     * row; no explode, no 64-column vote aggregate, no shuffle.
     */
@@ -292,21 +254,6 @@ object Dedup {
     df.select(col(idCol).as("id"),
         graft.functions.SigKernels.simhashXx(col(textCol)).as("sim"))
       .filter(col("sim").isNotNull)
-
-  /** Explode+vote-aggregate formulation of [[simhashSignatures]] (same
-    * values) — the specs' cross-check; see [[minhashSignaturesExploded]].
-    */
-  def simhashSignaturesExploded(df: DataFrame, idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    val toks = df.select(col(idCol).as("id"),
-        explode(TextAnalysis.tokensWs(col(textCol))).as("t"))
-      .withColumn("h", xxhash64(col("t")))
-    val votes = (0 until 64).map(b =>
-      sum(when(shiftright(col("h"), b).bitwiseAND(lit(1L)) === 1L, 1L).otherwise(-1L)).as(s"v$b"))
-    toks.groupBy(col("id")).agg(votes.head, votes.tail: _*)
-      .select(col("id"),
-        (0 until 64).map(b => when(col(s"v$b") > 0, lit(1L << b)).otherwise(lit(0L)))
-          .reduce(_ + _).as("sim"))
-  }
 
   /** Oracle-checkable SimHash variant (the [[minhashSignaturesPoly]] analog):
     * bit b of a token's hash is `(((2b+1)·fp(t) + 31b+7) mod 1e9+7) mod 2` —
@@ -319,23 +266,6 @@ object Dedup {
     df.select(col(idCol).as("id"),
         graft.functions.SigKernels.simhashPoly(col(textCol)).as("sim"))
       .filter(col("sim").isNotNull)
-
-  /** Explode+vote-aggregate formulation of [[simhashSignaturesPoly]] (same
-    * values) — the specs' cross-check.
-    */
-  def simhashSignaturesPolyExploded(df: DataFrame, idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    val p = 1000000007L
-    val toks = df.select(col(idCol).as("id"),
-        explode(TextAnalysis.tokensWs(col(textCol))).as("t"))
-      .withColumn("fp", TextAnalysis.fingerprint(col("t")))
-    val votes = (0 until 64).map(b =>
-      sum(when((lit(2L * b + 1) * col("fp") + lit(31L * b + 7)) % p % 2L === 1L, 1L)
-        .otherwise(-1L)).as(s"v$b"))
-    toks.groupBy(col("id")).agg(votes.head, votes.tail: _*)
-      .select(col("id"),
-        (0 until 64).map(b => when(col(s"v$b") > 0, lit(1L << b)).otherwise(lit(0L)))
-          .reduce(_ + _).as("sim"))
-  }
 
   /** SimHash near-dup candidates via Hamming-LSH banding: the 64 bits split
     * into 4 disjoint 16-bit bands; docs sharing ANY band key are candidates

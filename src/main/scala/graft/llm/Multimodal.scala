@@ -100,13 +100,6 @@ object Multimodal {
       }
   }
 
-  /** Metadata-only pass (no decode): cheap map-side stats over the payload —
-    * the column-pruned path when only sizes/checksums are needed.
-    */
-  def mediaMeta(df: DataFrame, payloadCol: String = "payload"): DataFrame =
-    df.withColumn("byte_len", octet_length(col(payloadCol)).cast("long"))
-      .withColumn("payload_crc", crc32(col(payloadCol)))
-
   // --- real image path (JDK ImageIO — no external codec libs) ------------
 
   /** Channel-mean features of a decoded, resampled image. Means stay in the

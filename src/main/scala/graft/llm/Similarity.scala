@@ -303,21 +303,6 @@ object Similarity {
       .limit(k)
   }
 
-  /** ANN top-k computing the bucket on the fly (no stored column): correct
-    * but pays an O(n·planes) pass — prefer [[annTopKBucketed]] over a
-    * [[withLshBucket]]-prepared table at scale.
-    */
-  def annTopK(
-      df: DataFrame,
-      query: Array[Double],
-      planes: Array[Array[Double]],
-      k: Int,
-      probeHamming: Int = 1,
-      idCol: String = "vec_id",
-      embCol: String = "embedding"): DataFrame =
-    annTopKBucketed(withLshBucket(df, planes, embCol), query, planes, k,
-      probeHamming, idCol, embCol)
-
   /** Multi-query ANN — the batched shape a 100 TB deployment runs: Q query
     * vectors broadcast as a tiny dimension table (qid, qvec, qbucket), the
     * corpus joined on the Hamming-ball condition against its STORED bucket

@@ -249,57 +249,15 @@ object TextAnalysis {
     inter / (size(a) + size(b) - inter).cast("double")
   }
 
-  // --- exploded n-gram construction (codegen path) --------------------------
-  //
-  // The array-column forms above build each doc's n-gram set inside nested
-  // HOF lambdas, which Catalyst evaluates INTERPRETED — fine per row, but
-  // the dominant cost when a whole corpus is shingled. These produce the
-  // same distinct n-grams as (id, gram) ROWS: posexplode the tokens, window
-  // `lead` per doc for the n-1 following tokens, concat, distinct — every
-  // operator whole-stage-codegen'd, shuffling one row per token.
-
   import org.apache.spark.sql.DataFrame
   import org.apache.spark.sql.expressions.Window
-
-  /** Distinct word n-grams per doc as rows (id, gram); extra columns listed
-    * in `carry` are kept (one value per doc, e.g. a blocking key). Docs with
-    * fewer than n tokens produce no rows (== empty set in the array form).
-    */
-  def explodedWordNgrams(
-      df: DataFrame, idCol: String, textCol: String, n: Int,
-      carry: Seq[String] = Nil): DataFrame = {
-    val keep = (col(idCol) +: carry.map(col)) :+ posexplode(tokensWs(col(textCol))).as(Seq("__pos", "__tok"))
-    val toks = df.select(keep.toIndexedSeq: _*)
-    val w = Window.partitionBy(col(idCol)).orderBy(col("__pos"))
-    val withLeads = (1 until n).foldLeft(toks) { (d, i) =>
-      d.withColumn(s"__t$i", lead(col("__tok"), i).over(w))
-    }
-    val parts = col("__tok") +: (1 until n).map(i => col(s"__t$i"))
-    val complete = if (n == 1) withLeads else withLeads.filter(col(s"__t${n - 1}").isNotNull)
-    complete
-      .select((col(idCol) +: carry.map(col)) :+ concat_ws(" ", parts: _*).as("gram"): _*)
-      .distinct()
-  }
-
-  /** Distinct character n-grams per doc as rows (id, gram) — same
-    * construction over the character sequence.
-    */
-  def explodedCharNgrams(df: DataFrame, idCol: String, textCol: String, n: Int): DataFrame = {
-    val toks = df.select(col(idCol), posexplode(split(col(textCol), "")).as(Seq("__pos", "__c")))
-    val w = Window.partitionBy(col(idCol)).orderBy(col("__pos"))
-    val withLeads = (1 until n).foldLeft(toks) { (d, i) =>
-      d.withColumn(s"__c$i", lead(col("__c"), i).over(w))
-    }
-    val parts = col("__c") +: (1 until n).map(i => col(s"__c$i"))
-    val complete = if (n == 1) withLeads else withLeads.filter(col(s"__c${n - 1}").isNotNull)
-    complete.select(col(idCol), concat(parts: _*).as("gram")).distinct()
-  }
 
   /** Distinct word- and char-n-gram counts per doc (the q_text_ngrams
     * kernel): both counts compute in one compiled kernel pass per row
     * ([[graft.functions.SigKernels]]) — a pure map, no explode / window /
-    * groupBy / join (the round-4 exploded form shuffled one row per token
-    * AND per character). Docs with no grams count 0 (kernel semantics).
+    * groupBy / join (the round-4 exploded form, pinned by SigKernelsSpec,
+    * shuffled one row per token AND per character). Docs with no grams
+    * count 0 (kernel semantics).
     */
   def ngramCountsBy(
       df: DataFrame, idCol: String, textCol: String,
@@ -671,16 +629,6 @@ object TextAnalysis {
     graft.functions.FrozenLm(cu, cb, total, alphaNum, alphaDen)
   }
 
-  /** Self-trained [[bigramBackoffScoreAgainst]]. Degenerate on purpose —
-    * every bigram in the scored corpus is its own evidence, so the backoff
-    * fires only at position 1 — but the bigram branch still separates
-    * common from rare contexts; prefer the reference-trained form as the
-    * quality gate.
-    */
-  def bigramBackoffScoreBy(df: DataFrame, idCol: String, textCol: String,
-      alphaNum: Long = 2L, alphaDen: Long = 5L): DataFrame =
-    bigramBackoffScoreAgainst(df, df, idCol, textCol, alphaNum, alphaDen)
-
   /** Character-entropy gibberish score per document: Shannon entropy of the
     * character distribution, in integer micro-nats — near-zero for repeated
     * single characters, high for diverse text; the standard cheap screen
@@ -781,23 +729,6 @@ object TextAnalysis {
           .cast("long").as("n_tokens"),
         array_join(slice(col("__toks"), (start + 1L).cast("int"), lit(chunkTokens)), " ")
           .as("chunk_text"))
-  }
-
-  /** The round-4 exploded formulation of [[ngramCountsBy]] (same values) —
-    * kept as the cross-check TextAnalysisSpec pins the kernel against.
-    */
-  def ngramCountsByExploded(
-      df: DataFrame, idCol: String, textCol: String,
-      wordN: Int, charN: Int): DataFrame = {
-    val ids = df.select(col(idCol))
-    val wc = explodedWordNgrams(df, idCol, textCol, wordN)
-      .groupBy(col(idCol)).agg(count(lit(1)).as("__wc"))
-    val cc = explodedCharNgrams(df, idCol, textCol, charN)
-      .groupBy(col(idCol)).agg(count(lit(1)).as("__cc"))
-    ids.join(wc, Seq(idCol), "left").join(cc, Seq(idCol), "left")
-      .select(col(idCol),
-        coalesce(col("__wc"), lit(0L)).as(s"n_${wordN}grams"),
-        coalesce(col("__cc"), lit(0L)).as(s"n_char$charN"))
   }
 
   /** Flesch–Kincaid grade-level readability — the classic quality signal

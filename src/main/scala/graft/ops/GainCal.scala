@@ -6,11 +6,12 @@ import org.apache.spark.sql.functions._
 /** F3/A8/A9 — diode split, calibration height, gain calibration
   * (ref continuum.py:46-61, 111-138, 174-187).
   *
-  * The calibration spike windows are tens of rows, so A8 collects the
-  * (t, intensity) pairs of each window (after column pruning: two doubles per
-  * row) and fits on the driver — the VERDICT-approved scale route. The
-  * resulting heights are per-file scalars that A9 applies as broadcast
-  * literals in a single `withColumn`.
+  * The calibration spike windows are tens of rows, so A8 fits them on local
+  * arrays ([[heights]]): the single-file path collects them to the driver,
+  * [[graft.pipeline.Continuum.runAll]] gathers each file's in one aggregate.
+  * A9's branch decision ([[gain]]) is scalar code shared by both paths; its
+  * division ([[divide]]) is one Column, over literals for one file and over
+  * per-file columns for many.
   */
 object GainCal {
 
@@ -20,58 +21,56 @@ object GainCal {
 
   final case class Height(delta: Double, sd: Double)
 
-  /** A8 — calibration height of one spike window (ref continuum.py:111-138):
-    * split into diode-on/off, require ≥4 points each, A1-integrate both,
-    * RCR-fit both on mean-centered times, evaluate both fits at the midpoint
-    * of the two mean times, Δ = on(t)−off(t), σ by quadrature propagation.
-    * Returns None when either half has <4 points (ref continuum.py:137-138).
-    *
-    * `window` must already be the calibration slice with `t` (relative
-    * seconds) and `intensity` (A1 row sums) columns plus the flag columns.
+  /** A8 — calibration height of one spike window (ref continuum.py:111-138)
+    * via [[heights]]. `window` must already be the calibration slice with
+    * `t` (relative seconds) and `intensity` (A1 row sums) columns plus the
+    * flag columns.
     */
-  def calibrationHeight(window: DataFrame): Option[Height] = {
-    def collectTI(pred: Column): (Array[Double], Array[Double]) = {
-      val rows = window.filter(pred).select(col("t"), col("intensity")).collect()
-      (rows.map(_.getDouble(0)), rows.map(_.getDouble(1)))
-    }
-    val (tOn, yOn) = collectTI(diodeOn)
-    val (tOff, yOff) = collectTI(diodeOff)
-    calibrationHeightLocal(tOn, yOn, tOff, yOff)
-  }
+  def calibrationHeight(window: DataFrame): Option[Height] =
+    heights(collectDiodeRows(window, lit(true)))._1
 
-  /** Both spike windows' A8 heights in ONE collect: spike rows are tagged
-    * `(pre-window?, diode-on?)` executor-side and split locally — the same
-    * values as two [[calibrationHeight]] calls (same scan order within each
-    * subset), at 1 driver round trip instead of 4. On a cold JVM each
-    * round trip pays full scheduler+codegen latency (the r6 driver-bench
-    * tax on the single-file pipelines), so the merge matters there; the
-    * collected payload is unchanged — tens of spike rows, two doubles and
-    * two booleans each.
+  /** Both spike windows' A8 heights in ONE collect: the spike rows of the
+    * `__pos`-numbered frame `integ`, tagged `pre` when they precede the
+    * data window, split by [[heights]]. On a cold JVM each driver round
+    * trip pays full scheduler+codegen latency (the r6 driver-bench tax on
+    * the single-file pipelines), so one collect matters there; the payload
+    * is tens of spike rows, two doubles and two booleans each.
     */
   def calibrationHeights(
-      integ: DataFrame, dataStart: Long, postCal: Long): (Option[Height], Option[Height]) = {
-    val rows = integ
-      .filter((col("__pos") < dataStart || col("__pos") >= postCal) && (diodeOn || diodeOff))
-      .select((col("__pos") < dataStart).as("pre"), (col("CALSTATE") === 1).as("on"),
-        col("t"), col("intensity"))
-      .collect()
-    def part(pre: Boolean, on: Boolean): (Array[Double], Array[Double]) = {
-      val sel = rows.filter(r => r.getBoolean(0) == pre && r.getBoolean(1) == on)
-      (sel.map(_.getDouble(2)), sel.map(_.getDouble(3)))
+      integ: DataFrame, dataStart: Long, postCal: Long): (Option[Height], Option[Height]) =
+    heights(collectDiodeRows(
+      integ.filter(col("__pos") < dataStart || col("__pos") >= postCal),
+      col("__pos") < dataStart))
+
+  private def collectDiodeRows(df: DataFrame, pre: Column): Seq[(Boolean, Boolean, Double, Double)] =
+    df.filter(diodeOn || diodeOff)
+      .select(pre, col("CALSTATE") === 1, col("t"), col("intensity"))
+      .collect().toSeq
+      .map(r => (r.getBoolean(0), r.getBoolean(1), r.getDouble(2), r.getDouble(3)))
+
+  /** A8 for both spike windows from one file's diode rows `(pre-window?,
+    * diode-on?, t, intensity)` in row order: each window splits into its
+    * on and off rows (row order kept) for [[calibrationHeightLocal]].
+    * Returns the (pre, post) heights. [[graft.pipeline.Continuum.run]]
+    * collects these rows on the driver; [[graft.pipeline.Continuum.runAll]]
+    * gathers them per file executor-side.
+    */
+  def heights(rows: Seq[(Boolean, Boolean, Double, Double)]): (Option[Height], Option[Height]) = {
+    def window(pre: Boolean): Option[Height] = {
+      val (on, off) = rows.filter(_._1 == pre).partition(_._2)
+      calibrationHeightLocal(
+        on.map(_._3).toArray, on.map(_._4).toArray, off.map(_._3).toArray, off.map(_._4).toArray)
     }
-    val (tPreOn, yPreOn) = part(pre = true, on = true)
-    val (tPreOff, yPreOff) = part(pre = true, on = false)
-    val (tPostOn, yPostOn) = part(pre = false, on = true)
-    val (tPostOff, yPostOff) = part(pre = false, on = false)
-    (calibrationHeightLocal(tPreOn, yPreOn, tPreOff, yPreOff),
-      calibrationHeightLocal(tPostOn, yPostOn, tPostOff, yPostOff))
+    (window(pre = true), window(pre = false))
   }
 
-  /** A8 core on local arrays — shared by the single-file (driver collect)
-    * and multi-file ([[graft.pipeline.Continuum.runAll]] executor-side
-    * mapGroups) paths.
+  /** A8 core on one window's on and off rows (ref continuum.py:111-138):
+    * require ≥4 points each, RCR-fit both on mean-centered times, evaluate
+    * both fits at the midpoint of the two mean times, Δ = on(t)−off(t), σ by
+    * quadrature propagation. Returns None when either half has <4 points
+    * (ref continuum.py:137-138).
     */
-  def calibrationHeightLocal(
+  private def calibrationHeightLocal(
       tOn: Array[Double], yOn: Array[Double],
       tOff: Array[Double], yOff: Array[Double]): Option[Height] = {
     if (tOn.length >= 4 && tOff.length >= 4) {
@@ -93,48 +92,75 @@ object GainCal {
     } else None
   }
 
-  /** A9 — gain calibration (ref continuum.py:174-187) over a continuum frame
-    * with columns (t, intensity). Heights are per-file scalars.
+  /** A9's decision for one file: `mode` 0 leaves intensity as it is, 1
+    * divides it by `p`, 2 divides it by the height interpolated linearly
+    * from (`t1`, `p`) to (`t2`, `q`). See [[gain]].
+    */
+  final case class Gain(mode: Int, p: Double, q: Double, t1: Double, t2: Double)
+
+  private val noGain = Gain(0, 0.0, 0.0, 0.0, 0.0)
+  private def constant(h: Double) = Gain(1, h, 0.0, 0.0, 0.0)
+
+  /** A9 — the gain decision (ref continuum.py:174-187), the one
+    * implementation both continuum paths use. `extent` is the data
+    * window's (min t, max t), None when the window is empty; it is read
+    * only on the drift branch.
     *
-    * Semantics notes, pinned by tests:
+    * Semantics notes, pinned by GainCalSpec:
     *  - Python truthiness: a height of exactly 0.0 counts as "absent"
     *    (ref continuum.py:174 `if pre and post`), ported literally.
+    *  - z = |Δpre − Δpost| / sqrt(σpre² + σpost²) in JVM doubles: a zero
+    *    σ gives +∞ (drift) for unequal heights and NaN (mean height, since
+    *    `NaN >= 1.96` is false) for equal ones.
     *  - The z ≥ 1.96 drift branch in the reference rebinds a loop scalar and
     *    so never modifies the data (ref continuum.py:178-181 — a no-op as
     *    written). `strictCompat = true` reproduces the no-op;
     *    `strictCompat = false` (default) implements the evident intent:
     *    divide by the height linearly interpolated between the first and last
-    *    sample times (SURVEY §7.5.2).
+    *    sample times (SURVEY §7.5.2), or by the mean height when those
+    *    times are equal.
+    */
+  def gain(pre: Option[Height], post: Option[Height],
+      extent: => Option[(Double, Double)], strictCompat: Boolean): Gain =
+    (pre.filter(_.delta != 0.0), post.filter(_.delta != 0.0)) match {
+      case (Some(p), Some(q)) =>
+        val z = math.abs(p.delta - q.delta) / math.sqrt(p.sd * p.sd + q.sd * q.sd)
+        if (!(z >= 1.96)) constant((p.delta + q.delta) / 2)
+        else if (strictCompat) noGain // reference's no-op drift branch
+        else extent match {
+          case None => noGain
+          case Some((t1, t2)) if t2 == t1 => constant((p.delta + q.delta) / 2)
+          case Some((t1, t2)) => Gain(2, p.delta, q.delta, t1, t2)
+        }
+      case (Some(p), None) => constant(p.delta)
+      case (None, Some(q)) => constant(q.delta)
+      case (None, None) => noGain
+    }
+
+  /** A9's division as one Column over a [[Gain]]'s fields: literals in
+    * [[applyGain]], per-file columns in [[graft.pipeline.Continuum.runAll]].
+    */
+  def divide(intensity: Column, t: Column,
+      mode: Column, p: Column, q: Column, t1: Column, t2: Column): Column =
+    when(mode === 2, intensity / (p + (q - p) * ((t - t1) / (t2 - t1))))
+      .when(mode === 1, intensity / p)
+      .otherwise(intensity)
+
+  /** A9 over a continuum frame with columns (t, intensity): [[gain]] with
+    * the frame's t extent (one aggregate, run only on the drift branch),
+    * applied by [[divide]]. Heights are per-file scalars.
     */
   def applyGain(
       continuum: DataFrame,
       pre: Option[Height],
       post: Option[Height],
       strictCompat: Boolean = false): DataFrame = {
-    val truthyPre = pre.filter(_.delta != 0.0)
-    val truthyPost = post.filter(_.delta != 0.0)
-    (truthyPre, truthyPost) match {
-      case (Some(p), Some(q)) =>
-        val z = math.abs(p.delta - q.delta) / math.sqrt(p.sd * p.sd + q.sd * q.sd)
-        if (z >= 1.96) {
-          if (strictCompat) continuum // reference's no-op drift branch
-          else {
-            // Interpolated height between first and last times (input is
-            // time-ordered, so first/last = min/max; one cheap agg).
-            val Array(t1, t2) = continuum.agg(min(col("t")), max(col("t")))
-              .head().toSeq.map(_.asInstanceOf[Double]).toArray
-            val h =
-              if (t2 == t1) lit((p.delta + q.delta) / 2)
-              else lit(p.delta) + lit(q.delta - p.delta) * ((col("t") - lit(t1)) / lit(t2 - t1))
-            continuum.withColumn("intensity", col("intensity") / h)
-          }
-        } else
-          continuum.withColumn("intensity", col("intensity") / lit((p.delta + q.delta) / 2))
-      case (Some(p), None) =>
-        continuum.withColumn("intensity", col("intensity") / lit(p.delta))
-      case (None, Some(q)) =>
-        continuum.withColumn("intensity", col("intensity") / lit(q.delta))
-      case (None, None) => continuum
+    def extent = {
+      val r = continuum.agg(min(col("t")), max(col("t"))).head()
+      if (r.isNullAt(0)) None else Some((r.getDouble(0), r.getDouble(1)))
     }
+    val g = gain(pre, post, extent, strictCompat)
+    continuum.withColumn("intensity", divide(col("intensity"), col("t"),
+      lit(g.mode), lit(g.p), lit(g.q), lit(g.t1), lit(g.t2)))
   }
 }

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.functions.ArrayOps
 import graft.model.HeaderRecord
@@ -46,7 +46,7 @@ object Continuum {
     val (_, d2) = RangeFilters.filterFrequencyRanges(d, freqs, p.includeFreq, p.excludeFreq)
 
     // ST1 — three indices on the filtered frame (continuum.py:156).
-    // flagged is cached: the ST1 scan, both A8 height collects and the final
+    // flagged is cached: the ST1 scan, the A8 height collect and the final
     // consumer all read it. NOT unpersisted here — the returned frame is
     // lazy and still reads `flagged`; an eager unpersist would force the
     // final consumer to recompute the whole chain. Cache lifecycle is the
@@ -90,21 +90,23 @@ object Continuum {
     * synchronous jobs per file, which at 100k files makes the driver loop the
     * bottleneck; here the driver issues a constant number of jobs total).
     *
-    * Plan shape: two `localCheckpoint`s and no position window.
+    * Plan shape: one `localCheckpoint` and no position window.
     *  - `base`: one narrow projection computes (t, intensity) for every row
     *    (the wide DATA never reaches anything downstream of A1).
     *  - `idx`: the per-file ST1 scan over the F1-filtered `base` (secondary
     *    sort, O(1) state per file) yields one row per file with the ROWIDX
     *    thresholds of the data window.
-    *  - The A8 heights (a mapGroups over the spike windows only), the data
-    *    window's t extent (a plain aggregate) and the final gain division
-    *    each reread `base` through the same narrow filter and broadcast-join
-    *    the per-file frame; every window test is a ROWIDX comparison. The
-    *    A9 branch decision is a codegen'd `when` over the per-file frame.
+    *  - `params`: one aggregate per file over the filtered `base` joined
+    *    with `idx` gathers the data window's t extent and the spike
+    *    windows' diode rows; a typed map fits the A8 heights and takes the
+    *    A9 decision with [[GainCal.heights]] and [[GainCal.gain]], the
+    *    scalar code [[run]] uses.
+    *  - The gain division rereads the filtered `base` and broadcast-joins
+    *    `params`; every window test is a ROWIDX comparison.
     *
     * Semantics per file are identical to [[run]] (same scan, same fits, same
-    * truthiness/z/strictCompat branches, interpolation over the data
-    * window's min/max t), pinned by ContinuumAllSpec against [[run]].
+    * A9 decision, interpolation over the data window's min/max t), pinned
+    * by ContinuumAllSpec against [[run]].
     */
   def runAll(df: DataFrame, header: Header, p: Params): DataFrame = {
     val spark = df.sparkSession
@@ -169,117 +171,46 @@ object Continuum {
     // `pos < data_start` ⇔ `ROWIDX < __ds`, `pos >= post_cal_start` ⇔
     // `ROWIDX >= __pc` — as Spectrum.runAll does for its off index (r14).
     //
-    // Bounded per-group memory (VERDICT r14 item 4): the former shape
-    // materialized each file's FULL row set in one mapGroups (`it.toArray`)
-    // — fine for real observations (thousands of rows), pathological on
-    // the 15M-rows-per-file sf10 fixture. Now only the pre/post
-    // calibration WINDOWS (tens of rows per file) ever reach a group
-    // buffer: the ST1 thresholds come from the O(1)-state streaming scan
-    // ([[CalibrationScan.scanPerFile]], with the per-file A3 factor as a
-    // column), broadcast back onto the filtered frame; the spike-window
-    // filter bounds what the heights mapGroups sees; and the data window
-    // reduces to a min/max/count aggregation. The A9 branch decision
-    // becomes a codegen'd CaseWhen over the tiny per-file frame — same op
-    // order as the mapGroups had, so ContinuumAllSpec's bit-parity against
-    // [[run]] still pins it.
+    // Bounded per-group memory (VERDICT r14 item 4): no group buffer ever
+    // holds a file's FULL row set (pathological on the 15M-rows-per-file
+    // sf10 fixture). The ST1 thresholds come from the O(1)-state streaming
+    // scan ([[CalibrationScan.scanPerFile]], with the per-file A3 factor as
+    // a column), and the one per-file aggregate below collects only the
+    // diode rows of the pre/post calibration windows (tens of rows).
     val idx = CalibrationScan.scanPerFile(d.join(broadcast(cc), "FILE_ID"), col("__cc"),
         header.obsmode)
       .select(col("FILE_ID"),
         col("data_start_rowidx").as("__ds"),
         col("post_cal_start_rowidx").as("__pc"))
-      .localCheckpoint() // per-file frame, read three times below
     val rid = col("ROWIDX")
+    val inWindow = rid >= col("__ds") && rid < col("__pc")
 
-    // Spike rows only — the bounded group payload (diode on/off rows of
-    // the two calibration windows; the height fit reads nothing else).
-    val spikes = d.join(broadcast(idx), "FILE_ID")
-      .filter((rid < col("__ds") || rid >= col("__pc")) && col("SWPVALID") === 0)
-      .select(col("FILE_ID"), rid,
-        (rid < col("__ds")).as("__pre"),
-        (col("CALSTATE") === 1).as("__on"), col("t"), col("intensity"))
-    val heights = spikes
-      .as[(String, Long, Boolean, Boolean, Double, Double)]
-      .groupByKey(_._1)
-      .mapGroups { (file, it) =>
-        val rows = it.toArray.sortBy(_._2) // tens of rows: spike windows only, ROWIDX order
-        def h(pre: Boolean): Option[GainCal.Height] = {
-          val w = rows.filter(_._3 == pre)
-          val on = w.filter(_._4)
-          val off = w.filterNot(_._4)
-          GainCal.calibrationHeightLocal(
-            on.map(_._5), on.map(_._6), off.map(_._5), off.map(_._6))
-        }
-        // Python-truthiness filter (delta == 0.0 counts as absent), as in
-        // the mapGroups this replaces.
-        val pre = h(pre = true).filter(_.delta != 0.0)
-        val post = h(pre = false).filter(_.delta != 0.0)
-        (file, pre.isDefined, pre.fold(0.0)(_.delta), pre.fold(0.0)(_.sd),
-          post.isDefined, post.fold(0.0)(_.delta), post.fold(0.0)(_.sd))
+    // One aggregate per file feeds A8 and A9: the data window's t extent
+    // and the diode rows of the two spike windows (tens of rows per file;
+    // the height fit reads nothing else). A typed map then fits the heights
+    // and decides the gain with the same scalar code [[run]] uses.
+    val strictCompat = p.strictCompat
+    val params = d.join(broadcast(idx), "FILE_ID")
+      .groupBy(col("FILE_ID"), col("__ds"), col("__pc"))
+      .agg(min(when(inWindow, col("t"))).as("__w1"), max(when(inWindow, col("t"))).as("__w2"),
+        collect_list(when(!inWindow && (GainCal.diodeOn || GainCal.diodeOff),
+          struct(rid.as("_1"), (col("CALSTATE") === 1).as("_2"),
+            col("t").as("_3"), col("intensity").as("_4")))).as("__diode"))
+      .as[(String, Long, Long, Option[Double], Option[Double], Seq[(Long, Boolean, Double, Double)])]
+      .map { case (file, ds, pc, w1, w2, diode) =>
+        val (pre, post) = GainCal.heights(
+          diode.sortBy(_._1).map { case (k, on, t, y) => (k < ds, on, t, y) }) // ROWIDX order
+        val g = GainCal.gain(pre, post, w1.zip(w2), strictCompat)
+        (file, ds, pc, g.mode, g.p, g.q, g.t1, g.t2)
       }
-      .toDF("FILE_ID", "__preDef", "__preD", "__preSd",
-        "__postDef", "__postD", "__postSd")
+      .toDF("FILE_ID", "__ds", "__pc", "__mode", "__p", "__q", "__t1", "__t2")
 
-    // Data-window extent: a plain aggregation — no group buffer at all.
-    val winStats = d.join(broadcast(idx), "FILE_ID")
-      .filter(rid >= col("__ds") && rid < col("__pc"))
-      .groupBy(col("FILE_ID"))
-      .agg(min(col("t")).as("__w1"), max(col("t")).as("__w2"),
-        count(lit(1)).as("__wn"))
-
-    // Per-file gain parameters: mode 0 = identity, 1 = divide by constant
-    // `pv`, 2 = divide by the height interpolated between (t1, pv)..(t2, qv).
-    // Branch decision mirrors GainCal.applyGain exactly (same IEEE op
-    // order as the scalar form: z = |a−b| / sqrt(sd_a² + sd_b²)). The
-    // zero-denominator case is guarded EXPLICITLY rather than divided:
-    // ANSI Spark errors on double division by zero where the JVM yields
-    // ±Infinity/NaN, and Spark orders NaN ABOVE all doubles where the
-    // JVM's `NaN >= 1.96` is false — both would diverge from the scalar
-    // branch this mirrors (|Δ| > 0 over a zero sd is the JVM's Infinity
-    // → drift; |Δ| = 0 is its NaN → no drift).
-    val preDef = coalesce(col("__preDef"), lit(false))
-    val postDef = coalesce(col("__postDef"), lit(false))
-    val a = col("__preD")
-    val b = col("__postD")
-    val zDenom =
-      sqrt(col("__preSd") * col("__preSd") + col("__postSd") * col("__postSd"))
-    val driftCond = when(zDenom === 0.0, abs(a - b) > 0.0)
-      .otherwise(abs(a - b) / zDenom >= 1.96)
-    val avgH = (a + b) / 2
-    val winEmpty = coalesce(col("__wn"), lit(0L)) === 0
-    def dec5(m: Int, pv: Column, qv: Column, t1: Column, t2: Column) =
-      struct(lit(m).as("m"), pv.as("p"), qv.as("q"), t1.as("t1"), t2.as("t2"))
-    val zero5 = dec5(0, lit(0.0), lit(0.0), lit(0.0), lit(0.0))
-    val mode1 = (v: Column) => dec5(1, v, lit(0.0), lit(0.0), lit(0.0))
-    val drift =
-      if (p.strictCompat) zero5
-      else when(winEmpty, zero5)
-        .when(col("__w2") === col("__w1"), mode1(avgH))
-        .otherwise(dec5(2, a, b, col("__w1"), col("__w2")))
-    val decision =
-      when(preDef && postDef, when(driftCond, drift).otherwise(mode1(avgH)))
-        .when(preDef, mode1(a))
-        .when(postDef, mode1(b))
-        .otherwise(zero5)
-    val params = idx
-      .join(heights, Seq("FILE_ID"), "left")
-      .join(winStats, Seq("FILE_ID"), "left")
-      .select(col("FILE_ID"), col("__ds"), col("__pc"),
-        decision.getField("m").as("__mode"),
-        decision.getField("p").as("__p"),
-        decision.getField("q").as("__q"),
-        decision.getField("t1").as("__t1"),
-        decision.getField("t2").as("__t2"))
-
-    // Broadcast the tiny per-file parameter table back onto the filtered
-    // frame; the gain division is a codegen'd expression (same op order as
-    // GainCal.applyGain for bit parity with the single-file path).
-    val h = col("__p") + (col("__q") - col("__p")) * ((col("t") - col("__t1")) / (col("__t2") - col("__t1")))
+    // Broadcast the tiny per-file gain table back onto the filtered frame.
     d.join(broadcast(params), "FILE_ID")
-      .filter(rid >= col("__ds") && rid < col("__pc"))
+      .filter(inWindow)
       .select(col("FILE_ID"), col("t"),
-        when(col("__mode") === 2, col("intensity") / h)
-          .when(col("__mode") === 1, col("intensity") / col("__p"))
-          .otherwise(col("intensity")).as("intensity"))
+        GainCal.divide(col("intensity"), col("t"), col("__mode"),
+          col("__p"), col("__q"), col("__t1"), col("__t2")).as("intensity"))
       .orderBy(col("FILE_ID"), col("t"))
   }
 }

@@ -67,13 +67,6 @@ object TextIngest {
       options: Map[String, String] = Map.empty): (DataFrame, DataFrame) =
     splitCsv(spark.read.text(path), schema, options)
 
-  /** Streaming form of [[readCsv]] — both halves stateless, as with
-    * [[readJsonlStream]].
-    */
-  def readCsvStream(spark: SparkSession, path: String, schema: StructType,
-      options: Map[String, String] = Map.empty): (DataFrame, DataFrame) =
-    splitCsv(spark.readStream.text(path), schema, options)
-
   /** The CSV split over any one-string-column `value` frame. */
   def splitCsv(lines: DataFrame, schema: StructType,
       options: Map[String, String] = Map.empty): (DataFrame, DataFrame) = {

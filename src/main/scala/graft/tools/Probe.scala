@@ -127,8 +127,7 @@ object Probe {
   /** Warm pass, then the measured pass with a per-job listener. */
   private def auditJobs(spark: SparkSession, sfDir: String, name: String,
       fn: (SparkSession, String) => DataFrame): Boolean = {
-    // job ids are read per job group, so the warm pass gets its own
-    if (!Bench.measure(spark, sfDir, s"$name#warm", fn, gc = true).ok) return false
+    if (!Bench.measure(spark, sfDir, name, fn, gc = true).ok) return false
     val jobs = new ConcurrentLinkedQueue[(Int, Int, String)]()
     val starts = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
     val durs = new java.util.concurrent.ConcurrentHashMap[Int, Double]()

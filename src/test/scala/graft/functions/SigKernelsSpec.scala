@@ -2,7 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.functions._
 import graft.SparkTestBase
-import graft.llm.{Dedup, TextAnalysis}
+import graft.llm.{Dedup, TextAnalysis, TextAnalysisSpec}
 
 /** One-pass signature kernels vs the exploded aggregate formulations they
   * replaced: every kernel must reproduce the round-4 values bit-for-bit on
@@ -12,6 +12,7 @@ import graft.llm.{Dedup, TextAnalysis}
   */
 class SigKernelsSpec extends SparkTestBase {
   import spark.implicits._
+  import SigKernelsSpec._
 
   private val corpus = Seq(
     (1L, "the quick brown fox jumps over the lazy dog and runs far away home"),
@@ -28,27 +29,27 @@ class SigKernelsSpec extends SparkTestBase {
 
   test("murmur minhash kernel == exploded aggregate (and doc drop-out set)") {
     val k = Dedup.minhashSignatures(corpus).as[(Long, Seq[Int])].collect().toMap
-    val e = Dedup.minhashSignaturesExploded(corpus).as[(Long, Seq[Int])].collect().toMap
+    val e = minhashSignaturesExploded(corpus).as[(Long, Seq[Int])].collect().toMap
     assert(k == e)
     assert(!k.contains(5L) && !k.contains(6L)) // no shingles → dropped on both paths
   }
 
   test("poly minhash kernel == exploded aggregate") {
     val k = Dedup.minhashSignaturesPoly(corpus).as[(Long, Seq[Long])].collect().toMap
-    val e = Dedup.minhashSignaturesPolyExploded(corpus).as[(Long, Seq[Long])].collect().toMap
+    val e = minhashSignaturesPolyExploded(corpus).as[(Long, Seq[Long])].collect().toMap
     assert(k == e)
   }
 
   test("xxhash simhash kernel == exploded vote aggregate") {
     val k = Dedup.simhashSignatures(corpus).as[(Long, Long)].collect().toMap
-    val e = Dedup.simhashSignaturesExploded(corpus).as[(Long, Long)].collect().toMap
+    val e = simhashSignaturesExploded(corpus).as[(Long, Long)].collect().toMap
     assert(k == e)
     assert(k.keySet == (1L to 10L).toSet) // every doc has >= 1 token
   }
 
   test("poly simhash kernel == exploded vote aggregate") {
     val k = Dedup.simhashSignaturesPoly(corpus).as[(Long, Long)].collect().toMap
-    val e = Dedup.simhashSignaturesPolyExploded(corpus).as[(Long, Long)].collect().toMap
+    val e = simhashSignaturesPolyExploded(corpus).as[(Long, Long)].collect().toMap
     assert(k == e)
   }
 
@@ -63,7 +64,7 @@ class SigKernelsSpec extends SparkTestBase {
   test("ngram count kernels == exploded count pipeline") {
     val k = TextAnalysis.ngramCountsBy(corpus, "doc_id", "text", 2, 5)
       .as[(Long, Long, Long)].collect().map(r => r._1 -> ((r._2, r._3))).toMap
-    val e = TextAnalysis.ngramCountsByExploded(corpus, "doc_id", "text", 2, 5)
+    val e = TextAnalysisSpec.ngramCountsByExploded(corpus, "doc_id", "text", 2, 5)
       .as[(Long, Long, Long)].collect().map(r => r._1 -> ((r._2, r._3))).toMap
     assert(k == e)
   }
@@ -168,5 +169,83 @@ class SigKernelsSpec extends SparkTestBase {
     intercept[IllegalArgumentException](SigKernels.wordNgramsDistinct($"text", 0))
     intercept[IllegalArgumentException](SigKernels.wordNgramCount($"text", 0))
     intercept[IllegalArgumentException](SigKernels.charNgramCount($"text", 0))
+  }
+}
+
+/** The explode+aggregate signature formulations the one-pass kernels
+  * replaced, kept here as the cross-checks the kernels are pinned against.
+  */
+object SigKernelsSpec {
+  import org.apache.spark.sql.DataFrame
+
+  /** The round-3/4 explode+aggregate formulation of `Dedup.minhashSignatures`
+    * (same values): explode shingles to rows, aggregate numHashes salted
+    * murmur3 columns with map-side partial `min`s. Correct and distributed,
+    * but the 64-column hash aggregate generates a huge codegen class (slow
+    * to JIT on a cold JVM) and shuffles one row per doc per partition —
+    * the cross-check `Dedup.minhashSignatures` is pinned against.
+    */
+  def minhashSignaturesExploded(
+      df: DataFrame,
+      idCol: String = "doc_id",
+      textCol: String = "text",
+      numHashes: Int = 64,
+      shingleSize: Int = 3): DataFrame = {
+    val shingled = df.select(col(idCol).as("id"),
+      explode(TextAnalysis.wordNgrams(col(textCol), shingleSize)).as("sh"))
+    val mins = (0 until numHashes).map(i => min(hash(col("sh"), lit(i))).as(s"h$i"))
+    shingled.groupBy(col("id")).agg(mins.head, mins.tail: _*)
+      .select(col("id"), array((0 until numHashes).map(i => col(s"h$i")): _*).as("sig"))
+  }
+
+  /** Explode+aggregate formulation of `Dedup.minhashSignaturesPoly` (same
+    * values) — the specs' cross-check; see [[minhashSignaturesExploded]].
+    */
+  def minhashSignaturesPolyExploded(
+      df: DataFrame,
+      idCol: String = "doc_id",
+      textCol: String = "text",
+      numHashes: Int = 64,
+      shingleSize: Int = 3): DataFrame = {
+    val p = 1000000007L
+    val shingled = df.select(col(idCol).as("id"),
+        explode(TextAnalysis.wordNgrams(col(textCol), shingleSize)).as("sh"))
+      .withColumn("fp", TextAnalysis.fingerprint(col("sh")))
+    val mins = (0 until numHashes).map(i =>
+      min((lit(2L * i + 1) * col("fp") + lit(31L * i + 7)) % p).as(s"h$i"))
+    shingled.groupBy(col("id")).agg(mins.head, mins.tail: _*)
+      .select(col("id"), array((0 until numHashes).map(i => col(s"h$i")): _*).as("sig"))
+  }
+
+  /** Explode+vote-aggregate formulation of `Dedup.simhashSignatures` (same
+    * values) — the specs' cross-check; see [[minhashSignaturesExploded]].
+    */
+  def simhashSignaturesExploded(df: DataFrame, idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
+    val toks = df.select(col(idCol).as("id"),
+        explode(TextAnalysis.tokensWs(col(textCol))).as("t"))
+      .withColumn("h", xxhash64(col("t")))
+    val votes = (0 until 64).map(b =>
+      sum(when(shiftright(col("h"), b).bitwiseAND(lit(1L)) === 1L, 1L).otherwise(-1L)).as(s"v$b"))
+    toks.groupBy(col("id")).agg(votes.head, votes.tail: _*)
+      .select(col("id"),
+        (0 until 64).map(b => when(col(s"v$b") > 0, lit(1L << b)).otherwise(lit(0L)))
+          .reduce(_ + _).as("sim"))
+  }
+
+  /** Explode+vote-aggregate formulation of `Dedup.simhashSignaturesPoly` (same
+    * values) — the specs' cross-check.
+    */
+  def simhashSignaturesPolyExploded(df: DataFrame, idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
+    val p = 1000000007L
+    val toks = df.select(col(idCol).as("id"),
+        explode(TextAnalysis.tokensWs(col(textCol))).as("t"))
+      .withColumn("fp", TextAnalysis.fingerprint(col("t")))
+    val votes = (0 until 64).map(b =>
+      sum(when((lit(2L * b + 1) * col("fp") + lit(31L * b + 7)) % p % 2L === 1L, 1L)
+        .otherwise(-1L)).as(s"v$b"))
+    toks.groupBy(col("id")).agg(votes.head, votes.tail: _*)
+      .select(col("id"),
+        (0 until 64).map(b => when(col(s"v$b") > 0, lit(1L << b)).otherwise(lit(0L)))
+          .reduce(_ + _).as("sim"))
   }
 }

@@ -50,13 +50,13 @@ class TextAnalysisSpec extends SparkTestBase {
     ).toDF("doc_id", "text")
     val arrW = df.select($"doc_id", TextAnalysis.wordNgrams($"text", 2).as("g"))
       .as[(Long, Seq[String])].collect().map { case (id, g) => id -> g.toSet }.toMap
-    val expW = TextAnalysis.explodedWordNgrams(df, "doc_id", "text", 2)
+    val expW = TextAnalysisSpec.explodedWordNgrams(df, "doc_id", "text", 2)
       .as[(Long, String)].collect().groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
     assert((arrW.filter(_._2.nonEmpty): Map[Long, Set[String]]) == expW)
 
     val arrC = df.select($"doc_id", TextAnalysis.charNgrams($"text", 3).as("g"))
       .as[(Long, Seq[String])].collect().map { case (id, g) => id -> g.toSet }.toMap
-    val expC = TextAnalysis.explodedCharNgrams(df, "doc_id", "text", 3)
+    val expC = TextAnalysisSpec.explodedCharNgrams(df, "doc_id", "text", 3)
       .as[(Long, String)].collect().groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
     assert((arrC.filter(_._2.nonEmpty): Map[Long, Set[String]]) == expC)
 
@@ -447,5 +447,69 @@ class TextAnalysisSpec extends SparkTestBase {
     assert(got(3L) == "quote line tail inline() and em")
     assert(got(4L) == "no markdown at all")
     assert(got(5L) == "deep head normal rule above was stars")
+  }
+}
+
+/** Test-only exploded n-gram forms of `TextAnalysis`. */
+object TextAnalysisSpec {
+  import org.apache.spark.sql.DataFrame
+  import org.apache.spark.sql.expressions.Window
+  import org.apache.spark.sql.functions._
+  import TextAnalysis.tokensWs
+
+  // The array-column n-gram forms build each doc's n-gram set inside nested
+  // HOF lambdas, which Catalyst evaluates INTERPRETED. The round-4 exploded
+  // construction produced the same distinct n-grams as (id, gram) ROWS:
+  // posexplode the tokens, window `lead` per doc for the n-1 following
+  // tokens, concat, distinct — every operator whole-stage-codegen'd,
+  // shuffling one row per token. The kernels replaced it; it stays here as
+  // a cross-check.
+
+  /** Distinct word n-grams per doc as rows (id, gram). Docs with fewer
+    * than n tokens produce no rows (== empty set in the array form).
+    */
+  def explodedWordNgrams(
+      df: DataFrame, idCol: String, textCol: String, n: Int): DataFrame = {
+    val toks = df.select(col(idCol), posexplode(tokensWs(col(textCol))).as(Seq("__pos", "__tok")))
+    val w = Window.partitionBy(col(idCol)).orderBy(col("__pos"))
+    val withLeads = (1 until n).foldLeft(toks) { (d, i) =>
+      d.withColumn(s"__t$i", lead(col("__tok"), i).over(w))
+    }
+    val parts = col("__tok") +: (1 until n).map(i => col(s"__t$i"))
+    val complete = if (n == 1) withLeads else withLeads.filter(col(s"__t${n - 1}").isNotNull)
+    complete
+      .select(col(idCol), concat_ws(" ", parts: _*).as("gram"))
+      .distinct()
+  }
+
+  /** Distinct character n-grams per doc as rows (id, gram) — same
+    * construction over the character sequence.
+    */
+  def explodedCharNgrams(df: DataFrame, idCol: String, textCol: String, n: Int): DataFrame = {
+    val toks = df.select(col(idCol), posexplode(split(col(textCol), "")).as(Seq("__pos", "__c")))
+    val w = Window.partitionBy(col(idCol)).orderBy(col("__pos"))
+    val withLeads = (1 until n).foldLeft(toks) { (d, i) =>
+      d.withColumn(s"__c$i", lead(col("__c"), i).over(w))
+    }
+    val parts = col("__c") +: (1 until n).map(i => col(s"__c$i"))
+    val complete = if (n == 1) withLeads else withLeads.filter(col(s"__c${n - 1}").isNotNull)
+    complete.select(col(idCol), concat(parts: _*).as("gram")).distinct()
+  }
+
+  /** The round-4 exploded formulation of `TextAnalysis.ngramCountsBy`
+    * (same values) — the cross-check SigKernelsSpec pins the kernel against.
+    */
+  def ngramCountsByExploded(
+      df: DataFrame, idCol: String, textCol: String,
+      wordN: Int, charN: Int): DataFrame = {
+    val ids = df.select(col(idCol))
+    val wc = explodedWordNgrams(df, idCol, textCol, wordN)
+      .groupBy(col(idCol)).agg(count(lit(1)).as("__wc"))
+    val cc = explodedCharNgrams(df, idCol, textCol, charN)
+      .groupBy(col(idCol)).agg(count(lit(1)).as("__cc"))
+    ids.join(wc, Seq(idCol), "left").join(cc, Seq(idCol), "left")
+      .select(col(idCol),
+        coalesce(col("__wc"), lit(0L)).as(s"n_${wordN}grams"),
+        coalesce(col("__cc"), lit(0L)).as(s"n_char$charN"))
   }
 }

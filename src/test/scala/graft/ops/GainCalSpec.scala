@@ -73,4 +73,60 @@ class GainCalSpec extends SparkTestBase {
       .orderBy($"t").as[(Double, Double)].collect()
     assert(none.toSeq == Seq((0.0, 12.0), (10.0, 24.0))) // untouched
   }
+
+  test("gain: sd 0 with unequal heights is z = +Infinity, the drift branch") {
+    assert(gain(Some(Height(2.0, 0.0)), Some(Height(4.0, 0.0)), Some((0.0, 10.0)), strictCompat = false)
+      == Gain(2, 2.0, 4.0, 0.0, 10.0))
+  }
+
+  test("gain: equal heights with sd 0 is z = NaN, the mean-height branch") {
+    assert(gain(Some(Height(3.0, 0.0)), Some(Height(3.0, 0.0)), Some((0.0, 10.0)), strictCompat = false)
+      == Gain(1, 3.0, 0.0, 0.0, 0.0))
+  }
+
+  test("gain: a drifting pair over an empty window leaves intensity as it is") {
+    assert(gain(Some(Height(2.0, 0.01)), Some(Height(4.0, 0.01)), None, strictCompat = false).mode == 0)
+  }
+
+  test("gain: a drifting pair over one sample time divides by the mean height") {
+    assert(gain(Some(Height(2.0, 0.01)), Some(Height(4.0, 0.01)), Some((5.0, 5.0)), strictCompat = false)
+      == Gain(1, 3.0, 0.0, 0.0, 0.0))
+  }
+
+  test("gain: strictCompat drift is the reference's no-op") {
+    assert(gain(Some(Height(2.0, 0.01)), Some(Height(4.0, 0.01)), Some((0.0, 10.0)), strictCompat = true)
+      == Gain(0, 0.0, 0.0, 0.0, 0.0))
+  }
+
+  test("gain: a 0.0 height counts as absent, and the extent is read only on the drift branch") {
+    def noExtent: Option[(Double, Double)] = fail("extent read off the drift branch")
+    assert(gain(Some(Height(0.0, 0.1)), Some(Height(4.0, 0.1)), noExtent, strictCompat = false)
+      == Gain(1, 4.0, 0.0, 0.0, 0.0))
+    assert(gain(Some(Height(2.0, 0.1)), Some(Height(0.0, 0.1)), noExtent, strictCompat = false)
+      == Gain(1, 2.0, 0.0, 0.0, 0.0))
+    assert(gain(Some(Height(0.0, 0.1)), Some(Height(0.0, 0.1)), noExtent, strictCompat = false).mode == 0)
+    assert(gain(None, None, noExtent, strictCompat = false).mode == 0)
+  }
+
+  test("heights over a frame's diode rows == calibrationHeights and calibrationHeight on it") {
+    // (__pos, CALSTATE, SWPVALID, t, intensity): spike windows at pos < 12
+    // and pos >= 28 with noisy, sloped levels; pos 3 is a sweep-invalid row
+    // and pos 30 an unknown diode state, which neither form fits.
+    val rows = (0 until 40).map { i =>
+      val on = i % 2
+      val swp = if (i == 3) 1 else 0
+      val cal = if (i == 30) 2 else on
+      (i.toLong, cal, swp, i * 0.5, 10.0 + 3.0 * on + 0.1 * i + math.sin(i * 1.7))
+    }
+    val frame = rows.toDF("__pos", "CALSTATE", "SWPVALID", "t", "intensity")
+    val (dataStart, postCal) = (12L, 28L)
+    val diode = rows.filter(r => r._3 == 0 && (r._2 == 0 || r._2 == 1))
+      .filter(r => r._1 < dataStart || r._1 >= postCal)
+      .map(r => (r._1 < dataStart, r._2 == 1, r._4, r._5))
+    val (pre, post) = heights(diode)
+    assert(pre.isDefined && post.isDefined)
+    assert(calibrationHeights(frame, dataStart, postCal) == ((pre, post)))
+    assert(calibrationHeight(frame.filter($"__pos" < dataStart)) == pre)
+    assert(calibrationHeight(frame.filter($"__pos" >= postCal)) == post)
+  }
 }

@@ -35,8 +35,6 @@ class ProbeSpec extends SparkTestBase {
   }
 
   test("time prints seconds, jobs and codegen compiles per query") {
-    // not a query the other tests measure: Bench counts a query's jobs by
-    // its job group, and the status tracker keeps a group's earlier jobs
     val (code, out, _) = probe("time", sf, "q_c2_freqrange")
     assert(code == 0)
     assert("""(?m)^TIMED q_c2_freqrange \d+\.\d\d s jobs=\d+ compiles=\d+$""".r

@@ -1,12 +1,14 @@
 #!/bin/bash
 # Run a graft main class directly on the compiled classes + /opt/spark/jars,
 # bypassing the sbt server lock (lets Bench/Verify run while sbt compiles).
+# src/main/resources is on the classpath because `sbt compile` does not copy
+# it (META-INF/services registers the sdfits and warc connectors).
 # Usage: tools/run_main.sh <main> [args...]   (env vars pass through)
 #   mains: graft.Bench, graft.Verify, graft.ScaleData, graft.tools.Probe,
 #          graft.tools.GraphSumProbe, graft.tools.StreamInvariance
 set -euo pipefail
 cd "$(dirname "$0")/.."
-CP="target/scala-2.13/classes:/opt/spark/jars/*"
+CP="target/scala-2.13/classes:src/main/resources:/opt/spark/jars/*"
 ADD_OPENS=(
   java.base/java.lang java.base/java.lang.invoke java.base/java.lang.reflect
   java.base/java.io java.base/java.net java.base/java.nio java.base/java.util
