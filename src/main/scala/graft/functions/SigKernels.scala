@@ -137,6 +137,22 @@ object SigImpl {
     sim
   }
 
+  /** Adds a flush window's bit-sliced counts into `ones`: bit k of the
+    * count for bit b is bit b of `s<k>`. A method with the slices as
+    * arguments, not a closure over [[simhashXx]]'s locals, so they stay
+    * primitive locals there instead of boxed `LongRef`s.
+    */
+  private def addSlices(ones: Array[Int],
+      s0: Long, s1: Long, s2: Long, s3: Long, s4: Long, s5: Long): Unit = {
+    var b = 0
+    while (b < 64) {
+      ones(b) += (((s0 >>> b) & 1L) + (((s1 >>> b) & 1L) << 1) +
+        (((s2 >>> b) & 1L) << 2) + (((s3 >>> b) & 1L) << 3) +
+        (((s4 >>> b) & 1L) << 4) + (((s5 >>> b) & 1L) << 5)).toInt
+      b += 1
+    }
+  }
+
   /** SimHash-64, Spark-xxhash64 token hash (seed 42), occurrence-weighted
     * votes — same values as the exploded vote aggregation.
     *
@@ -156,17 +172,6 @@ object SigImpl {
     val ones = new Array[Int](64)
     var s0 = 0L; var s1 = 0L; var s2 = 0L; var s3 = 0L; var s4 = 0L; var s5 = 0L
     var inBlock = 0
-    def flush(): Unit = {
-      var b = 0
-      while (b < 64) {
-        ones(b) += (((s0 >>> b) & 1L) + (((s1 >>> b) & 1L) << 1) +
-          (((s2 >>> b) & 1L) << 2) + (((s3 >>> b) & 1L) << 3) +
-          (((s4 >>> b) & 1L) << 4) + (((s5 >>> b) & 1L) << 5)).toInt
-        b += 1
-      }
-      s0 = 0L; s1 = 0L; s2 = 0L; s3 = 0L; s4 = 0L; s5 = 0L
-      inBlock = 0
-    }
     var i = 0
     while (i < n) {
       var carry = XxHash64Function.hash(UTF8String.fromString(w(i)), StringType, 42L)
@@ -177,10 +182,14 @@ object SigImpl {
       t0 = s4 & carry; s4 ^= carry; carry = t0
       s5 ^= carry // counts reach at most 63 per flush window — no carry out
       inBlock += 1
-      if (inBlock == 63) flush()
+      if (inBlock == 63) {
+        addSlices(ones, s0, s1, s2, s3, s4, s5)
+        s0 = 0L; s1 = 0L; s2 = 0L; s3 = 0L; s4 = 0L; s5 = 0L
+        inBlock = 0
+      }
       i += 1
     }
-    if (inBlock > 0) flush()
+    if (inBlock > 0) addSlices(ones, s0, s1, s2, s3, s4, s5)
     var sim = 0L
     var b = 0
     while (b < 64) { if (2 * ones(b) > n) sim |= (1L << b); b += 1 }

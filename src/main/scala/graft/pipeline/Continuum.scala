@@ -2,6 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.KeyedCheckpoint
 import graft.functions.ArrayOps
 import graft.model.HeaderRecord
 import graft.model.HeaderRecord.Header
@@ -90,12 +91,14 @@ object Continuum {
     * synchronous jobs per file, which at 100k files makes the driver loop the
     * bottleneck; here the driver issues a constant number of jobs total).
     *
-    * Plan shape: one `localCheckpoint` and no position window.
+    * Plan shape: one checkpoint and no position window.
     *  - `base`: one narrow projection computes (t, intensity) for every row
-    *    (the wide DATA never reaches anything downstream of A1).
-    *  - `idx`: the per-file ST1 scan over the F1-filtered `base` (secondary
-    *    sort, O(1) state per file) yields one row per file with the ROWIDX
-    *    thresholds of the data window.
+    *    (the wide DATA never reaches anything downstream of A1), checkpointed
+    *    with the partitioning and order of its input.
+    *  - `cc`: the A3 factor per file, one aggregate.
+    *  - `idx`: the per-file ST1 scan over the F1-filtered `base` (sorted
+    *    per-file groups, O(1) state per file) yields one row per file with
+    *    the ROWIDX thresholds of the data window.
     *  - `params`: one aggregate per file over the filtered `base` joined
     *    with `idx` gathers the data window's t extent and the spike
     *    windows' diode rows; a typed map fits the A8 heights and takes the
@@ -103,6 +106,11 @@ object Continuum {
     *    scalar code [[run]] uses.
     *  - The gain division rereads the filtered `base` and broadcast-joins
     *    `params`; every window test is a ROWIDX comparison.
+    *
+    * Jobs: the checkpoint, three broadcasts (`cc`, `idx`, `params`) and the
+    * final range sort's three. Over input grouped by FILE_ID and sorted by
+    * ROWIDX, a stamped SDFITS directory, `cc`, the scan and `params` need no
+    * exchange and the scan no sort; otherwise each shuffles once.
     *
     * Semantics per file are identical to [[run]] (same scan, same fits, same
     * A9 decision, interpolation over the data window's min/max t), pinned
@@ -141,7 +149,7 @@ object Continuum {
       .keptChannelIndices(freqs, p.includeFreq, p.excludeFreq)
       .map(kept => ArrayOps.pickChannels(col("DATA"), kept))
       .getOrElse(col("DATA"))
-    val base = df.select(
+    val projected = df.select(
       col("FILE_ID").cast("string").as("FILE_ID"),
       col("ROWIDX").cast("long").as("ROWIDX"),
       col("IFNUM").cast("int").as("IFNUM"),
@@ -152,11 +160,18 @@ object Continuum {
       RangeFilters.relSeconds(col("DATE_OBS"), t0).as("t"),
       when(f1, ArrayOps.arraySum(croppedData))
         .otherwise(lit(null).cast("double")).as("intensity"))
-      .localCheckpoint()
+    // The checkpoint keeps the source's partitioning and order: over a
+    // stamped SDFITS directory (key-grouped by FILE_ID, sorted by ROWIDX,
+    // kept through the projection because FILE_ID is already a string and
+    // ROWIDX a long) every per-file step below then runs without a shuffle.
+    val base = KeyedCheckpoint.localCheckpoint(projected)
 
-    // A3 per file, in-plan (no driver agg): |IFNUM| x |PLNUM| distinct.
+    // A3 per file, in-plan (no driver agg): |IFNUM| x |PLNUM| distinct, as
+    // the sizes of two sets in one aggregate. Two countDistincts would plan
+    // an Expand, which reports no partitioning, so they would shuffle twice
+    // even over input already grouped by file.
     val cc = base.groupBy(col("FILE_ID"))
-      .agg((countDistinct(col("IFNUM")) * countDistinct(col("PLNUM"))).as("__cc"))
+      .agg((size(collect_set(col("IFNUM"))) * size(collect_set(col("PLNUM")))).as("__cc"))
 
     var d = base.filter(col("IFNUM") === p.ifnum && col("PLNUM") === p.plnum)
     if (p.includeTime.nonEmpty || p.excludeTime.nonEmpty)

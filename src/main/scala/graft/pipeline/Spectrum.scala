@@ -106,6 +106,13 @@ object Spectrum {
     * vector sums are two conditional sums in ONE groupBy(FILE_ID)
     * aggregate with map-side partial whole-array sums.
     * Output: one row per (FILE_ID, channel).
+    *
+    * Jobs: the off thresholds' broadcast, one exchange of the per-file sums
+    * and the final range sort's three, plus one exchange for the thresholds
+    * when the input is not grouped by FILE_ID. Over a stamped SDFITS
+    * directory neither aggregate needs an exchange; the sums still cross
+    * one, so that the range sort samples that stage's output instead of
+    * decoding DATA a second time.
     */
   def runAll(df: DataFrame, header: Header, p: Params): DataFrame = {
     var d = df.filter(
@@ -166,6 +173,12 @@ object Spectrum {
         VectorSum.vecSum(when(on, data)).as("s_on"),
         VectorSum.vecSum(when(!on, data)).as("s_off"),
         first(split).as("__split"))
+      // A stage boundary over the per-file sums (one row per file): the
+      // orderBy below samples its input in a job of its own, and without a
+      // boundary that job would rerun the scan and decode DATA again. Over
+      // input not grouped by FILE_ID the aggregate's own exchange already
+      // partitions by FILE_ID, and Spark drops this one.
+      .repartition(col("FILE_ID"))
       .select(col("FILE_ID"),
         when(!col("__split"), col("s_on"))
           .otherwise(ArrayOps.vecDiff(col("s_on"), col("s_off"))).as("spectrum"))

@@ -47,6 +47,21 @@ object SdfitsFormat {
 
   final case class TableSpec(cols: Seq[ColSpec], nRows: Int, rowBytes: Int, dataOffset: Long)
 
+  /** Primary-header cards that [[SdfitsWriter.writeObservations]] stamps on
+    * each file: the key column's name, this file's key, and the
+    * comma-separated columns its rows are sorted by. A directory whose files
+    * all carry them reads as key-grouped and sorted (see
+    * [[SdfitsTableProvider]]).
+    */
+  val KeyColumnCard = "KEYCOL"
+  val KeyValueCard = "KEYVAL"
+  val SortColumnsCard = "SORTCOLS"
+
+  /** The longest string value a card holds: 80 columns less the key, the
+    * `= ` and the two quotes.
+    */
+  val MaxCardString = CARD - 12
+
   // --- read ---------------------------------------------------------------
 
   /** Parse one header unit starting at `off`: cards until END, consuming

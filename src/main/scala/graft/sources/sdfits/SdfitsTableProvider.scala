@@ -9,11 +9,12 @@ import org.apache.spark.SerializableWritable
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.catalyst.util.{GenericArrayData, SQLOrderingUtil}
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.{NamedReference, Transform}
+import org.apache.spark.sql.connector.expressions.{Expressions, NamedReference, SortDirection, SortOrder, Transform}
 import org.apache.spark.sql.connector.expressions.aggregate.{AggregateFunc, Aggregation, Count, CountStar, Max, Min, Sum}
 import org.apache.spark.sql.connector.read._
+import org.apache.spark.sql.connector.read.partitioning.{KeyGroupedPartitioning, Partitioning, UnknownPartitioning}
 import org.apache.spark.sql.connector.write.{LogicalWriteInfo, WriteBuilder}
 import org.apache.spark.sql.sources.{DataSourceRegister, EqualTo, Filter, GreaterThan, GreaterThanOrEqual, In, IsNotNull, LessThan, LessThanOrEqual}
 import org.apache.spark.sql.types._
@@ -40,6 +41,25 @@ import SdfitsFormat._
   * header's NAXIS2). Every file is structurally verified on open (S2) and
   * checked against the inferred schema (U1 strict-merge semantics: a
   * drifting file fails loudly rather than silently nulling).
+  *
+  * Key-grouped, sorted reads: when every file of the directory carries the
+  * `KEYCOL`, `KEYVAL` and `SORTCOLS` primary-header cards that
+  * [[SdfitsWriter.writeObservations]] stamps, and all name the same key
+  * column, a row scan that keeps that column reports
+  *  - a `KeyGroupedPartitioning` on it ([[SupportsReportPartitioning]]),
+  *    with each file's `KEYVAL` as its partition's key ([[HasPartitionKey]]);
+  *  - the order (key, sort columns…) ascending ([[SupportsReportOrdering]]),
+  *    up to the first sort column the scan does not keep (the sort columns
+  *    when every file names the same ones, none otherwise).
+  * So grouping or sorting by the key, or a per-key operator sorted by the
+  * sort columns, plans no shuffle and no sort over the scan. Spark merges
+  * files that share a key into one partition and then drops the ordering.
+  * Planning reads only the primary headers, and stops at the first file
+  * without the cards. The reader checks every row it returns: a key cell
+  * that differs from its file's `KEYVAL`, or a sort column that decreases,
+  * fails the read with [[SdfitsVerificationException]]. The scan reports
+  * nothing when any file lacks the cards, when the key column is pruned,
+  * and for pushed-down aggregates.
   */
 class SdfitsTableProvider extends TableProvider with DataSourceRegister {
 
@@ -91,6 +111,70 @@ object SdfitsTableProvider {
           !s.getPath.getName.startsWith("_"))
         .map(_.getPath.toString).sorted
     else Seq(p.toString)
+  }
+
+  /** The primary header alone: reads 2880-byte blocks up to the one
+    * holding the END card, never the table.
+    */
+  private[sdfits] def readPrimaryHeader(path: String, conf: Configuration): HeaderSpec = {
+    val p = new Path(path)
+    val in = p.getFileSystem(conf).open(p)
+    try {
+      val out = new java.io.ByteArrayOutputStream()
+      val block = new Array[Byte](BLOCK)
+      var ended = false
+      while (!ended) {
+        in.readFully(block)
+        out.write(block)
+        ended = (0 until BLOCK by CARD).exists(i =>
+          new String(block, i, 8, java.nio.charset.StandardCharsets.US_ASCII).trim == "END")
+      }
+      SdfitsFormat.parseHeader(out.toByteArray, 0L)._1
+    } finally in.close()
+  }
+
+  /** What a stamped directory lets a row scan report: the key column, each
+    * file's key (as the column's Scala value) and the sort columns the scan
+    * keeps.
+    */
+  private[sdfits] final case class Stamp(keyCol: String, keys: Seq[Any], sortCols: Seq[String])
+
+  /** The [[Stamp]] of `files` for a scan whose output is `output`, or None
+    * when any file lacks the cards or cannot be read, when the files name
+    * different key columns, or when the key column is not a kept string,
+    * int or long column. Only numeric sort columns are reported, and only
+    * while the scan keeps them.
+    */
+  private[sdfits] def stampOf(files: Seq[String], output: StructType,
+      conf: Configuration): Option[Stamp] = {
+    def cards(f: String): Option[(String, String, String)] =
+      try {
+        val h = readPrimaryHeader(f, conf)
+        for (c <- h.value(KeyColumnCard); k <- h.value(KeyValueCard))
+          yield (c, k, h.value(SortColumnsCard).getOrElse(""))
+      } catch { case _: java.io.IOException | _: SdfitsVerificationException => None }
+    val first = files.headOption.flatMap(cards)
+    val keyType = first.flatMap(c => output.find(_.name == c._1)).map(_.dataType)
+    val parse: Option[String => Any] = keyType.collect {
+      case StringType  => (k: String) => k
+      case IntegerType => (k: String) => k.toInt
+      case LongType    => (k: String) => k.toLong
+    }
+    parse.flatMap { parseKey =>
+      val (keyCol, _, sort) = first.get
+      val all = files.iterator.map(f => cards(f).filter(_._1 == keyCol))
+        .takeWhile(_.isDefined).map(_.get).toSeq
+      val keys =
+        try Some(all.map(c => parseKey(c._2)))
+        catch { case _: NumberFormatException => None }
+      keys.filter(_ => all.length == files.length).map { ks =>
+        val numeric = Set[DataType](IntegerType, LongType, FloatType, DoubleType)
+        val sortCols =
+          if (all.exists(_._3 != sort) || sort.isEmpty) Nil
+          else sort.split(",").toSeq.takeWhile(c => output.find(_.name == c).exists(f => numeric(f.dataType)))
+        Stamp(keyCol, ks, sortCols)
+      }
+    }
   }
 
   private[sdfits] def readFully(path: String, conf: Configuration): Array[Byte] = {
@@ -375,16 +459,40 @@ private[sdfits] class SdfitsScanBuilder(full: StructType, path: String,
   }
 }
 
-private[sdfits] case class SdfitsInputPartition(file: String) extends InputPartition
+/** One file; `key` is its `KEYVAL` when the scan reports a key-grouped
+  * partitioning (Spark reads [[partitionKey]] only then).
+  */
+private[sdfits] case class SdfitsInputPartition(file: String, key: Option[Any])
+    extends HasPartitionKey {
+  override def partitionKey(): InternalRow = key.map {
+    case k: String => InternalRow(UTF8String.fromString(k))
+    case k         => InternalRow(k)
+  }.orNull
+}
 
 private[sdfits] class SdfitsScan(full: StructType, output: StructType,
     path: String, filters: Array[Filter], groupBy: Seq[String],
     aggs: Seq[SdfitsPushdown.Agg], channels: Option[(Int, Int)])
-    extends Scan with Batch with SupportsReportStatistics {
+    extends Scan with Batch with SupportsReportStatistics
+    with SupportsReportPartitioning with SupportsReportOrdering {
   // Resolved on the driver (session fs settings apply) and shipped to the
   // reader tasks via the factory — executors must see the same filesystem
   // configuration the planner listed files with.
   private val conf = new SerializableWritable(SdfitsTableProvider.driverConf())
+  // One listing and one header pass per scan: the reported partitioning and
+  // the planned partitions must describe the same files.
+  private lazy val files = SdfitsTableProvider.listFiles(path, conf.value)
+  private lazy val stamp: Option[SdfitsTableProvider.Stamp] =
+    if (aggs.nonEmpty || files.isEmpty) None
+    else SdfitsTableProvider.stampOf(files, output, conf.value)
+  override def outputPartitioning(): Partitioning = stamp match {
+    case Some(s) => new KeyGroupedPartitioning(
+      Array(Expressions.identity(s.keyCol)), files.length)
+    case None => new UnknownPartitioning(0)
+  }
+  override def outputOrdering(): Array[SortOrder] =
+    stamp.toSeq.flatMap(s => s.keyCol +: s.sortCols)
+      .map(c => Expressions.sort(Expressions.column(c), SortDirection.ASCENDING)).toArray
   override def readSchema(): StructType = output
   override def toBatch: Batch = this
   override def description(): String = {
@@ -414,29 +522,77 @@ private[sdfits] class SdfitsScan(full: StructType, output: StructType,
     override def numRows(): java.util.OptionalLong = java.util.OptionalLong.empty()
   }
   override def planInputPartitions(): Array[InputPartition] = {
-    val files = SdfitsTableProvider.listFiles(path, conf.value)
     // An existing-but-fileless directory must fail on READ like a missing
     // one — a zero-column empty frame would silently hide a bad path.
     if (files.isEmpty)
       throw new java.io.FileNotFoundException(s"sdfits: no input files at $path")
-    files.map(SdfitsInputPartition.apply).toArray
+    files.zipWithIndex.map { case (f, i) =>
+      SdfitsInputPartition(f, stamp.map(_.keys(i)))
+    }.toArray
   }
   override def createReaderFactory(): PartitionReaderFactory =
-    new SdfitsReaderFactory(full, output, filters, groupBy, aggs, channels, conf)
+    new SdfitsReaderFactory(full, output, filters, groupBy, aggs, channels,
+      stamp.map(s => (s.keyCol, s.sortCols)), conf)
 }
 
 private[sdfits] class SdfitsReaderFactory(
     full: StructType, output: StructType, filters: Array[Filter],
     groupBy: Seq[String], aggs: Seq[SdfitsPushdown.Agg],
-    channels: Option[(Int, Int)],
+    channels: Option[(Int, Int)], reported: Option[(String, Seq[String])],
     conf: SerializableWritable[Configuration])
     extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val file = partition.asInstanceOf[SdfitsInputPartition].file
+    val p = partition.asInstanceOf[SdfitsInputPartition]
     if (aggs.nonEmpty)
-      new SdfitsAggReader(file, full, filters, groupBy, aggs, conf.value)
-    else
-      new SdfitsPartitionReader(file, full, output, filters, channels, conf.value)
+      new SdfitsAggReader(p.file, full, filters, groupBy, aggs, conf.value)
+    else {
+      val check = for ((keyCol, sortCols) <- reported; key <- p.key)
+        yield new StampCheck(p.file, output, keyCol, key, sortCols)
+      new SdfitsPartitionReader(p.file, full, output, filters, channels, check, conf.value)
+    }
+  }
+}
+
+/** The per-row check behind a stamped scan's report: the key cell equals
+  * the file's `KEYVAL`, and the sort columns never decrease (Spark's order:
+  * -0.0 equals 0.0, NaN above every number). Runs on the decoded cells of
+  * every row the reader returns.
+  */
+private[sdfits] final class StampCheck(file: String, output: StructType,
+    keyCol: String, key: Any, sortCols: Seq[String]) {
+  private val keyAt = output.fieldIndex(keyCol)
+  private val sortAt = sortCols.map(output.fieldIndex).toArray
+  private val prev = new Array[Any](sortAt.length)
+  private var row = 0L
+
+  private def cmp(a: Any, b: Any): Int = (a, b) match {
+    case (x: Int, y: Int)       => java.lang.Integer.compare(x, y)
+    case (x: Long, y: Long)     => java.lang.Long.compare(x, y)
+    case (x: Float, y: Float)   => SQLOrderingUtil.compareFloats(x, y)
+    case (x: Double, y: Double) => SQLOrderingUtil.compareDoubles(x, y)
+    case other => throw new IllegalStateException(s"sdfits: unordered sort cells $other")
+  }
+
+  def apply(cells: Array[Any]): Unit = {
+    if (cells(keyAt) != key)
+      throw new SdfitsVerificationException(
+        s"$file: $keyCol '${cells(keyAt)}' at returned row $row differs from its " +
+          s"${SdfitsFormat.KeyValueCard} card '$key'")
+    var i = 0
+    var tied = row > 0
+    while (tied && i < sortAt.length) {
+      val c = cmp(cells(sortAt(i)), prev(i))
+      if (c < 0)
+        throw new SdfitsVerificationException(
+          s"$file: ${sortCols(i)} ${cells(sortAt(i))} at returned row $row follows " +
+            s"${prev(i)}, but the ${SdfitsFormat.SortColumnsCard} card says " +
+            s"'${sortCols.mkString(",")}' ascend")
+      tied = c == 0
+      i += 1
+    }
+    i = 0
+    while (i < sortAt.length) { prev(i) = cells(sortAt(i)); i += 1 }
+    row += 1
   }
 }
 
@@ -463,7 +619,8 @@ private[sdfits] abstract class SdfitsFileAccess(
 
 private[sdfits] class SdfitsPartitionReader(
     file: String, full: StructType, required: StructType,
-    filters: Array[Filter], channels: Option[(Int, Int)], conf: Configuration)
+    filters: Array[Filter], channels: Option[(Int, Int)], check: Option[StampCheck],
+    conf: Configuration)
     extends SdfitsFileAccess(file, full, conf) with PartitionReader[InternalRow] {
 
   // (column spec, byte offset within row) per projected field — unprojected
@@ -508,8 +665,11 @@ private[sdfits] class SdfitsPartitionReader(
   override def get(): InternalRow = {
     val vals = new Array[Any](projected.length)
     var i = 0
+    while (i < projected.length) { vals(i) = decoders(i)(row); i += 1 }
+    check.foreach(_(vals))
+    i = 0
     while (i < projected.length) {
-      vals(i) = decoders(i)(row) match {
+      vals(i) = vals(i) match {
         case s: String          => UTF8String.fromString(s)
         case a: Array[Double]   => new GenericArrayData(a)
         case a: Array[Float]    => new GenericArrayData(a)

@@ -172,6 +172,19 @@ object SdfitsWriter {
     * FILE — never ∝ data) broadcast into the write tasks for NAXIS2.
     * Returns `(file key, path, n_rows)` — computed from the same counts, no
     * second scan.
+    *
+    * Each file's primary header is stamped with what the write guarantees:
+    * `KEYCOL = '<fileCol>'`, `KEYVAL = '<this file's key>'` and
+    * `SORTCOLS = '<c1>,<c2>,…'`, the sort columns its rows ascend by
+    * ([[SdfitsFormat.KeyColumnCard]] and siblings). `SORTCOLS` lists the
+    * leading numeric sort columns only: a string or vector column's FITS
+    * encoding (ASCII, trailing blanks dropped) need not keep Spark's order,
+    * so it ends the list. A key that would not read back unchanged from a
+    * card (non-printable or quote characters, leading or trailing blanks,
+    * over [[SdfitsFormat.MaxCardString]] characters) leaves its file
+    * unstamped. Reading a directory whose files are all stamped, the
+    * connector reports one partition key per file and that row order, so
+    * per-file operators on it need no shuffle.
     */
   def writeObservations(
       df: DataFrame,
@@ -222,6 +235,19 @@ object SdfitsWriter {
       "sdfits: unresolvable file-name collision among fileCol keys")
     val conf = new SerializableWritable(spark.sessionState.newHadoopConf())
     val (hv, sv, hist) = (header.values, header.stringValues, header.history)
+    val stampKeys = Set(SdfitsFormat.KeyColumnCard, SdfitsFormat.KeyValueCard,
+      SdfitsFormat.SortColumnsCard)
+    require((hv ++ sv).forall(c => !stampKeys(c._1)),
+      s"sdfits: writeObservations writes the ${stampKeys.mkString("/")} cards itself")
+    val sortCards = sortCols
+      .takeWhile(c => Seq(IntegerType, LongType, FloatType, DoubleType).contains(df.schema(c).dataType))
+      .inits.map(_.mkString(",")).find(_.length <= SdfitsFormat.MaxCardString).get
+    def stamp(key: String): Seq[(String, String)] =
+      if (key.length <= SdfitsFormat.MaxCardString && key == key.trim &&
+          key.forall(ch => ch >= ' ' && ch <= '~' && ch != '\''))
+        Seq(SdfitsFormat.KeyColumnCard -> fileCol, SdfitsFormat.KeyValueCard -> key,
+          SdfitsFormat.SortColumnsCard -> sortCards)
+      else Nil
     df.repartition(col(fileCol))
       .sortWithinPartitions((col(fileCol) +: sortCols.map(col)): _*)
       .foreachPartition { (it: Iterator[Row]) =>
@@ -238,7 +264,7 @@ object SdfitsWriter {
             def next(): Row = rows.next()
           }
           writeCommitted(fs, p) { os =>
-            SdfitsFormat.write(os, hv, sv, hist, cols,
+            SdfitsFormat.write(os, hv, sv ++ stamp(key), hist, cols,
               fileRows.map(cells(_, fields)), counts(key).toInt)
           }
         }

@@ -1,16 +1,22 @@
 package graft.pipeline
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+import org.apache.spark.sql.execution.{SortExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanHelper, QueryStageExec}
+import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_COL, ShuffleExchangeExec}
 import org.apache.spark.sql.functions._
 import graft.SparkTestBase
 import graft.model.HeaderRecord
 import graft.sources.{Corruption, VerifiedRead}
+import graft.sources.sdfits.SdfitsWriter
 
 /** Golden end-to-end tests over an observation-shaped fixture with a known
   * injected source and diode spikes — the reference's main.py:13-64 path
   * (validate → continuum → spectrum) — plus the S2/S4 corruption round trip.
   */
-class PipelineSpec extends SparkTestBase {
+class PipelineSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
   import spark.implicits._
 
   private val header = HeaderRecord.Header(
@@ -172,5 +178,79 @@ class PipelineSpec extends SparkTestBase {
     }
     val (j2, j100) = (jobs(2), jobs(100))
     assert(j2 > 0 && j2 == j100, s"jobs at 2 files: $j2, at 100 files: $j100")
+  }
+
+  /** `n` copies of [[obs]] as SDFITS files (FILE_ID "0".."n-1"), stamped by
+    * `writeObservations`, or written one by one without the cards.
+    */
+  private def sdfitsDir(n: Int, stamped: Boolean): String = {
+    val dir = java.nio.file.Files.createTempDirectory("graft-runall-sdfits").toString
+    val one = obs.withColumn("DATE_OBS", date_format($"DATE_OBS", "yyyy-MM-dd'T'HH:mm:ss"))
+    val all = spark.range(n).crossJoin(one.drop("FILE_ID"))
+      .withColumn("FILE_ID", $"id".cast("string")).drop("id")
+    if (stamped)
+      SdfitsWriter.writeObservations(all, "FILE_ID", Seq("ROWIDX"), dir, SdfitsWriter.Header())
+        .collect()
+    else (0 until n).foreach { f =>
+      SdfitsWriter.writeObservation(all.filter($"FILE_ID" === f.toString), Seq("ROWIDX"),
+        s"$dir/obs_$f.fits", SdfitsWriter.Header())
+    }
+    dir
+  }
+
+  /** Jobs of each product's collect, the products, and their executed plans. */
+  private def runAllOn(dir: String) = {
+    var r: Pipeline.Result = null
+    var (c, s) = (Array.empty[org.apache.spark.sql.Row], Array.empty[org.apache.spark.sql.Row])
+    // runAll runs the continuum's checkpoint eagerly
+    val jc = jobsOf {
+      r = Pipeline.runAll(spark.read.format("sdfits").load(dir), header, ifnum = 0, plnum = 1)
+      c = r.continuum.collect()
+    }
+    val js = jobsOf { s = r.spectrum.collect() }
+    spark.catalog.clearCache()
+    (jc, js, c.toSeq, s.toSeq, r.continuum.queryExecution.executedPlan,
+      r.spectrum.queryExecution.executedPlan)
+  }
+
+  private def exchanges(plan: SparkPlan): Seq[ShuffleExchangeExec] =
+    collect(plan) { case e: ShuffleExchangeExec => e }
+
+  /** Whether evaluating `p` up to the previous stage boundaries decodes the source. */
+  private def scansSource(p: SparkPlan): Boolean = p match {
+    case _: QueryStageExec => false
+    case _: BatchScanExec  => true
+    case other             => other.children.exists(scansSource)
+  }
+
+  test("Pipeline.runAll over stamped SDFITS shuffles only for the final sorts") {
+    val (jc, js, cont, spec, contPlan, specPlan) = runAllOn(sdfitsDir(4, stamped = true))
+    val (ujc, ujs, ucont, uspec, _, _) = runAllOn(sdfitsDir(4, stamped = false))
+    assert(cont == ucont && spec == uspec && cont.nonEmpty && spec.nonEmpty)
+    // No Exchange below the ST1 scan, the cc and params aggregates or the
+    // off thresholds, and no per-file sort: the continuum's one exchange is
+    // its final range sort. The spectrum keeps one hash exchange, over the
+    // per-file vector sums, so its range sort samples that stage's output
+    // and DATA is decoded once.
+    assert(exchanges(contPlan).map(_.outputPartitioning.getClass) == Seq(classOf[RangePartitioning]))
+    assert(collect(contPlan) { case s: SortExec if !s.global => s }.isEmpty)
+    val specEx = exchanges(specPlan)
+    assert(specEx.map(e => (e.outputPartitioning.isInstanceOf[RangePartitioning], e.shuffleOrigin))
+      .toSet == Set((true, org.apache.spark.sql.execution.exchange.ENSURE_REQUIREMENTS),
+        (false, REPARTITION_BY_COL)), specPlan)
+    for (e <- (exchanges(contPlan) ++ specEx).filter(_.outputPartitioning.isInstanceOf[RangePartitioning]))
+      assert(!scansSource(e.child), s"the range sort's sample would rescan the source:\n$e")
+    assert((jc, js) == (7, 5), s"stamped jobs: continuum $jc, spectrum $js")
+    // Unstamped copies of the same files plan as before, but for A3's one
+    // aggregate (the continuum's two countDistincts planned two exchanges).
+    assert((ujc, ujs) == (10, 6), s"unstamped jobs: continuum $ujc, spectrum $ujs")
+  }
+
+  test("Pipeline.runAll over stamped SDFITS issues the same jobs for 2 and 100 files") {
+    val (j2c, j2s, _, _, _, _) = runAllOn(sdfitsDir(2, stamped = true))
+    val (j100c, j100s, c100, _, _, _) = runAllOn(sdfitsDir(100, stamped = true))
+    assert(c100.map(_.getString(0)).distinct.length == 100)
+    assert((j2c, j2s) == (7, 5) && (j100c, j100s) == (7, 5),
+      s"jobs at 2 files: ($j2c, $j2s), at 100 files: ($j100c, $j100s)")
   }
 }
