@@ -1,52 +1,51 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, GraftColumnBridge}
 import org.apache.spark.sql.functions._
 
 /** Array-column kernels for the time×channel data cube (SURVEY.md §1.1).
   *
   * The reference stores one integration sample per row with a fixed-length
-  * float vector `DATA` (per-channel intensities); these helpers re-express its
-  * whole-column numpy kernels as Catalyst higher-order functions — no UDF or
-  * serialization boundary, though HOF lambdas themselves evaluate interpreted
-  * (`CodegenFallback`). Kernels hot enough for that to matter have native
-  * codegen'd forms in [[VectorKernels]].
+  * float vector `DATA` (per-channel intensities) and reduces it with
+  * vectorised numpy calls. Each of those calls is one native Catalyst
+  * expression here: a primitive `double` loop over the input array
+  * ([[ArrayKernelsImpl]]) that writes an `UnsafeArrayData`, called from the
+  * surrounding whole-stage code. No higher-order function (`transform`,
+  * `aggregate`, `zip_with`) is left: those evaluate one interpreted lambda
+  * and one boxed element per channel. Their forms, which fixed the
+  * semantics, live on only as references in `ArrayKernelsSpec`, which pins
+  * every kernel to them bit for bit (nulls, NaN, ±Inf, −0.0, ANSI errors).
   *
+  * Numeric inputs are cast to `array<double>` first, as in [[VectorKernels]]
+  * (a no-op on `DATA`); [[pickChannels]] keeps its input's element type.
   * All functions are pure `Column -> Column`; element order carries channel
   * identity (channel 0 = highest frequency, ref utils.py:282).
   */
 object ArrayOps {
 
+  import VectorKernels.{binary, unary}
+
   /** A1 — frequency-axis integration: per-row sum over the channel vector
     * (ref utils.py:110-118, `np.sum(axis=1)`). NULL elements (masked NaNs,
     * see [[maskNaN]]) are skipped, matching numpy masked-array sums.
     */
-  def arraySum(data: Column): Column =
-    aggregate(data, lit(0.0), (acc, x) => acc + coalesce(x.cast("double"), lit(0.0)))
+  def arraySum(data: Column): Column = unary(ArraySum)(data)
 
-  /** Mean over non-null elements of the array (numpy masked mean analog).
-    * Inputs are NULL-masked (see [[maskNaN]]) — NaN never reaches this point,
-    * so the count only needs a null check; the sum coalesces NULL→0 while the
-    * count skips NULLs, which together give the masked mean.
+  /** Mean over non-null elements of the array (numpy masked mean analog);
+    * null when no element is non-null.
     */
-  def arrayMean(data: Column): Column = {
-    val n = aggregate(data, lit(0L), (acc, x) => acc + when(x.isNotNull, 1L).otherwise(0L))
-    arraySum(data) / when(n > 0, n.cast("double"))
-  }
+  def arrayMean(data: Column): Column = unary(ArrayMean)(data)
 
   /** F5 — NaN masking: NaN elements become SQL NULL inside the array
     * (ref validate.py:25-37). Masked, not removed — array length (= channel
     * identity) is preserved.
     */
-  def maskNaN(data: Column): Column =
-    transform(data, x =>
-      when(x.isNull || isnan(x), lit(null).cast("double")).otherwise(x.cast("double")))
+  def maskNaN(data: Column): Column = unary(MaskNaN)(data)
 
-  /** Replace NULL elements by 0.0 (numpy `filled(0)`); used before the
-    * vector-sum aggregate whose input encoder requires non-null elements.
+  /** Replace NULL elements by `v` (numpy `filled(v)`); used before the
+    * vector-sum aggregate (see [[VectorSum]]).
     */
-  def fillNulls(data: Column, v: Double = 0.0): Column =
-    transform(data, x => coalesce(x.cast("double"), lit(v)))
+  def fillNulls(data: Column, v: Double = 0.0): Column = unary(FillNulls(_, v))(data)
 
   /** F8 — channel crop: keep channels `[start, stop]` inclusive, 0-based
     * (ref validate.py:72-102 slices `row[start:stop+1]`). Spark `slice` is
@@ -82,24 +81,26 @@ object ArrayOps {
     mask.zipWithIndex.collect { case (true, i) => i }
   }
 
-  /** F7 application — project the kept channels out of each row's vector.
-    * The index list is a per-file scalar (header-derived), so it travels as a
-    * literal array: constant-folded, no shuffle, no UDF.
+  /** F7 application — project the kept channels (0-based) out of each
+    * row's vector. The index list is a per-file scalar (header-derived), so
+    * it rides the expression: no shuffle, no UDF. An index past a row's end
+    * fails under ANSI, as `element_at` does.
     */
   def pickChannels(data: Column, idx: Array[Int]): Column = {
-    val idxCol = array(idx.map(i => lit(i)).toSeq: _*)
-    transform(idxCol, i => element_at(data, i + 1))
+    require(idx.forall(_ >= 0), s"pickChannels: negative channel index in ${idx.mkString(",")}")
+    GraftColumnBridge.column(PickChannels(GraftColumnBridge.expression(data), idx.toSeq))
   }
 
-  /** A10 — element-wise vector difference (ref spectrum.py:63-67 ON−OFF). */
-  def vecDiff(a: Column, b: Column): Column =
-    zip_with(a, b, (x, y) => x - y)
+  /** A10 — element-wise vector difference (ref spectrum.py:63-67 ON−OFF).
+    * As long as the longer input; a missing or null element gives null.
+    */
+  def vecDiff(a: Column, b: Column): Column = binary(VecDiff(_, _))(a, b)
 
   /** C8 — inverse-transmission application: per-channel division
-    * (ref atmosphere_correction.py:83-84, `DATA *= 1/transmission`).
+    * (ref atmosphere_correction.py:83-84, `DATA *= 1/transmission`), with
+    * `Divide`'s ANSI behaviour on a zero divisor.
     */
-  def vecDivide(a: Column, divisor: Column): Column =
-    zip_with(a, divisor, (x, d) => x / d)
+  def vecDivide(a: Column, divisor: Column): Column = binary(VecDivide(_, _))(a, divisor)
 
   /** Dot product of two numeric arrays, accumulated in double. Delegates to
     * the native codegen'd kernel ([[graft.functions.DotProduct]]); its

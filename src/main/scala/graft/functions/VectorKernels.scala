@@ -6,7 +6,8 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{DataType, DoubleType, IntegerType}
 
-/** Native codegen'd vector kernels for the similarity-search surface.
+/** Native codegen'd vector kernels for the similarity-search surface; the
+  * radio DATA kernels follow the same contract in [[ArrayKernelsImpl]].
   *
   * Spark's higher-order functions (`aggregate`, `zip_with`, `transform`) are
   * `CodegenFallback`: each row pays interpreted lambda dispatch per element.
@@ -15,9 +16,12 @@ import org.apache.spark.sql.types.{DataType, DoubleType, IntegerType}
   * these `BinaryExpression`s emit a tight primitive `double` loop via
   * `doGenCode` instead.
   *
-  * Semantics mirror the HOF forms bit-exactly (same per-element IEEE op
+  * The kernel contract: inputs are cast to `array<double>` by the column
+  * wrapper, interpreted eval and generated code run the same loop, and the
+  * semantics mirror the HOF forms bit-exactly (same per-element IEEE op
   * order, index-ascending accumulation) so swapping them in cannot move any
-  * oracle-checked value:
+  * oracle-checked value. The HOF forms exist only as references in
+  * `VectorKernelsSpec`, which pins the kernels to them:
   *   - null array → null; any null ELEMENT → null (zip_with multiplies null
   *     through, aggregate folds `s + null` to null);
   *   - length mismatch → null (zip_with pads the shorter side with nulls);
@@ -169,7 +173,12 @@ case class NearestCell(child: Expression, centroids: Seq[Seq[Double]])
 }
 
 object VectorKernels {
-  private def binary(f: (Expression, Expression) => Expression)(a: Column, b: Column): Column =
+  /** A kernel over one numeric array column, cast to `array<double>`. */
+  private[functions] def unary(f: Expression => Expression)(a: Column): Column =
+    GraftColumnBridge.column(f(GraftColumnBridge.expression(a.cast("array<double>"))))
+
+  /** A kernel over two numeric array columns, each cast to `array<double>`. */
+  private[functions] def binary(f: (Expression, Expression) => Expression)(a: Column, b: Column): Column =
     GraftColumnBridge.column(f(
       GraftColumnBridge.expression(a.cast("array<double>")),
       GraftColumnBridge.expression(b.cast("array<double>"))))

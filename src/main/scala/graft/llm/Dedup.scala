@@ -297,6 +297,18 @@ object Dedup {
       .distinct()
   }
 
+  /** Both directions of every pair as (src, dst) longs, from ONE
+    * evaluation of `pairs` (explode of a 2-struct array: a union of two
+    * selects would run the upstream candidate join once per branch).
+    */
+  private def bothDirections(pairs: DataFrame, self: Boolean = false): DataFrame = {
+    val (a, b) = (col("id_a").cast("long"), col("id_b").cast("long"))
+    val dirs = Seq(struct(a.as("src"), b.as("dst")), struct(b.as("src"), a.as("dst"))) ++
+      (if (self) Seq(struct(a.as("src"), a.as("dst")), struct(b.as("src"), b.as("dst"))) else Nil)
+    pairs.select(explode(array(dirs: _*)).as("e"))
+      .select(col("e.src").as("src"), col("e.dst").as("dst"))
+  }
+
   /** Connected components over near-duplicate candidate pairs, via
     * iterative min-label propagation: every node's label converges to the
     * smallest id reachable from it (= its component representative) in
@@ -312,36 +324,28 @@ object Dedup {
     * chains.
     */
   def nearDupComponents(pairs: DataFrame, maxIter: Int = 20): DataFrame = {
-    // Both edge directions from ONE evaluation of `pairs` (explode of a
-    // 2-struct array) — a union of two selects would run the upstream
-    // candidate join once per branch while the checkpoint materializes.
-    val edges = pairs
-      .select(explode(array(
-        struct(col("id_a").cast("long").as("src"), col("id_b").cast("long").as("dst")),
-        struct(col("id_b").cast("long").as("src"), col("id_a").cast("long").as("dst")))).as("e"))
-      .select(col("e.src").as("src"), col("e.dst").as("dst"))
-      .localCheckpoint()
-    var labels = edges.select(col("src").as("id")).distinct()
-      .withColumn("comp", col("id"))
-      .localCheckpoint()
+    // The graph carries a self row (u, u) per endpoint, duplicates and all:
+    // u's own row brings its current label into the min, and tells the
+    // round what the old label was, so no join back to the labels is needed.
+    val graph = bothDirections(pairs, self = true).localCheckpoint()
+    // None: every node still labels itself (round 1 needs no join at all).
+    var labels: Option[DataFrame] = None
     var converged = false
     var i = 0
     while (!converged && i < maxIter) {
-      val nbrMin = edges
-        .join(labels.select(col("id").as("dst"), col("comp").as("dcomp")), "dst")
-        .groupBy(col("src")).agg(min(col("dcomp")).as("nbr_min"))
-      // The changed flag is computed IN the update projection (new comp vs
-      // old comp side by side), so convergence is a filter over the
-      // just-materialized checkpoint — the former separate join of the new
-      // labels against the old ones cost a shuffle per iteration.
-      val newComp = least(col("comp"), coalesce(col("nbr_min"), col("comp")))
-      val updated = labels
-        .join(nbrMin.withColumnRenamed("src", "id"), Seq("id"), "left")
-        .select(col("id"), newComp.as("comp"),
-          (newComp =!= col("comp")).as("__changed"))
+      val withLabel = labels match {
+        case None    => graph.withColumn("dcomp", col("dst"))
+        case Some(l) => graph.join(l.select(col("id").as("dst"), col("comp").as("dcomp")), "dst")
+      }
+      // The changed flag is computed IN the round's checkpoint, so
+      // convergence is a filter over the just-materialized labels.
+      val updated = withLabel.groupBy(col("src").as("id"))
+        .agg(min(col("dcomp")).as("comp"),
+          min(when(col("src") === col("dst"), col("dcomp"))).as("__old"))
+        .select(col("id"), col("comp"), (col("comp") =!= col("__old")).as("__changed"))
         .localCheckpoint()
       converged = updated.filter(col("__changed")).head(1).isEmpty
-      labels = updated.select(col("id"), col("comp"))
+      labels = Some(updated.select(col("id"), col("comp")))
       i += 1
     }
     // Silent non-convergence would return intermediate labels and dedup
@@ -352,7 +356,7 @@ object Dedup {
       throw new IllegalStateException(
         s"nearDupComponents did not converge in $maxIter rounds; raise maxIter " +
           "(components with diameter > maxIter exist in the candidate graph)")
-    labels
+    labels.get
   }
 
   /** Connected components by alternating large-star/small-star rounds
@@ -367,16 +371,16 @@ object Dedup {
     *
     * Each round: large-star hangs every LARGER neighbor of u under
     * m(u) = min(Γ(u) ∪ {u}); small-star re-hangs the smaller ones; the
-    * symmetric closure feeds the next round; convergence = the canonical
-    * (undirected) edge set reaches a fixed point — a star forest whose
-    * centers are component minima, read out as `(id, comp)` with the
-    * same semantics as [[nearDupComponents]] (spec-certified equivalent).
+    * symmetric closure feeds the next round; convergence = the edge set
+    * reaches a fixed point — a star forest whose centers are component
+    * minima, read out as `(id, comp)` with the same semantics as
+    * [[nearDupComponents]] (spec-certified equivalent).
     */
   def nearDupComponentsStar(pairs: DataFrame, maxIter: Int = 12): DataFrame = {
-    val nodes = pairs
-      .select(explode(array(col("id_a").cast("long"), col("id_b").cast("long"))).as("id"))
-      .distinct()
-      .localCheckpoint()
+    // ONE evaluation of `pairs`: the node set and the first edge set both
+    // derive from this checkpoint.
+    val ends = bothDirections(pairs).localCheckpoint()
+    val nodes = ends.select(col("src").as("id")).distinct()
     def sym(e: DataFrame): DataFrame = e
       .select(explode(array(
         struct(col("src"), col("dst")),
@@ -384,38 +388,38 @@ object Dedup {
       .select(col("e.src").as("src"), col("e.dst").as("dst"))
       .filter(col("src") =!= col("dst"))
       .distinct()
+    // Self-loops and duplicates stay: every caller closes it under sym,
+    // which drops both.
     def star(edges: DataFrame, large: Boolean): DataFrame = {
-      // m(u) = min(Γ(u) ∪ {u}) in ONE aggregation: min(least(dst, src)).
-      val m = edges.groupBy(col("src")).agg(min(least(col("dst"), col("src"))).as("m"))
-      val j = edges.join(m, "src")
-      val hung =
-        if (large) j.filter(col("dst") > col("src"))
-          .select(col("dst").as("src"), col("m").as("dst"))
-        else j.filter(col("dst") <= col("src"))
-          .select(col("dst").as("src"), col("m").as("dst"))
-          // ... plus (u, m): small-star keeps u itself hung under its min,
-          // or the star edge of a settled pair would vanish.
-          .unionByName(j.select(col("src"), col("m").as("dst")))
-      hung.filter(col("src") =!= col("dst")).distinct()
+      // m(u) = min(Γ(u) ∪ {u}) = min(least(dst, src)) over u's edges, as a
+      // window: one shuffle by src, no aggregate joined back.
+      val j = edges.withColumn("m",
+        min(least(col("dst"), col("src"))).over(Window.partitionBy(col("src"))))
+      if (large) j.filter(col("dst") > col("src"))
+        .select(col("dst").as("src"), col("m").as("dst"))
+      else j.filter(col("dst") <= col("src"))
+        .select(col("dst").as("src"), col("m").as("dst"))
+        // ... plus (u, m): small-star keeps u itself hung under its min,
+        // or the star edge of a settled pair would vanish.
+        .unionByName(j.select(col("src"), col("m").as("dst")))
     }
-    def canon(e: DataFrame): DataFrame = e
-      .select(least(col("src"), col("dst")).as("a"), greatest(col("src"), col("dst")).as("b"))
-      .distinct()
-    var edges = sym(pairs.select(col("id_a").cast("long").as("src"),
-      col("id_b").cast("long").as("dst"))).localCheckpoint()
+    // `ends` is symmetric already: its sym closure drops self-pairs and
+    // duplicates.
+    var edges = ends.filter(col("src") =!= col("dst")).distinct()
     var converged = false
     var i = 0
     while (!converged && i < maxIter) {
       val next = sym(star(sym(star(edges, large = true)), large = false))
+      // Fixed point: both edge sets are symmetric and distinct, so one full
+      // outer join on (src, dst) marks the new edges and the gone ones, and
+      // the round's checkpoint carries the flag.
+      val round = next.withColumn("__next", lit(true))
+        .join(edges.withColumn("__prev", lit(true)), Seq("src", "dst"), "full_outer")
+        .select(col("src"), col("dst"), col("__next").isNotNull.as("__next"),
+          (col("__next").isNull || col("__prev").isNull).as("__changed"))
         .localCheckpoint()
-      // Fixed point on the canonical undirected set: both differences
-      // empty. (A one-sided except + two distinct counts was measured
-      // SLOWER — the counts re-shuffle both canon frames, while the
-      // second exceptAll reuses the same shuffle shape.)
-      converged =
-        canon(next).exceptAll(canon(edges)).head(1).isEmpty &&
-          canon(edges).exceptAll(canon(next)).head(1).isEmpty
-      edges = next
+      converged = round.filter(col("__changed")).head(1).isEmpty
+      edges = round.filter(col("__next")).select(col("src"), col("dst"))
       i += 1
     }
     if (!converged)

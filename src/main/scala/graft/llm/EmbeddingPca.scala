@@ -16,7 +16,7 @@ import graft.functions.PcaKernels
   * Spark shape:
   *   - [[fit]] is ONE aggregation: a typed `Aggregator` accumulates the
   *     count, the coordinate sums, and the upper-triangular second-moment
-  *     matrix in a single compiled pass (the [[graft.functions.VectorSumAgg]]
+  *     matrix in a single compiled pass (the [[graft.functions.VectorSumAggregate]]
   *     discipline — map-side partials, the shuffle carries one
   *     O(d²)-buffer per partition, never the corpus). At d = 64 the
   *     buffer is 2 KB; at d = 768 it is ~2.4 MB — still per-partition

@@ -11,7 +11,8 @@ object Integration {
 
   /** A1 — frequency-axis integration ("continuum", ref utils.py:110-118):
     * per-row `sum(DATA)` paired with relative time. Narrow map-side work —
-    * no shuffle; stays inside whole-stage codegen via the `aggregate` HOF.
+    * no shuffle; the native [[graft.functions.ArrayOps.arraySum]] loop runs
+    * inside whole-stage codegen.
     */
   def continuum(df: DataFrame, t0: Column, tsCol: String = "DATE_OBS", dataCol: String = "DATA"): DataFrame =
     df.select(
@@ -19,9 +20,11 @@ object Integration {
       ArrayOps.arraySum(col(dataCol)).as("intensity"))
 
   /** A2 — time-axis integration ("spectrum", ref utils.py:120-124):
-    * element-wise vector sum across rows via the custom Aggregator —
-    * map-side partial aggregation of whole arrays, so the shuffle carries one
-    * array per (group × partition), not n_rows × n_channels exploded rows.
+    * element-wise vector sum across rows via [[graft.functions.VectorSum]]
+    * over `fillNulls(DATA)` (masked channels count 0, as numpy's masked
+    * sums) — map-side partial aggregation of whole arrays, so the shuffle
+    * carries one array per (group × partition), not n_rows × n_channels
+    * exploded rows.
     */
   def spectrum(df: DataFrame, dataCol: String = "DATA"): DataFrame =
     df.agg(VectorSum.vecSum(ArrayOps.fillNulls(col(dataCol))).as("spectrum"))

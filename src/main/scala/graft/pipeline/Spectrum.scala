@@ -12,8 +12,9 @@ import graft.ops._
   * integration (ON and OFF halves for onoff files) → A10 difference.
   * Returns one row per channel: (pos, frequency, intensity).
   *
-  * One shuffle total: the A2 aggregate (map-side partial vector sums via the
-  * custom Aggregator — the shuffle carries one array per partition, not
+  * One shuffle total: the A2 aggregate (map-side partial vector sums via
+  * [[graft.functions.VectorSum]], over `fillNulls` of the NaN-masked DATA,
+  * both native loops — the shuffle carries one array per partition, not
   * n_rows × n_channels exploded rows).
   */
 object Spectrum {
@@ -157,7 +158,8 @@ object Spectrum {
             first(lit(null).cast("long")).as("__off_row"))
 
     // ONE aggregate per file: the ON and OFF halves are two conditional
-    // vector sums (VectorSumAgg skips the null rows the `when` leaves).
+    // vector sums over the NaN-masked DATA with its nulls filled by 0.0
+    // (the vector sum skips the null rows the `when` leaves).
     // Mirrors run() exactly: a
     // file WITHOUT a real off index (Python truthiness, ref spectrum.py:62:
     // off index 0 or absent) returns its plain sum; a file WITH one returns

@@ -8,8 +8,8 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.SerializableWritable
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.catalyst.util.{GenericArrayData, SQLOrderingUtil}
+import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, UnsafeArrayData}
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.{Expressions, NamedReference, SortDirection, SortOrder, Transform}
 import org.apache.spark.sql.connector.expressions.aggregate.{AggregateFunc, Aggregation, Count, CountStar, Max, Min, Sum}
@@ -58,8 +58,12 @@ import SdfitsFormat._
   * without the cards. The reader checks every row it returns: a key cell
   * that differs from its file's `KEYVAL`, or a sort column that decreases,
   * fails the read with [[SdfitsVerificationException]]. The scan reports
-  * nothing when any file lacks the cards, when the key column is pruned,
-  * and for pushed-down aggregates.
+  * nothing when any file lacks the cards or the key column is pruned, and
+  * for pushed-down aggregates. A pushed aggregate that groups by the key of
+  * a directory whose files carry distinct keys is complete instead
+  * ([[SupportsPushDownAggregates.supportCompletePushDown]]): each file's
+  * partial rows are final, their key cells are checked the same way, and
+  * Spark plans no merge and no shuffle.
   */
 class SdfitsTableProvider extends TableProvider with DataSourceRegister {
 
@@ -435,6 +439,16 @@ private[sdfits] class SdfitsScanBuilder(full: StructType, path: String,
   private var pushed: Array[Filter] = Array.empty
   private var aggs: Seq[SdfitsPushdown.Agg] = Nil
   private var groupBy: Seq[String] = Nil
+  private var pushedAggregation: Option[Aggregation] = None
+  // Listed and read (primary headers only) when an aggregate asks whether
+  // it can be pushed completely; the scan then reuses this listing.
+  private lazy val listing: (Seq[String], Option[SdfitsTableProvider.Stamp]) = {
+    val conf = SdfitsTableProvider.driverConf()
+    val files =
+      try SdfitsTableProvider.listFiles(path, conf)
+      catch { case _: java.io.FileNotFoundException => Nil }
+    (files, if (files.isEmpty) None else SdfitsTableProvider.stampOf(files, full, conf))
+  }
   override def pruneColumns(requiredSchema: StructType): Unit = required = requiredSchema
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
     val (sup, unsup) = filters.partition(SdfitsPushdown.supported(full, _))
@@ -449,13 +463,24 @@ private[sdfits] class SdfitsScanBuilder(full: StructType, path: String,
     if (specs.isEmpty || specs.exists(_.isEmpty)) return false
     aggs = specs.flatten.toSeq
     groupBy = groups.get
+    pushedAggregation = Some(aggregation)
     true
   }
+  /** Complete when the aggregate groups by the stamped key and no two files
+    * share a key: each group's rows then sit in one file, whose partial row
+    * is the group's final row, and Spark plans no merge (and no shuffle).
+    */
+  override def supportCompletePushDown(aggregation: Aggregation): Boolean =
+    SdfitsPushdown.groupCols(full, aggregation.groupByExpressions).exists { groups =>
+      listing._2.exists(s => groups.contains(s.keyCol) && s.keys.distinct.length == s.keys.length)
+    } && aggregation.aggregateExpressions.forall(SdfitsPushdown.toAgg(full, _).isDefined)
   override def build(): Scan = {
     val out =
       if (aggs.nonEmpty) SdfitsPushdown.aggSchema(full, groupBy, aggs)
       else required
-    new SdfitsScan(full, out, path, pushed, groupBy, aggs, channels)
+    val complete = pushedAggregation.filter(supportCompletePushDown)
+      .map(_ => (listing._1, listing._2.get))
+    new SdfitsScan(full, out, path, pushed, groupBy, aggs, channels, complete)
   }
 }
 
@@ -470,9 +495,13 @@ private[sdfits] case class SdfitsInputPartition(file: String, key: Option[Any])
   }.orNull
 }
 
+/** `complete`: the builder's listing and stamp when a pushed aggregate is
+  * complete (see [[SdfitsScanBuilder.supportCompletePushDown]]).
+  */
 private[sdfits] class SdfitsScan(full: StructType, output: StructType,
     path: String, filters: Array[Filter], groupBy: Seq[String],
-    aggs: Seq[SdfitsPushdown.Agg], channels: Option[(Int, Int)])
+    aggs: Seq[SdfitsPushdown.Agg], channels: Option[(Int, Int)],
+    complete: Option[(Seq[String], SdfitsTableProvider.Stamp)])
     extends Scan with Batch with SupportsReportStatistics
     with SupportsReportPartitioning with SupportsReportOrdering {
   // Resolved on the driver (session fs settings apply) and shipped to the
@@ -481,17 +510,22 @@ private[sdfits] class SdfitsScan(full: StructType, output: StructType,
   private val conf = new SerializableWritable(SdfitsTableProvider.driverConf())
   // One listing and one header pass per scan: the reported partitioning and
   // the planned partitions must describe the same files.
-  private lazy val files = SdfitsTableProvider.listFiles(path, conf.value)
+  private lazy val files =
+    complete.map(_._1).getOrElse(SdfitsTableProvider.listFiles(path, conf.value))
+  // A complete aggregate's stamp only drives its reader's key check: Spark
+  // maps a reported partitioning onto the table's attributes, which a
+  // pushed aggregate's output does not carry, so it reports nothing.
   private lazy val stamp: Option[SdfitsTableProvider.Stamp] =
-    if (aggs.nonEmpty || files.isEmpty) None
+    if (aggs.nonEmpty) complete.map(_._2)
+    else if (files.isEmpty) None
     else SdfitsTableProvider.stampOf(files, output, conf.value)
   override def outputPartitioning(): Partitioning = stamp match {
-    case Some(s) => new KeyGroupedPartitioning(
+    case Some(s) if aggs.isEmpty => new KeyGroupedPartitioning(
       Array(Expressions.identity(s.keyCol)), files.length)
-    case None => new UnknownPartitioning(0)
+    case _ => new UnknownPartitioning(0)
   }
   override def outputOrdering(): Array[SortOrder] =
-    stamp.toSeq.flatMap(s => s.keyCol +: s.sortCols)
+    stamp.filter(_ => aggs.isEmpty).toSeq.flatMap(s => s.keyCol +: s.sortCols)
       .map(c => Expressions.sort(Expressions.column(c), SortDirection.ASCENDING)).toArray
   override def readSchema(): StructType = output
   override def toBatch: Batch = this
@@ -544,7 +578,8 @@ private[sdfits] class SdfitsReaderFactory(
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[SdfitsInputPartition]
     if (aggs.nonEmpty)
-      new SdfitsAggReader(p.file, full, filters, groupBy, aggs, conf.value)
+      new SdfitsAggReader(p.file, full, filters, groupBy, aggs,
+        for ((keyCol, _) <- reported; key <- p.key) yield (keyCol, key), conf.value)
     else {
       val check = for ((keyCol, sortCols) <- reported; key <- p.key)
         yield new StampCheck(p.file, output, keyCol, key, sortCols)
@@ -671,8 +706,10 @@ private[sdfits] class SdfitsPartitionReader(
     while (i < projected.length) {
       vals(i) = vals(i) match {
         case s: String          => UTF8String.fromString(s)
-        case a: Array[Double]   => new GenericArrayData(a)
-        case a: Array[Float]    => new GenericArrayData(a)
+        // Unboxed: one copy of the decoded primitives, which the scan's
+        // UnsafeProjection then copies as one block.
+        case a: Array[Double]   => UnsafeArrayData.fromPrimitiveArray(a)
+        case a: Array[Float]    => UnsafeArrayData.fromPrimitiveArray(a)
         case other              => other
       }
       i += 1
@@ -689,11 +726,14 @@ private[sdfits] class SdfitsPartitionReader(
   * NAXIS2 with zero cell decodes; otherwise one pass decodes only the
   * filter + grouping + aggregated columns. Spark plans the final merge
   * (SUM over the partial counts, MIN/MAX over the partial extrema,
-  * re-grouped on the pushed keys).
+  * re-grouped on the pushed keys), unless the pushdown is complete:
+  * `stampedKey` (the key column and this file's `KEYVAL`) is then set, and
+  * every aggregated row's key cell is checked against it.
   */
 private[sdfits] class SdfitsAggReader(
     file: String, full: StructType, filters: Array[Filter],
-    groupBy: Seq[String], aggs: Seq[SdfitsPushdown.Agg], conf: Configuration)
+    groupBy: Seq[String], aggs: Seq[SdfitsPushdown.Agg],
+    stampedKey: Option[(String, Any)], conf: Configuration)
     extends SdfitsFileAccess(file, full, conf) with PartitionReader[InternalRow] {
   import SdfitsPushdown._
 
@@ -738,6 +778,7 @@ private[sdfits] class SdfitsAggReader(
       }
       if (ok) {
         val key = keyCols.map(decode(r, _))
+        checkKey(key, r)
         val st = groups.getOrElseUpdate(key, new GroupState)
         st.count += 1
         cols.foreach { case (n, ca) =>
@@ -773,6 +814,15 @@ private[sdfits] class SdfitsAggReader(
       }).toArray[Any])
     }.toSeq
   }
+
+  // Under a complete pushdown, every aggregated row's key cell must equal
+  // its file's KEYVAL, as the row reader's StampCheck checks.
+  private val keyAt = stampedKey.map { case (c, _) => groupBy.indexOf(c) }.getOrElse(-1)
+  private def checkKey(key: Seq[Any], r: Int): Unit =
+    if (keyAt >= 0 && key(keyAt) != stampedKey.get._2)
+      throw new SdfitsVerificationException(
+        s"$file: ${stampedKey.get._1} '${key(keyAt)}' at row $r differs from its " +
+          s"${SdfitsFormat.KeyValueCard} card '${stampedKey.get._2}'")
 
   private val out: Iterator[InternalRow] = compute().iterator
   private var current: InternalRow = _

@@ -3,10 +3,11 @@ package graft.tools
 import java.util.concurrent.ConcurrentLinkedQueue
 
 import org.apache.spark.metrics.source.CodegenMetrics
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.{Window => LWindow}
-import org.apache.spark.sql.execution.{FormattedMode, QueryExecution}
+import org.apache.spark.sql.execution.{FormattedMode, QueryExecution, SQLExecution}
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.{Bench, GraftSession, SparkEntry}
@@ -22,8 +23,9 @@ import graft.{Bench, GraftSession, SparkEntry}
   *    warm rerun compiles none while its classes fit Spark's codegen
   *    cache, so a growing count flags a grown working set).
   *  - `jobs`: one warm pass, then the measured pass with one line per Spark
-  *    job (duration, stage count, stage names and task counts) — which
-  *    actions make up a query's job count.
+  *    job (duration, stage count, the `[action at File.scala:line]` of its
+  *    SQL execution, stage names and task counts) — which actions make up
+  *    a query's job count.
   *  - `plan`: `explain("formatted")` of the query's final plan, to
   *    `<outDir>/<q><suffix>.txt` (the evidence-trail convention is
   *    `_before` / `_after`, as in plans/r17) or to stdout without outDir.
@@ -124,28 +126,61 @@ object Probe {
     }
   }
 
-  /** Warm pass, then the measured pass with a per-job listener. */
+  /** `<method> at <file>:<line>`, Spark's short call-site form, from the long
+    * form (the last Spark frame, then the first user frame) that a SQL
+    * execution's start event carries as its details.
+    */
+  private[tools] def callSite(details: String): Option[String] = {
+    val Frame = """(.+)\.([^.]+)\((.*)\)""".r
+    details.linesIterator.take(2).toSeq match {
+      case Seq(Frame(cls, method, _), Frame(_, _, at)) =>
+        Some(s"${if (method == "<init>") cls.split('.').last else method} at $at")
+      case _ => None
+    }
+  }
+
+  /** The call site of every job AQE submits from its stage thread pool. */
+  private val pooledSite = "withThreadLocalCaptured"
+
+  /** Warm pass, then the measured pass with a per-job listener. A job that
+    * runs under a SQL execution (every AQE stage job, whose own call site
+    * is a thread-pool frame) is named by the action that started the
+    * execution, e.g. `localCheckpoint at Dedup.scala:409`. Bench runs the
+    * returned frame outside any SQL execution, so its stage jobs read
+    * `returned frame`.
+    */
   private def auditJobs(spark: SparkSession, sfDir: String, name: String,
       fn: (SparkSession, String) => DataFrame): Boolean = {
     if (!Bench.measure(spark, sfDir, name, fn, gc = true).ok) return false
-    val jobs = new ConcurrentLinkedQueue[(Int, Int, String)]()
+    val jobs = new ConcurrentLinkedQueue[(Int, Int, Option[Long], String)]()
     val starts = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
     val durs = new java.util.concurrent.ConcurrentHashMap[Int, Double]()
+    val actions = new java.util.concurrent.ConcurrentHashMap[Long, String]()
     val listener = new SparkListener {
       override def onJobStart(js: SparkListenerJobStart): Unit = {
         starts.put(js.jobId, js.time)
-        val site = js.stageInfos.map(si => s"${si.name}(${si.numTasks}t)").mkString(" | ")
-        jobs.add((js.jobId, js.stageInfos.size, site))
+        val execution = Option(js.properties)
+          .flatMap(p => Option(p.getProperty(SQLExecution.EXECUTION_ID_KEY))).map(_.toLong)
+        val stages = js.stageInfos.map(si => s"${si.name}(${si.numTasks}t)").mkString(" | ")
+        jobs.add((js.jobId, js.stageInfos.size, execution, stages))
       }
       override def onJobEnd(je: SparkListenerJobEnd): Unit =
         durs.put(je.jobId, (je.time - starts.getOrDefault(je.jobId, je.time)) / 1e3)
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart =>
+          callSite(s.details).foreach(actions.put(s.executionId, _))
+        case _ =>
+      }
     }
     spark.sparkContext.addSparkListener(listener)
     val r = try Bench.measure(spark, sfDir, name, fn, gc = true)
       finally spark.sparkContext.removeSparkListener(listener)
     println(f"== $name: ${r.jobs} jobs, ${r.sec}%.2f s ==")
-    jobs.forEach { case (id, nStages, site) =>
-      println(f"job $id%3d  ${durs.getOrDefault(id, -1.0)}%6.2f s  stages=$nStages%2d  $site")
+    jobs.forEach { case (id, nStages, execution, stages) =>
+      val action = execution.flatMap(x => Option(actions.get(x)))
+        .orElse(if (execution.isEmpty && stages.contains(pooledSite)) Some("returned frame") else None)
+        .fold("")(a => s"[$a]  ")
+      println(f"job $id%3d  ${durs.getOrDefault(id, -1.0)}%6.2f s  stages=$nStages%2d  $action$stages")
     }
     r.ok
   }

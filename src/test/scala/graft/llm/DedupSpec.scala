@@ -255,6 +255,60 @@ class DedupSpec extends SparkTestBase {
     }
   }
 
+  /** Components by scalar union-find over the collected pairs: each root
+    * is its component's minimum (the larger root always hangs under the
+    * smaller one).
+    */
+  private def unionFind(ps: Seq[(Long, Long)]): Map[Long, Long] = {
+    val parent = scala.collection.mutable.Map.empty[Long, Long]
+    def find(x: Long): Long = {
+      val p = parent.getOrElseUpdate(x, x)
+      if (p == x) x else { val r = find(p); parent(x) = r; r }
+    }
+    for ((a, b) <- ps) {
+      val (ra, rb) = (find(a), find(b))
+      if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+    }
+    parent.keys.map(k => k -> find(k)).toMap
+  }
+
+  private def randomPairs(n: Int, nEdges: Int, seed: Long): Seq[(Long, Long)] = {
+    val rnd = new scala.util.Random(seed)
+    Seq.fill(nEdges)((rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))
+  }
+
+  test("both component functions equal a scalar union-find") {
+    val cases = Seq(
+      "self, duplicate and reversed pairs, an isolated node" ->
+        Seq((1L, 2L), (2L, 1L), (1L, 2L), (3L, 3L), (2L, 4L), (9L, 9L), (7L, 6L), (6L, 7L)),
+      "random sparse" -> randomPairs(60, 40, 1L),
+      "random dense" -> randomPairs(40, 90, 2L),
+      "random with self-pairs" -> randomPairs(12, 30, 3L),
+      "64-chain" -> (0L until 63L).map(i => (i, i + 1)),
+      "64-chain, descending ids" -> (0L until 63L).map(i => (100L - i, 99L - i)))
+    for ((name, ps) <- cases) {
+      val want = unionFind(ps)
+      val pairs = ps.toDF("id_a", "id_b")
+      assert(Dedup.nearDupComponents(pairs, maxIter = 100).as[(Long, Long)].collect().toMap == want, name)
+      assert(Dedup.nearDupComponentsStar(pairs).as[(Long, Long)].collect().toMap == want, name)
+    }
+  }
+
+  test("jobs per round: propagation 4, star 8") {
+    // A path of n ids in ascending order takes propagation n rounds (the
+    // minimum moves one hop per round, and one more round sees no change).
+    def chain(n: Int) = (0L until n - 1L).map(i => (i, i + 1)).toDF("id_a", "id_b")
+    val prop = Seq(3, 4, 5).map(n => jobsOf(Dedup.nearDupComponents(chain(n)).collect()))
+    assert(prop.sliding(2).map { case Seq(a, b) => b - a }.toSeq == Seq(4, 4), prop)
+    // Star contraction closes one edge in 1 round and the 64-chain in 7.
+    def rounds(df: org.apache.spark.sql.DataFrame): Int =
+      (1 to 12).find(r => scala.util.Try(Dedup.nearDupComponentsStar(df, maxIter = r)).isSuccess).get
+    val (edge, long) = (Seq((1L, 2L)).toDF("id_a", "id_b"), chain(64))
+    assert((rounds(edge), rounds(long)) == (1, 7))
+    val star = Seq(edge, long).map(df => jobsOf(Dedup.nearDupComponentsStar(df).collect()))
+    assert(star(1) - star(0) == 6 * 8, star)
+  }
+
   test("softDedupWeights: cluster mass sums to ~one doc, singletons keep 1e6") {
     val docs5 = Seq(1L, 2L, 3L, 4L, 5L).toDF("doc_id")
     val pairs = Seq((1L, 2L), (2L, 3L)).toDF("id_a", "id_b")

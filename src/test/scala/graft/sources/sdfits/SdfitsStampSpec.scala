@@ -118,6 +118,53 @@ class SdfitsStampSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
     assert(counts.as[(String, Long)].collect().toMap == Map("a" -> 10L, "b" -> 10L))
   }
 
+  /** Whether the scan under `df` took the aggregate. */
+  private def pushed(df: DataFrame): Boolean =
+    df.queryExecution.executedPlan.toString.contains("PushedAggregates")
+
+  test("a pushed-down aggregate grouped by the stamped key is complete: no shuffle") {
+    val stamped = newDir("graft-stamp-agg")
+    writeRaw(s"$stamped/a.fits", Some("a"), rowsOf("a", 0L until 10L))
+    writeRaw(s"$stamped/b.fits", Some("b"), rowsOf("b", 0L until 4L))
+    val counts = read(stamped).groupBy("FILE_ID").count()
+    assert(pushed(counts))
+    assert(shuffles(counts) == 0)
+    assert(counts.as[(String, Long)].collect().toMap == Map("a" -> 10L, "b" -> 4L))
+    val extrema = read(stamped).filter(col("ROWIDX") >= 2).groupBy("FILE_ID", "ROWIDX")
+      .agg(max("VAL").as("m"), sum("ROWIDX").as("s"), avg("VAL").as("a"))
+    assert(pushed(extrema) && shuffles(extrema) == 0)
+    assert(extrema.count() == 10)
+    assert(extrema.filter(col("FILE_ID") === "a" && col("ROWIDX") === 3).as[(String, Long, Double, Long, Double)]
+      .head() == (("a", 3L, 1.5, 3L, 1.5)))
+    // grouped by another column, over unstamped files, or over two files
+    // sharing a key, the partial rows merge through one shuffle as before
+    val byRow = read(stamped).groupBy("ROWIDX").count()
+    assert(pushed(byRow) && shuffles(byRow) == 1)
+    val unstamped = newDir("graft-unstamped-agg")
+    writeRaw(s"$unstamped/a.fits", None, rowsOf("a", 0L until 10L))
+    writeRaw(s"$unstamped/b.fits", None, rowsOf("b", 0L until 4L))
+    val plain = read(unstamped).groupBy("FILE_ID").count()
+    assert(pushed(plain) && shuffles(plain) == 1)
+    assert(plain.as[(String, Long)].collect().toMap == Map("a" -> 10L, "b" -> 4L))
+    val shared = newDir("graft-stamp-agg-shared")
+    writeRaw(s"$shared/a1.fits", Some("a"), rowsOf("a", 0L until 6L))
+    writeRaw(s"$shared/a2.fits", Some("a"), rowsOf("a", 6L until 10L))
+    val merged = read(shared).groupBy("FILE_ID").count()
+    assert(pushed(merged) && shuffles(merged) == 1)
+    assert(merged.as[(String, Long)].collect().toMap == Map("a" -> 10L))
+  }
+
+  test("a pushed-down aggregate over a file whose key cells disagree with its card fails") {
+    val dir = newDir("graft-stamp-agg-key")
+    writeRaw(s"$dir/a.fits", Some("a"), rowsOf("a", 0L until 10L))
+    writeRaw(s"$dir/b.fits", Some("b"), rowsOf("b", 0L until 5L) ++ rowsOf("a", 5L until 10L))
+    val counts = read(dir).groupBy("FILE_ID").count()
+    assert(pushed(counts))
+    val e = failure(counts.collect())
+    assert(e.isInstanceOf[SdfitsVerificationException], e)
+    assert(e.getMessage.contains("FILE_ID 'a' at row 5 differs from its KEYVAL card 'b'"), e.getMessage)
+  }
+
   test("two stamped files with one key read correctly: Spark groups them and drops the order") {
     val dir = newDir("graft-stamp-dup")
     writeRaw(s"$dir/a1.fits", Some("a"), rowsOf("a", 0L until 10L by 2L))

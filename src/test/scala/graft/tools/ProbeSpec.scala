@@ -51,6 +51,24 @@ class ProbeSpec extends SparkTestBase {
     assert(reported == bench && listed == bench, out)
   }
 
+  test("jobs names the action behind each AQE stage job") {
+    val (code, out, _) = probe("jobs", sf, "q_dedup_components_star")
+    assert(code == 0)
+    val lines = out.linesIterator.filter(_.startsWith("job ")).toSeq
+    assert(lines.nonEmpty)
+    // a stage job's own call site is the AQE thread pool's frame; the
+    // action of its SQL execution names it, or the returned frame's run
+    val action = """\[(\w+ at \w+\.(?:scala|java):\d+|returned frame)\]""".r
+    val pooled = lines.filter(_.contains("withThreadLocalCaptured"))
+    assert(pooled.nonEmpty && pooled.forall(action.findFirstIn(_).isDefined), out)
+    assert(lines.exists(_.contains("[returned frame]")), out)
+    assert(lines.exists(_.contains("localCheckpoint at Dedup.scala:")), out)
+    assert(Probe.callSite("org.apache.spark.sql.classic.Dataset.localCheckpoint(Dataset.scala:10)\n" +
+      "graft.llm.Dedup$.nearDupComponentsStar(Dedup.scala:409)\nx.y(Z.scala:1)")
+      .contains("localCheckpoint at Dedup.scala:409"))
+    assert(Probe.callSite("<unknown>").isEmpty)
+  }
+
   test("windows flags the registry's unpartitioned windows") {
     val (code, out, _) = probe("windows", sf, "all")
     assert(code == 0)
