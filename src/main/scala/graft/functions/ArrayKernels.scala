@@ -222,16 +222,17 @@ case class ArrayMean(child: Expression) extends UnaryExpression {
 
 /** F7 channel pick: the elements at `indices` (0-based), in that order. Like
   * the `transform` over the literal index array it replaced, it is never
-  * null itself: a null input gives an array of nulls.
+  * null itself: a null input gives an array of nulls, so its elements are
+  * nullable whenever the input is (where that form's type says otherwise).
   */
 case class PickChannels(child: Expression, indices: Seq[Int],
     failOnError: Boolean = SQLConf.get.ansiEnabled) extends UnaryExpression {
   @transient private lazy val idx: Array[Int] = indices.toArray
   private def elementType: DataType = child.dataType.asInstanceOf[ArrayType].elementType
-  // element_at's nullability: under ANSI an out-of-range index throws, so
-  // only the input's own null elements remain.
-  override def dataType: DataType = ArrayType(elementType,
-    containsNull = !failOnError || child.dataType.asInstanceOf[ArrayType].containsNull)
+  // Under ANSI an out-of-range index throws, so only a null input row or
+  // the input's own null elements leave nulls.
+  override def dataType: DataType = ArrayType(elementType, containsNull =
+    !failOnError || child.nullable || child.dataType.asInstanceOf[ArrayType].containsNull)
   override def nullable: Boolean = false
   override def prettyName: String = "pick_channels"
 

@@ -76,51 +76,52 @@ object TokenShards {
     }
     require(pathOf.values.toSet.size == pathOf.size,
       "gtok: unresolvable file-name collision among shardCol keys")
-    val conf = new org.apache.spark.SerializableWritable(
-      spark.sessionState.newHadoopConf())
     val projCols = Seq(col(shardCol).cast("string").as("__k"),
       col(seqCol).cast("array<int>").as("__seq")) ++ orderCols.map(col)
-    val manifest: Array[(String, String, Long, Long, Long)] = df.select(projCols: _*)
-      .repartition(col("__k"))
-      .sortWithinPartitions(col("__k") +: orderCols.map(col): _*)
-      .mapPartitions { (it: Iterator[Row]) =>
-        val fsConf = conf.value
-        val rows = it.buffered
-        val out = scala.collection.mutable.ArrayBuffer.empty[(String, String, Long, Long, Long)]
-        while (rows.hasNext) {
-          val key = rows.head.getString(0)
-          val dest = new Path(pathOf(key))
-          val fs = dest.getFileSystem(fsConf)
-          val temp = new Path(dest.getParent, s".${dest.getName}.inprogress")
-          val os = new DataOutputStream(
-            new java.io.BufferedOutputStream(fs.create(temp, true), 1 << 16))
-          val crc = new CRC32
-          var nSeq = 0L; var nTok = 0L
-          def word(v: Int): Unit = {
-            os.writeInt(v)
-            crc.update((v >>> 24) & 0xff); crc.update((v >>> 16) & 0xff)
-            crc.update((v >>> 8) & 0xff); crc.update(v & 0xff)
-          }
-          try {
-            os.writeInt(Magic); os.writeShort(Version)
-            val kb = key.getBytes(UTF_8)
-            os.writeShort(kb.length); os.write(kb)
-            while (rows.hasNext && rows.head.getString(0) == key) {
-              val seq = rows.next().getSeq[Int](1)
-              word(seq.length)
-              seq.foreach(word)
-              nSeq += 1; nTok += seq.length
+    val manifest: Array[(String, String, Long, Long, Long)] =
+      HadoopConf.withBroadcast(spark) { conf =>
+        df.select(projCols: _*)
+          .repartition(col("__k"))
+          .sortWithinPartitions(col("__k") +: orderCols.map(col): _*)
+          .mapPartitions { (it: Iterator[Row]) =>
+            val fsConf = conf.value.value
+            val rows = it.buffered
+            val out = scala.collection.mutable.ArrayBuffer.empty[(String, String, Long, Long, Long)]
+            while (rows.hasNext) {
+              val key = rows.head.getString(0)
+              val dest = new Path(pathOf(key))
+              val fs = dest.getFileSystem(fsConf)
+              val temp = new Path(dest.getParent, s".${dest.getName}.inprogress")
+              val os = new DataOutputStream(
+                new java.io.BufferedOutputStream(fs.create(temp, true), 1 << 16))
+              val crc = new CRC32
+              var nSeq = 0L; var nTok = 0L
+              def word(v: Int): Unit = {
+                os.writeInt(v)
+                crc.update((v >>> 24) & 0xff); crc.update((v >>> 16) & 0xff)
+                crc.update((v >>> 8) & 0xff); crc.update(v & 0xff)
+              }
+              try {
+                os.writeInt(Magic); os.writeShort(Version)
+                val kb = key.getBytes(UTF_8)
+                os.writeShort(kb.length); os.write(kb)
+                while (rows.hasNext && rows.head.getString(0) == key) {
+                  val seq = rows.next().getSeq[Int](1)
+                  word(seq.length)
+                  seq.foreach(word)
+                  nSeq += 1; nTok += seq.length
+                }
+                os.writeInt(Sentinel)
+                os.writeLong(nSeq); os.writeLong(nTok); os.writeLong(crc.getValue)
+              } finally os.close()
+              fs.delete(dest, false)
+              if (!fs.rename(temp, dest))
+                throw new java.io.IOException(s"gtok: commit rename failed for $dest")
+              out += ((key, pathOf(key), nSeq, nTok, crc.getValue))
             }
-            os.writeInt(Sentinel)
-            os.writeLong(nSeq); os.writeLong(nTok); os.writeLong(crc.getValue)
-          } finally os.close()
-          fs.delete(dest, false)
-          if (!fs.rename(temp, dest))
-            throw new java.io.IOException(s"gtok: commit rename failed for $dest")
-          out += ((key, pathOf(key), nSeq, nTok, crc.getValue))
-        }
-        out.iterator
-      }.collect()
+            out.iterator
+          }.collect()
+      }
     manifest.toSeq.sortBy(_._1)
       .toDF(shardCol, "path", "n_sequences", "n_tokens", "crc32")
   }

@@ -396,40 +396,40 @@ object Warc {
     }
     require(pathOf.values.toSet.size == pathOf.size,
       "warc: unresolvable file-name collision among shardCol keys")
-    val conf = new org.apache.spark.SerializableWritable(
-      spark.sessionState.newHadoopConf())
     val projCols = Seq(col(shardCol).cast("string").as("__k"),
       col(uriCol).cast("string").as("__uri"),
       col(dateCol).cast("string").as("__date"),
       col(payloadCol).cast("binary").as("__p")) ++ sortCols.map(col)
-    df.select(projCols: _*)
-      .repartition(col("__k"))
-      .sortWithinPartitions(col("__k") +: sortCols.map(col): _*)
-      .foreachPartition { (it: Iterator[org.apache.spark.sql.Row]) =>
-        val fsConf = conf.value
-        val rows = it.buffered
-        while (rows.hasNext) {
-          val key = rows.head.getString(0)
-          val dest = new Path(pathOf(key))
-          val fs = dest.getFileSystem(fsConf)
-          // temp + rename: a task dying mid-encode never leaves a
-          // truncated shard visible (listings skip dot-files)
-          val temp = new Path(dest.getParent, s".${dest.getName}.inprogress")
-          val os = fs.create(temp, true)
-          try {
-            while (rows.hasNext && rows.head.getString(0) == key) {
-              val r = rows.next()
-              val rec = new ByteArrayOutputStream()
-              encodeRecord(rec, "response", r.getString(1), r.getString(2),
-                r.getAs[Array[Byte]](3))
-              os.write(if (gzip) gzipMember(rec.toByteArray) else rec.toByteArray)
-            }
-          } finally os.close()
-          fs.delete(dest, false)
-          if (!fs.rename(temp, dest))
-            throw new java.io.IOException(s"warc: commit rename failed for $dest")
+    HadoopConf.withBroadcast(spark) { conf =>
+      df.select(projCols: _*)
+        .repartition(col("__k"))
+        .sortWithinPartitions(col("__k") +: sortCols.map(col): _*)
+        .foreachPartition { (it: Iterator[org.apache.spark.sql.Row]) =>
+          val fsConf = conf.value.value
+          val rows = it.buffered
+          while (rows.hasNext) {
+            val key = rows.head.getString(0)
+            val dest = new Path(pathOf(key))
+            val fs = dest.getFileSystem(fsConf)
+            // temp + rename: a task dying mid-encode never leaves a
+            // truncated shard visible (listings skip dot-files)
+            val temp = new Path(dest.getParent, s".${dest.getName}.inprogress")
+            val os = fs.create(temp, true)
+            try {
+              while (rows.hasNext && rows.head.getString(0) == key) {
+                val r = rows.next()
+                val rec = new ByteArrayOutputStream()
+                encodeRecord(rec, "response", r.getString(1), r.getString(2),
+                  r.getAs[Array[Byte]](3))
+                os.write(if (gzip) gzipMember(rec.toByteArray) else rec.toByteArray)
+              }
+            } finally os.close()
+            fs.delete(dest, false)
+            if (!fs.rename(temp, dest))
+              throw new java.io.IOException(s"warc: commit rename failed for $dest")
+          }
         }
-      }
+    }
     counts.toSeq.sortBy(_._1)
       .map { case (k, n) => (k, pathOf(k), n) }
       .toDF(shardCol, "path", "n_records")
@@ -457,18 +457,22 @@ object Warc {
     * off the open HDFS/posix stream (a whole member is never buffered).
     * `file_id` is the file's index in the sorted listing; the mapping is
     * returned alongside so callers can join names back.
+    *
+    * The tasks read the session's Hadoop configuration from one broadcast
+    * per call. The returned datasets are lazy and each runs the read again,
+    * so the broadcast lives as long as they do; Spark's ContextCleaner
+    * frees it once they are unreachable.
     */
   def readFiles(spark: SparkSession, dir: String)
       : (Dataset[WarcRecord], Dataset[WarcQuarantine], Map[Long, String]) = {
-    val conf = new org.apache.spark.util.SerializableConfiguration(
-      spark.sparkContext.hadoopConfiguration)
     val root = new Path(dir)
-    val fs = root.getFileSystem(conf.value)
+    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
     val files = fs.listStatus(root).filter(_.isFile).map(_.getPath.toString)
       .filter(p => p.endsWith(".warc") || p.endsWith(".warc.gz")).sorted
     require(files.nonEmpty, s"warc: no input files under $dir")
     val byId = files.zipWithIndex.map { case (p, i) => (i.toLong, p) }.toMap
     implicit val enc = Encoders.product[WarcSplit]
+    val conf = HadoopConf.broadcast(spark)
     val split = spark
       .createDataset(byId.toSeq.map { case (i, p) => (i, p) })(
         Encoders.tuple(Encoders.scalaLong, Encoders.STRING))
@@ -476,7 +480,7 @@ object Warc {
       .mapPartitions { it =>
         it.flatMap { case (fileId, path) =>
           val p = new Path(path)
-          val fsIn = p.getFileSystem(conf.value).open(p)
+          val fsIn = p.getFileSystem(conf.value.value).open(p)
           val in: java.io.InputStream =
             if (path.endsWith(".gz")) new GzipChainStream(fsIn) else fsIn
           // stream is closed when the iterator drains (both end paths hit it)

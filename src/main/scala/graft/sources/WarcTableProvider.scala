@@ -5,8 +5,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.spark.SerializableWritable
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
@@ -16,6 +15,7 @@ import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.util.SerializableConfiguration
 
 /** Read-only DataSource V2 over WARC files — the SQL surface of
   * [[Warc.readFiles]]: `spark.read.format("warc").load(path)` where `path`
@@ -71,10 +71,6 @@ object WarcTableProvider {
     StructField("content_length", LongType, nullable = false),
     StructField("payload", BinaryType, nullable = false)))
 
-  private[sources] def driverConf(): Configuration =
-    SparkSession.getActiveSession.map(_.sessionState.newHadoopConf())
-      .getOrElse(new Configuration())
-
   private[sources] def listFiles(path: String, conf: Configuration): Seq[String] = {
     val p = new Path(path)
     val fs = p.getFileSystem(conf)
@@ -109,26 +105,28 @@ private[sources] case class WarcInputPartition(file: String) extends InputPartit
 
 private[sources] class WarcScan(path: String, required: StructType, onFault: String)
     extends Scan with Batch {
-  private val conf = new SerializableWritable(WarcTableProvider.driverConf())
+  // The readers' configuration: one broadcast per scan, made when Spark
+  // first asks for a reader factory, so AQE re-planning this scan reuses it.
+  private lazy val taskConf = HadoopConf.broadcast()
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
   override def planInputPartitions(): Array[InputPartition] = {
-    val files = WarcTableProvider.listFiles(path, conf.value)
+    val files = WarcTableProvider.listFiles(path, HadoopConf.driver())
     if (files.isEmpty)
       throw new java.io.FileNotFoundException(s"warc: no input files at $path")
     files.map(WarcInputPartition.apply).toArray
   }
   override def createReaderFactory(): PartitionReaderFactory =
-    new WarcReaderFactory(required, onFault, conf)
+    new WarcReaderFactory(required, onFault, taskConf)
 }
 
 private[sources] class WarcReaderFactory(
     required: StructType, onFault: String,
-    conf: SerializableWritable[Configuration])
+    val conf: Broadcast[SerializableConfiguration])
     extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
     new WarcPartitionReader(partition.asInstanceOf[WarcInputPartition].file,
-      required, onFault, conf.value)
+      required, onFault, conf.value.value)
 }
 
 private[sources] class WarcPartitionReader(

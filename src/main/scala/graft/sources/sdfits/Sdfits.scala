@@ -1,6 +1,7 @@
 package graft.sources.sdfits
 
 import graft.model.HeaderRecord
+import graft.sources.HadoopConf
 
 /** User-facing helpers around the SDFITS connector: the reference's
   * `hdul[0].header` half of the two-part open (the BINTABLE half is
@@ -16,7 +17,7 @@ object Sdfits {
     */
   def readHeader(path: String): HeaderRecord.Header = {
     val (primary, _) = SdfitsFormat.open(
-      SdfitsTableProvider.readFully(path, SdfitsTableProvider.driverConf()))
+      SdfitsTableProvider.readFully(path, HadoopConf.driver()))
     def need(k: String): String = primary.value(k).getOrElse(
       throw new SdfitsFormat.SdfitsVerificationException(s"primary header missing $k"))
     HeaderRecord.Header(

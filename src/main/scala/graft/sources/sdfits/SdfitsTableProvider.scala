@@ -4,9 +4,8 @@ import java.util
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.SerializableWritable
-import org.apache.spark.sql.SparkSession
+import org.apache.hadoop.fs.Path
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
@@ -20,6 +19,9 @@ import org.apache.spark.sql.sources.{DataSourceRegister, EqualTo, Filter, Greate
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.util.SerializableConfiguration
+
+import graft.sources.HadoopConf
 
 import SdfitsFormat._
 
@@ -72,7 +74,7 @@ class SdfitsTableProvider extends TableProvider with DataSourceRegister {
   override def supportsExternalMetadata(): Boolean = true
 
   override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
-    val conf = SdfitsTableProvider.driverConf()
+    val conf = HadoopConf.driver()
     // A missing or fileless path is legal for the WRITE side (the table
     // schema then comes from the query via ACCEPT_ANY_SCHEMA); READS of
     // either still fail in planInputPartitions ("no input files").
@@ -97,15 +99,11 @@ object SdfitsTableProvider {
     Option(options.get("path")).getOrElse(
       throw new IllegalArgumentException("sdfits: 'path' option is required"))
 
-  /** Session Hadoop configuration when a session is active (fs credentials,
-    * defaultFS, custom schemes — a bare `new Configuration()` would ignore
-    * them and break any configured filesystem), defaults otherwise.
+  /** The input files at `path` with their lengths in bytes: a directory's
+    * files, sorted, without dot- and underscore-prefixed names, or `path`
+    * itself when it is a file.
     */
-  private[sdfits] def driverConf(): Configuration =
-    SparkSession.getActiveSession.map(_.sessionState.newHadoopConf())
-      .getOrElse(new Configuration())
-
-  private[sdfits] def listFiles(path: String, conf: Configuration): Seq[String] = {
+  private[sdfits] def listSized(path: String, conf: Configuration): Seq[(String, Long)] = {
     val p = new Path(path)
     val fs = p.getFileSystem(conf)
     val st = fs.getFileStatus(p)
@@ -113,9 +111,12 @@ object SdfitsTableProvider {
       fs.listStatus(p).toSeq
         .filter(s => s.isFile && !s.getPath.getName.startsWith(".") &&
           !s.getPath.getName.startsWith("_"))
-        .map(_.getPath.toString).sorted
-    else Seq(p.toString)
+        .map(s => (s.getPath.toString, s.getLen)).sortBy(_._1)
+    else Seq((p.toString, st.getLen))
   }
+
+  private[sdfits] def listFiles(path: String, conf: Configuration): Seq[String] =
+    listSized(path, conf).map(_._1)
 
   /** The primary header alone: reads 2880-byte blocks up to the one
     * holding the END card, never the table.
@@ -442,12 +443,12 @@ private[sdfits] class SdfitsScanBuilder(full: StructType, path: String,
   private var pushedAggregation: Option[Aggregation] = None
   // Listed and read (primary headers only) when an aggregate asks whether
   // it can be pushed completely; the scan then reuses this listing.
-  private lazy val listing: (Seq[String], Option[SdfitsTableProvider.Stamp]) = {
-    val conf = SdfitsTableProvider.driverConf()
+  private lazy val listing: (Seq[(String, Long)], Option[SdfitsTableProvider.Stamp]) = {
+    val conf = HadoopConf.driver()
     val files =
-      try SdfitsTableProvider.listFiles(path, conf)
+      try SdfitsTableProvider.listSized(path, conf)
       catch { case _: java.io.FileNotFoundException => Nil }
-    (files, if (files.isEmpty) None else SdfitsTableProvider.stampOf(files, full, conf))
+    (files, if (files.isEmpty) None else SdfitsTableProvider.stampOf(files.map(_._1), full, conf))
   }
   override def pruneColumns(requiredSchema: StructType): Unit = required = requiredSchema
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
@@ -501,24 +502,27 @@ private[sdfits] case class SdfitsInputPartition(file: String, key: Option[Any])
 private[sdfits] class SdfitsScan(full: StructType, output: StructType,
     path: String, filters: Array[Filter], groupBy: Seq[String],
     aggs: Seq[SdfitsPushdown.Agg], channels: Option[(Int, Int)],
-    complete: Option[(Seq[String], SdfitsTableProvider.Stamp)])
+    complete: Option[(Seq[(String, Long)], SdfitsTableProvider.Stamp)])
     extends Scan with Batch with SupportsReportStatistics
     with SupportsReportPartitioning with SupportsReportOrdering {
-  // Resolved on the driver (session fs settings apply) and shipped to the
-  // reader tasks via the factory — executors must see the same filesystem
-  // configuration the planner listed files with.
-  private val conf = new SerializableWritable(SdfitsTableProvider.driverConf())
-  // One listing and one header pass per scan: the reported partitioning and
-  // the planned partitions must describe the same files.
-  private lazy val files =
-    complete.map(_._1).getOrElse(SdfitsTableProvider.listFiles(path, conf.value))
+  // Listing and header reads on the driver.
+  private val conf = HadoopConf.driver()
+  // The readers' configuration: the same session settings the planner
+  // listed files with, broadcast once when Spark first asks for a reader
+  // factory, so AQE re-planning this scan reuses it.
+  private lazy val taskConf = HadoopConf.broadcast()
+  // One listing and one header pass per scan: the reported partitioning,
+  // the size estimate and the planned partitions describe the same files.
+  private lazy val listed =
+    complete.map(_._1).getOrElse(SdfitsTableProvider.listSized(path, conf))
+  private lazy val files = listed.map(_._1)
   // A complete aggregate's stamp only drives its reader's key check: Spark
   // maps a reported partitioning onto the table's attributes, which a
   // pushed aggregate's output does not carry, so it reports nothing.
   private lazy val stamp: Option[SdfitsTableProvider.Stamp] =
     if (aggs.nonEmpty) complete.map(_._2)
     else if (files.isEmpty) None
-    else SdfitsTableProvider.stampOf(files, output, conf.value)
+    else SdfitsTableProvider.stampOf(files, output, conf)
   override def outputPartitioning(): Partitioning = stamp match {
     case Some(s) if aggs.isEmpty => new KeyGroupedPartitioning(
       Array(Expressions.identity(s.keyCol)), files.length)
@@ -536,23 +540,14 @@ private[sdfits] class SdfitsScan(full: StructType, output: StructType,
     val cs = channels.map { case (a, n) => s", PushedChannelRange: [$a:$n]" }.getOrElse("")
     s"sdfits:$path$fs$as$gs$cs"
   }
-  /** Planner statistics from the file listing alone (no header reads):
+  /** Planner statistics from the scan's own listing (no header reads):
     * raw byte size feeds the broadcast-threshold decision for joins
     * against small observations.
     */
   override def estimateStatistics(): Statistics = new Statistics {
     override val sizeInBytes: java.util.OptionalLong =
-      try {
-        val p = new Path(path)
-        val fs = p.getFileSystem(conf.value)
-        val st = fs.getFileStatus(p)
-        val len =
-          if (st.isDirectory)
-            SdfitsTableProvider.listFiles(path, conf.value)
-              .map(f => fs.getFileStatus(new Path(f)).getLen).sum
-          else st.getLen
-        java.util.OptionalLong.of(len)
-      } catch { case _: java.io.IOException => java.util.OptionalLong.empty() }
+      try java.util.OptionalLong.of(listed.map(_._2).sum)
+      catch { case _: java.io.IOException => java.util.OptionalLong.empty() }
     override def numRows(): java.util.OptionalLong = java.util.OptionalLong.empty()
   }
   override def planInputPartitions(): Array[InputPartition] = {
@@ -566,24 +561,24 @@ private[sdfits] class SdfitsScan(full: StructType, output: StructType,
   }
   override def createReaderFactory(): PartitionReaderFactory =
     new SdfitsReaderFactory(full, output, filters, groupBy, aggs, channels,
-      stamp.map(s => (s.keyCol, s.sortCols)), conf)
+      stamp.map(s => (s.keyCol, s.sortCols)), taskConf)
 }
 
 private[sdfits] class SdfitsReaderFactory(
     full: StructType, output: StructType, filters: Array[Filter],
     groupBy: Seq[String], aggs: Seq[SdfitsPushdown.Agg],
     channels: Option[(Int, Int)], reported: Option[(String, Seq[String])],
-    conf: SerializableWritable[Configuration])
+    val conf: Broadcast[SerializableConfiguration])
     extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[SdfitsInputPartition]
     if (aggs.nonEmpty)
       new SdfitsAggReader(p.file, full, filters, groupBy, aggs,
-        for ((keyCol, _) <- reported; key <- p.key) yield (keyCol, key), conf.value)
+        for ((keyCol, _) <- reported; key <- p.key) yield (keyCol, key), conf.value.value)
     else {
       val check = for ((keyCol, sortCols) <- reported; key <- p.key)
         yield new StampCheck(p.file, output, keyCol, key, sortCols)
-      new SdfitsPartitionReader(p.file, full, output, filters, channels, check, conf.value)
+      new SdfitsPartitionReader(p.file, full, output, filters, channels, check, conf.value.value)
     }
   }
 }

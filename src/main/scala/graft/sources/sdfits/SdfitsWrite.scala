@@ -5,10 +5,13 @@ import scala.collection.mutable.ArrayBuffer
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.spark.SerializableWritable
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.types._
+import org.apache.spark.util.SerializableConfiguration
+
+import graft.sources.HadoopConf
 
 import SdfitsFormat.ColSpec
 import SdfitsWriter.Header
@@ -75,13 +78,23 @@ private[sdfits] class SdfitsBatchWrite(
 
   // Unsupported column types fail here, on the driver, before any task runs.
   private val codes = schema.fields.map(f => SdfitsWriter.codeOf(f.dataType))
-  private val conf = new SerializableWritable(SdfitsTableProvider.driverConf())
+  // Commit and abort run on the driver with the plain configuration; the
+  // write tasks read one broadcast of it, destroyed when the job ends.
+  private val conf = HadoopConf.driver()
+  private var taskConf: Broadcast[SerializableConfiguration] = _
 
-  override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
-    new SdfitsDataWriterFactory(schema, codes, path, queryId, header, conf)
+  override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
+    taskConf = HadoopConf.broadcast()
+    new SdfitsDataWriterFactory(schema, codes, path, queryId, header, taskConf)
+  }
 
-  override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val fs = new Path(path).getFileSystem(conf.value)
+  private def release(): Unit = if (taskConf != null) {
+    taskConf.destroy()
+    taskConf = null
+  }
+
+  override def commit(messages: Array[WriterCommitMessage]): Unit = try {
+    val fs = new Path(path).getFileSystem(conf)
     fs.mkdirs(new Path(path))
     if (truncate) {
       val existing = fs.globStatus(new Path(path, "*.fits"))
@@ -93,21 +106,21 @@ private[sdfits] class SdfitsBatchWrite(
       if (!fs.rename(new Path(m.temp), dest))
         throw new java.io.IOException(s"sdfits: commit rename failed for ${m.dest}")
     }
-  }
+  } finally release()
 
-  override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    val fs = new Path(path).getFileSystem(conf.value)
+  override def abort(messages: Array[WriterCommitMessage]): Unit = try {
+    val fs = new Path(path).getFileSystem(conf)
     messages.collect { case m: SdfitsWrite.TempFile if m.temp.nonEmpty => m }
       .foreach(m => fs.delete(new Path(m.temp), false))
-  }
+  } finally release()
 }
 
 private[sdfits] class SdfitsDataWriterFactory(
     schema: StructType, codes: Array[Char], path: String, queryId: String,
-    header: Header, conf: SerializableWritable[Configuration])
+    header: Header, val conf: Broadcast[SerializableConfiguration])
     extends DataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    new SdfitsDataWriter(schema, codes, path, queryId, header, conf.value, partitionId, taskId)
+    new SdfitsDataWriter(schema, codes, path, queryId, header, conf.value.value, partitionId, taskId)
 }
 
 /** Buffers one partition's cells (observation-bounded), derives the fixed

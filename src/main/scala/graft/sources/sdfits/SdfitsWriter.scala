@@ -1,12 +1,12 @@
 package graft.sources.sdfits
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.SerializableWritable
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.model.HeaderRecord
+import graft.sources.HadoopConf
 import SdfitsFormat.ColSpec
 
 /** Byte-level SDFITS writer — the missing write half of the connector (the
@@ -109,8 +109,9 @@ object SdfitsWriter {
   /** Write `df` as ONE SDFITS observation file at `path`, rows ordered by
     * `sortCols` (FITS row order is semantically meaningful, SURVEY §1.1).
     * The encode runs in one executor task — the driver only plans; the
-    * session's Hadoop configuration is shipped to the task so configured
-    * filesystems work (not just local paths).
+    * session's Hadoop configuration is broadcast to the task for this job
+    * ([[HadoopConf.withBroadcast]]) so configured filesystems work (not
+    * just local paths).
     */
   def writeObservation(
       df: DataFrame,
@@ -119,20 +120,20 @@ object SdfitsWriter {
       header: Header): Long = {
     val (cols, nRows) = colSpecsAndCount(df)
     require(nRows <= Int.MaxValue, s"sdfits: $nRows rows exceed one BINTABLE")
-    val spark = df.sparkSession
-    val conf = new SerializableWritable(spark.sessionState.newHadoopConf())
     val fields = df.schema.fields
     val (hv, sv, hist) = (header.values, header.stringValues, header.history)
     val n = nRows.toInt
-    df.repartition(1)
-      .sortWithinPartitions(sortCols.map(col): _*)
-      .foreachPartition { (it: Iterator[Row]) =>
-        val p = new Path(path)
-        val fs = p.getFileSystem(conf.value)
-        writeCommitted(fs, p) { os =>
-          SdfitsFormat.write(os, hv, sv, hist, cols, it.map(cells(_, fields)), n)
+    HadoopConf.withBroadcast(df.sparkSession) { conf =>
+      df.repartition(1)
+        .sortWithinPartitions(sortCols.map(col): _*)
+        .foreachPartition { (it: Iterator[Row]) =>
+          val p = new Path(path)
+          val fs = p.getFileSystem(conf.value.value)
+          writeCommitted(fs, p) { os =>
+            SdfitsFormat.write(os, hv, sv, hist, cols, it.map(cells(_, fields)), n)
+          }
         }
-      }
+    }
     nRows
   }
 
@@ -233,7 +234,6 @@ object SdfitsWriter {
     }
     require(pathOf.values.toSet.size == pathOf.size,
       "sdfits: unresolvable file-name collision among fileCol keys")
-    val conf = new SerializableWritable(spark.sessionState.newHadoopConf())
     val (hv, sv, hist) = (header.values, header.stringValues, header.history)
     val stampKeys = Set(SdfitsFormat.KeyColumnCard, SdfitsFormat.KeyValueCard,
       SdfitsFormat.SortColumnsCard)
@@ -248,27 +248,29 @@ object SdfitsWriter {
         Seq(SdfitsFormat.KeyColumnCard -> fileCol, SdfitsFormat.KeyValueCard -> key,
           SdfitsFormat.SortColumnsCard -> sortCards)
       else Nil
-    df.repartition(col(fileCol))
-      .sortWithinPartitions((col(fileCol) +: sortCols.map(col)): _*)
-      .foreachPartition { (it: Iterator[Row]) =>
-        val fsConf = conf.value
-        // keys are consecutive after the sort: cut a new file on key change
-        val rows = it.buffered
-        while (rows.hasNext) {
-          val key = String.valueOf(rows.head.get(keyIdx))
-          val p = new Path(pathOf(key))
-          val fs = p.getFileSystem(fsConf)
-          val fileRows = new Iterator[Row] {
-            def hasNext: Boolean =
-              rows.hasNext && String.valueOf(rows.head.get(keyIdx)) == key
-            def next(): Row = rows.next()
-          }
-          writeCommitted(fs, p) { os =>
-            SdfitsFormat.write(os, hv, sv ++ stamp(key), hist, cols,
-              fileRows.map(cells(_, fields)), counts(key).toInt)
+    HadoopConf.withBroadcast(spark) { conf =>
+      df.repartition(col(fileCol))
+        .sortWithinPartitions((col(fileCol) +: sortCols.map(col)): _*)
+        .foreachPartition { (it: Iterator[Row]) =>
+          val fsConf = conf.value.value
+          // keys are consecutive after the sort: cut a new file on key change
+          val rows = it.buffered
+          while (rows.hasNext) {
+            val key = String.valueOf(rows.head.get(keyIdx))
+            val p = new Path(pathOf(key))
+            val fs = p.getFileSystem(fsConf)
+            val fileRows = new Iterator[Row] {
+              def hasNext: Boolean =
+                rows.hasNext && String.valueOf(rows.head.get(keyIdx)) == key
+              def next(): Row = rows.next()
+            }
+            writeCommitted(fs, p) { os =>
+              SdfitsFormat.write(os, hv, sv ++ stamp(key), hist, cols,
+                fileRows.map(cells(_, fields)), counts(key).toInt)
+            }
           }
         }
-      }
+    }
     counts.toSeq.sortBy(_._1)
       .map { case (k, n) => (k, pathOf(k), n) }
       .toDF(fileCol, "path", "n_rows")

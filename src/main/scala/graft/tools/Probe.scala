@@ -1,9 +1,11 @@
 package graft.tools
 
-import java.util.concurrent.ConcurrentLinkedQueue
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
+
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.metrics.source.CodegenMetrics
-import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobEnd, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.{Window => LWindow}
 import org.apache.spark.sql.execution.{FormattedMode, QueryExecution, SQLExecution}
@@ -18,14 +20,16 @@ import graft.{Bench, GraftSession, SparkEntry}
   * Usage: tools/run_main.sh graft.tools.Probe <mode> <sfDir> <q1,q2,...|all> [outDir] [suffix]
   *
   *  - `time`: Bench's warm-up, then Bench's per-query measurement; one
-  *    `TIMED <q> <sec> s jobs=<n> compiles=<n>` line per query, where
-  *    `compiles` counts the Janino classes the measured run compiled (a
-  *    warm rerun compiles none while its classes fit Spark's codegen
-  *    cache, so a growing count flags a grown working set).
+  *    `TIMED <q> <sec> s jobs=<n> compiles=<n> deser_ms=<n>` line per
+  *    query, where `compiles` counts the Janino classes the measured run
+  *    compiled (a warm rerun compiles none while its classes fit Spark's
+  *    codegen cache, so a growing count flags a grown working set) and
+  *    `deser_ms` sums its tasks' deserialization time.
   *  - `jobs`: one warm pass, then the measured pass with one line per Spark
-  *    job (duration, stage count, the `[action at File.scala:line]` of its
-  *    SQL execution, stage names and task counts) — which actions make up
-  *    a query's job count.
+  *    job (duration, its tasks' summed deserialize and run milliseconds,
+  *    stage count, the `[action at File.scala:line]` of its SQL execution,
+  *    stage names and task counts) — which actions make up a query's job
+  *    count, and where its task time went.
   *  - `plan`: `explain("formatted")` of the query's final plan, to
   *    `<outDir>/<q><suffix>.txt` (the evidence-trail convention is
   *    `_before` / `_after`, as in plans/r17) or to stdout without outDir.
@@ -89,9 +93,13 @@ object Probe {
       try mode match {
         case "time" =>
           val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
-          val r = Bench.measure(spark, sfDir, name, fn, gc = true)
+          val times = new TaskTimes
+          spark.sparkContext.addSparkListener(times)
+          val r = try Bench.measure(spark, sfDir, name, fn, gc = true)
+            finally spark.sparkContext.removeSparkListener(times)
           val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0
-          println(f"TIMED $name ${r.sec}%.2f s jobs=${r.jobs} compiles=$compiles")
+          println(f"TIMED $name ${r.sec}%.2f s jobs=${r.jobs} compiles=$compiles " +
+            s"deser_ms=${times.total._1}")
           r.ok
         case "jobs" => auditJobs(spark, sfDir, name, fn)
         case "plan" =>
@@ -139,6 +147,26 @@ object Probe {
     }
   }
 
+  /** Summed `(executorDeserializeTime, executorRunTime)` ms of the tasks of
+    * each job started while registered. Run time excludes deserialization,
+    * so a task payload that is slow to rebuild shows only in the first.
+    */
+  private final class TaskTimes extends SparkListener {
+    private val jobOfStage = new ConcurrentHashMap[Int, Int]()
+    private val byJob = new ConcurrentHashMap[Int, (Long, Long)]()
+    override def onJobStart(js: SparkListenerJobStart): Unit =
+      js.stageIds.foreach(jobOfStage.putIfAbsent(_, js.jobId))
+    override def onTaskEnd(te: SparkListenerTaskEnd): Unit =
+      Option(te.taskMetrics).foreach { m =>
+        byJob.merge(jobOfStage.getOrDefault(te.stageId, -1),
+          (m.executorDeserializeTime, m.executorRunTime),
+          (a: (Long, Long), b: (Long, Long)) => (a._1 + b._1, a._2 + b._2))
+      }
+    def of(jobId: Int): (Long, Long) = byJob.getOrDefault(jobId, (0L, 0L))
+    def total: (Long, Long) =
+      byJob.values.asScala.foldLeft((0L, 0L)) { case ((d, r), (a, b)) => (d + a, r + b) }
+  }
+
   /** The call site of every job AQE submits from its stage thread pool. */
   private val pooledSite = "withThreadLocalCaptured"
 
@@ -172,15 +200,22 @@ object Probe {
         case _ =>
       }
     }
+    val times = new TaskTimes
     spark.sparkContext.addSparkListener(listener)
+    spark.sparkContext.addSparkListener(times)
     val r = try Bench.measure(spark, sfDir, name, fn, gc = true)
-      finally spark.sparkContext.removeSparkListener(listener)
+      finally {
+        spark.sparkContext.removeSparkListener(listener)
+        spark.sparkContext.removeSparkListener(times)
+      }
     println(f"== $name: ${r.jobs} jobs, ${r.sec}%.2f s ==")
     jobs.forEach { case (id, nStages, execution, stages) =>
       val action = execution.flatMap(x => Option(actions.get(x)))
         .orElse(if (execution.isEmpty && stages.contains(pooledSite)) Some("returned frame") else None)
         .fold("")(a => s"[$a]  ")
-      println(f"job $id%3d  ${durs.getOrDefault(id, -1.0)}%6.2f s  stages=$nStages%2d  $action$stages")
+      val (deser, run) = times.of(id)
+      println(f"job $id%3d  ${durs.getOrDefault(id, -1.0)}%6.2f s  deser_ms=$deser%5d run_ms=$run%6d  " +
+        f"stages=$nStages%2d  $action$stages")
     }
     r.ok
   }

@@ -195,6 +195,23 @@ class ArrayKernelsSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
     assert(df.select(ArrayOps.pickChannels($"a", Array(0, 1))).head().getSeq[Any](0) == Seq(null, null))
   }
 
+  test("pickChannels types a nullable input's result as holding nulls, under ANSI too") {
+    def frame(nullable: Boolean, rows: Row*): DataFrame = spark.createDataFrame(
+      spark.sparkContext.parallelize(rows, 1), StructType(Seq(
+        StructField("a", ArrayType(FloatType, containsNull = false), nullable))))
+    val nullableIn = frame(nullable = true, Row(Seq(1.5f, 2.5f)), Row(null))
+    val required = frame(nullable = false, Row(Seq(1.5f, 2.5f)))
+    for (ansi <- Seq("true", "false"); mode <- Seq(Nil, interpreted))
+      withConf(("spark.sql.ansi.enabled" -> ansi) +: mode: _*) {
+        val out = nullableIn.select(ArrayOps.pickChannels($"a", Array(1, 0)))
+        assert(out.schema(0).dataType == ArrayType(FloatType, containsNull = true), s"ansi=$ansi")
+        assert(out.collect().map(_.getSeq[Any](0)).toSeq == Seq(Seq(2.5f, 1.5f), Seq(null, null)))
+        // a required input without null elements (SDFITS DATA) keeps its type
+        val kept = required.select(ArrayOps.pickChannels($"a", Array(1))).schema(0).dataType
+        assert(kept == ArrayType(FloatType, containsNull = ansi == "false"), s"ansi=$ansi")
+      }
+  }
+
   test("vecSum pins: null rows skipped, null elements add 0.0, ragged rows widen, no rows give []") {
     val schema = StructType(Seq(StructField("k", IntegerType),
       StructField("v", ArrayType(DoubleType, containsNull = true))))

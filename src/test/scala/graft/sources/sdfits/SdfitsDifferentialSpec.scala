@@ -47,7 +47,7 @@ class SdfitsDifferentialSpec extends SparkTestBase {
   /** The directory's rows decoded here, file by file, as a LocalRelation. */
   private def reference(dir: String): DataFrame = {
     val schema = spark.read.format("sdfits").load(dir).schema
-    val conf = SdfitsTableProvider.driverConf()
+    val conf = graft.sources.HadoopConf.driver()
     val rows = SdfitsTableProvider.listFiles(dir, conf).flatMap { f =>
       val bytes = SdfitsTableProvider.readFully(f, conf)
       val (_, t) = SdfitsFormat.open(bytes)

@@ -66,7 +66,7 @@ class SdfitsStampSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
       concat(lit("m"), (col("id") % 2).cast("string")).as("MODE"))
     SdfitsWriter.writeObservations(frame, "FILE_ID", Seq("ROWIDX", "MODE"), dir,
       SdfitsWriter.Header()).collect()
-    val h = SdfitsTableProvider.readPrimaryHeader(s"$dir/obs_f1.fits", SdfitsTableProvider.driverConf())
+    val h = SdfitsTableProvider.readPrimaryHeader(s"$dir/obs_f1.fits", graft.sources.HadoopConf.driver())
     assert(h.value(KeyColumnCard).contains("FILE_ID"))
     assert(h.value(KeyValueCard).contains("f1"))
     // a string sort column ends the stamped list

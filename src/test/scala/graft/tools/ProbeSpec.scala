@@ -37,8 +37,22 @@ class ProbeSpec extends SparkTestBase {
   test("time prints seconds, jobs and codegen compiles per query") {
     val (code, out, _) = probe("time", sf, "q_c2_freqrange")
     assert(code == 0)
-    assert("""(?m)^TIMED q_c2_freqrange \d+\.\d\d s jobs=\d+ compiles=\d+$""".r
+    assert("""(?m)^TIMED q_c2_freqrange \d+\.\d\d s jobs=\d+ compiles=\d+ deser_ms=\d+$""".r
       .findFirstIn(out).isDefined, out)
+  }
+
+  test("time and jobs report task deserialize ms beside run ms on an sdfits scan") {
+    val (code, out, _) = probe("time", sf, "q_sdfits_read")
+    assert(code == 0)
+    assert("""(?m)^TIMED q_sdfits_read \d+\.\d\d s jobs=\d+ compiles=\d+ deser_ms=\d+$""".r
+      .findFirstIn(out).isDefined, out)
+    val (jcode, jobs, _) = probe("jobs", sf, "q_sdfits_read")
+    assert(jcode == 0)
+    val timed = """^job +\d+ +\d+\.\d\d s  deser_ms= *(\d+) run_ms= *(\d+)  stages=""".r
+    val lines = jobs.linesIterator.filter(_.startsWith("job ")).toSeq
+    assert(lines.nonEmpty && lines.forall(timed.findFirstIn(_).isDefined), jobs)
+    // the scan's tasks ran: some job reports their run time
+    assert(lines.exists(l => timed.findFirstMatchIn(l).get.group(2).toLong > 0), jobs)
   }
 
   test("jobs reports the job count Bench measures") {
