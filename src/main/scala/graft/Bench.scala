@@ -1,5 +1,6 @@
 package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.SQLExecution
 object Bench {
 
   /** One query's measurement: seconds, whether it succeeded, and its jobs. */
@@ -124,9 +125,16 @@ object Bench {
     val t0 = System.nanoTime()
     // Noop sink, not count(): count() lets Catalyst prune unreferenced
     // projections, so map-only queries would benchmark near-zero work.
-    // Evaluating every InternalRow measures the actual plan.
+    // Evaluating every InternalRow measures the actual plan. It runs as one
+    // SQL execution named after the query, as a Dataset action would: its
+    // jobs carry `spark.sql.execution.id` and QueryExecutionListeners see
+    // the measured plan.
     val ok =
-      try { fn(spark, sfDir).queryExecution.toRdd.foreach(_ => ()); true }
+      try {
+        val qe = fn(spark, sfDir).queryExecution
+        SQLExecution.withNewExecutionId(qe, Some(name))(qe.toRdd.foreach(_ => ()))
+        true
+      }
       catch { case e: Throwable =>
         System.err.println(s"[bench] $name failed: ${e.getMessage}"); false
       }

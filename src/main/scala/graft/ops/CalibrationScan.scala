@@ -14,7 +14,9 @@ import scala.util.control.Breaks.{break, breakable}
   * array is pruned away by Catalyst), so at 100 TB the shuffle carries a few
   * bytes per row, and over input already grouped by file nothing is
   * shuffled. A global window/sort formulation would serialize the whole
-  * table through one ordering for no benefit.
+  * table through one ordering for no benefit. `Continuum.runAll` is its one
+  * caller in the reduction; `Continuum.run` is `runAll` over one
+  * observation, so a single file is the one-group case of the same scan.
   *
   * [[scan]] is a literal port of the reference's quirks, pinned by tests:
   *  - `data_start_ind` truthiness (index 0 never triggers the counter reset,
@@ -117,30 +119,6 @@ object CalibrationScan {
       i += 1
     }
     -1
-  }
-
-  /** [[scan]] of a single-file frame in ROWIDX order, with [[scanPerFile]]
-    * mechanics: the flag rows never leave the executors — the per-file scan
-    * reduces them to ONE row and only that row is collected, instead of
-    * shipping O(rows) flag tuples through the driver (the round-6 bench
-    * measured a driver-side collect at ~15 s cold on a 600k-row fixture).
-    */
-  def scanSingleFileDistributed(
-      df: DataFrame,
-      channelCount: Long,
-      headerObsmode: String): CalIndices = {
-    val r = scanPerFile(df, lit(channelCount), headerObsmode)
-      .select(col("data_start"), col("post_cal_start"), col("off_start"))
-      .collect()
-    if (r.isEmpty) scan(Vector.empty, channelCount, headerObsmode)
-    else {
-      require(r.length == 1, s"scanSingleFileDistributed: ${r.length} files in frame")
-      val row = r(0)
-      CalIndices(
-        if (row.isNullAt(0)) None else Some(row.getLong(0).toInt),
-        row.getLong(1).toInt,
-        if (row.isNullAt(2)) None else Some(row.getLong(2).toInt))
-    }
   }
 
   /** One-pass streaming form of [[scan]] — same CalIndices for any input

@@ -7,11 +7,12 @@ import org.apache.spark.sql.functions._
   * (ref continuum.py:46-61, 111-138, 174-187).
   *
   * The calibration spike windows are tens of rows, so A8 fits them on local
-  * arrays ([[heights]]): the single-file path collects them to the driver,
-  * [[graft.pipeline.Continuum.runAll]] gathers each file's in one aggregate.
-  * A9's branch decision ([[gain]]) is scalar code shared by both paths; its
-  * division ([[divide]]) is one Column, over literals for one file and over
-  * per-file columns for many.
+  * arrays ([[heights]]): [[graft.pipeline.Continuum.runAll]] (and so
+  * `Continuum.run`, which is `runAll` over one observation) gathers each
+  * file's in one aggregate, and [[calibrationHeight]] collects one window
+  * to the driver. A9's branch decision ([[gain]]) is scalar code; its
+  * division ([[divide]]) is one Column, over literals in [[applyGain]] and
+  * over per-file columns in `runAll`.
   */
 object GainCal {
 
@@ -27,33 +28,20 @@ object GainCal {
     * flag columns.
     */
   def calibrationHeight(window: DataFrame): Option[Height] =
-    heights(collectDiodeRows(window, lit(true)))._1
+    heights(collectDiodeRows(window))._1
 
-  /** Both spike windows' A8 heights in ONE collect: the spike rows of the
-    * `__pos`-numbered frame `integ`, tagged `pre` when they precede the
-    * data window, split by [[heights]]. On a cold JVM each driver round
-    * trip pays full scheduler+codegen latency (the r6 driver-bench tax on
-    * the single-file pipelines), so one collect matters there; the payload
-    * is tens of spike rows, two doubles and two booleans each.
-    */
-  def calibrationHeights(
-      integ: DataFrame, dataStart: Long, postCal: Long): (Option[Height], Option[Height]) =
-    heights(collectDiodeRows(
-      integ.filter(col("__pos") < dataStart || col("__pos") >= postCal),
-      col("__pos") < dataStart))
-
-  private def collectDiodeRows(df: DataFrame, pre: Column): Seq[(Boolean, Boolean, Double, Double)] =
+  /** One window's diode rows in [[heights]]' form, every one in the pre window. */
+  private def collectDiodeRows(df: DataFrame): Seq[(Boolean, Boolean, Double, Double)] =
     df.filter(diodeOn || diodeOff)
-      .select(pre, col("CALSTATE") === 1, col("t"), col("intensity"))
+      .select(col("CALSTATE") === 1, col("t"), col("intensity"))
       .collect().toSeq
-      .map(r => (r.getBoolean(0), r.getBoolean(1), r.getDouble(2), r.getDouble(3)))
+      .map(r => (true, r.getBoolean(0), r.getDouble(1), r.getDouble(2)))
 
   /** A8 for both spike windows from one file's diode rows `(pre-window?,
     * diode-on?, t, intensity)` in row order: each window splits into its
     * on and off rows (row order kept) for [[calibrationHeightLocal]].
-    * Returns the (pre, post) heights. [[graft.pipeline.Continuum.run]]
-    * collects these rows on the driver; [[graft.pipeline.Continuum.runAll]]
-    * gathers them per file executor-side.
+    * Returns the (pre, post) heights. [[graft.pipeline.Continuum.runAll]]
+    * gathers these rows per file executor-side.
     */
   def heights(rows: Seq[(Boolean, Boolean, Double, Double)]): (Option[Height], Option[Height]) = {
     def window(pre: Boolean): Option[Height] = {
@@ -102,9 +90,9 @@ object GainCal {
   private def constant(h: Double) = Gain(1, h, 0.0, 0.0, 0.0)
 
   /** A9 — the gain decision (ref continuum.py:174-187), the one
-    * implementation both continuum paths use. `extent` is the data
-    * window's (min t, max t), None when the window is empty; it is read
-    * only on the drift branch.
+    * implementation [[applyGain]] and the continuum reduction use. `extent`
+    * is the data window's (min t, max t), None when the window is empty; it
+    * is read only on the drift branch.
     *
     * Semantics notes, pinned by GainCalSpec:
     *  - Python truthiness: a height of exactly 0.0 counts as "absent"

@@ -42,9 +42,6 @@ object Integration {
   def sweepInterleaveDF(df: DataFrame, ifCol: String = "IFNUM", plCol: String = "PLNUM"): DataFrame =
     df.agg((countDistinct(col(ifCol)) * countDistinct(col(plCol))).as("k"))
 
-  def sweepInterleaveFactor(df: DataFrame): Long =
-    sweepInterleaveDF(df).head().getLong(0)
-
   /** A10 — ON−OFF element-wise difference of two spectra (ref spectrum.py:63-67). */
   def onOffDiff(on: Column, off: Column): Column = ArrayOps.vecDiff(on, off)
 }

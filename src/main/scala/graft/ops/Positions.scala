@@ -5,7 +5,9 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Dense per-file row positions without single-partition windows, for the
-  * pipeline stages and the registry's fixture (`QueryUtil.obs`).
+  * registry's observation fixture (`QueryUtil.obs`) and q_pipeline_validate.
+  * The continuum and spectrum reductions number no rows: they compare
+  * ROWIDX thresholds.
   *
   * `row_number() OVER (PARTITION BY FILE_ID ORDER BY ROWIDX)` is the natural
   * F9 position (ref continuum.py:161-171 positional slicing), but when a

@@ -11,13 +11,12 @@ import graft.ops._
 /** Entry point 2 — the continuum reduction (ref continuum.py:140-191):
   * F1 feed/pol filter → optional F6/F7 range filters → ST1 spike scan →
   * A8 calibration heights on the pre/post windows → A1 integration of the
-  * data window → A9 gain division. Returns (t, intensity) ordered by t.
+  * data window → A9 gain division.
   *
-  * Plan shape at scale: the filters + A1 are one narrow map-only chain over
-  * the scan (predicate pushdown + column pruning reach parquet); ST1 collects
-  * only three flag columns; A8 collects two doubles per spike row; A9 is a
-  * broadcast-literal `withColumn`. Nothing shuffles except the final orderBy,
-  * which the caller can drop when order is not needed.
+  * One implementation: [[runAll]] reduces each file of its input, and
+  * [[run]] is [[runAll]] over one observation. The scalar per-file port
+  * the specs compare both against lives in the tests
+  * (`graft.pipeline.ReferenceReduction`).
   */
 object Continuum {
 
@@ -30,66 +29,20 @@ object Continuum {
       excludeTime: Seq[(Double, Double)] = Nil,
       strictCompat: Boolean = false)
 
-  def run(df: DataFrame, header: Header, p: Params): DataFrame = {
-    // A3 — sweep-interleave factor from the PRE-filter table (continuum.py:24-28).
-    val channelCount = Integration.sweepInterleaveFactor(df)
-
-    // F1 — feed/pol selection (continuum.py:30-33).
-    var d = df.filter(col("IFNUM") === p.ifnum && col("PLNUM") === p.plnum)
-
-    // F6 — time ranges (continuum.py:147-148).
-    val t0 = lit(header.date)
-    d = RangeFilters.filterTimeRanges(d, t0, p.includeTime, p.excludeTime)
-
-    // F7 — frequency ranges, else synthesized axis (continuum.py:149-153).
-    val fr = HeaderRecord.frequencyRange(header, p.ifnum)
-    val freqs = ArrayOps.freqAxis(fr.high, fr.low, fr.channelCount)
-    val (_, d2) = RangeFilters.filterFrequencyRanges(d, freqs, p.includeFreq, p.excludeFreq)
-
-    // ST1 — three indices on the filtered frame (continuum.py:156).
-    // flagged is cached: the ST1 scan, the A8 height collect and the final
-    // consumer all read it. NOT unpersisted here — the returned frame is
-    // lazy and still reads `flagged`; an eager unpersist would force the
-    // final consumer to recompute the whole chain. Cache lifecycle is the
-    // CALLER's: clear with spark.catalog.clearCache() once the result is
-    // consumed (the harness does this between queries). Callers looping
-    // over MANY files should use [[runAll]] — one job chain, no per-file
-    // caches — rather than calling run() per file.
-    // `__pos` is the reference's implicit row position (F9), in the
-    // bucketed form ([[graft.ops.Positions]]): a constant FILE_ID would
-    // constant-fold a per-file window's partition key away and funnel
-    // every row through one WindowExec partition. ([[runAll]] numbers no
-    // rows: it compares ROWIDX thresholds.)
-    val flagged = Positions.withPos(d2).cache()
-    // Distributed ST1: flag rows reduce executor-side; one row reaches the
-    // driver (scan semantics in ROWIDX order, pinned by q_st1_calscan).
-    val idx = CalibrationScan.scanSingleFileDistributed(flagged, channelCount, header.obsmode)
-    val dataStart = idx.dataStart.getOrElse(0)
-    val postCal = idx.postCalStart
-
-    // A1 over each window once, then F9 positional slicing on the result —
-    // one pass computes t/intensity for every row.
-    val integ = flagged.select(
-      col("__pos"),
-      col("CALSTATE"), col("SWPVALID"),
-      RangeFilters.relSeconds(col("DATE_OBS"), t0).as("t"),
-      ArrayOps.arraySum(col("DATA")).as("intensity"))
-
-    // A8 — heights from the pre/post calibration windows (continuum.py:161-169),
-    // both windows in one tagged collect (one driver round trip, not four).
-    val (pre, post) = GainCal.calibrationHeights(integ, dataStart, postCal)
-
-    // Data window integration (continuum.py:171) + A9 gain division.
-    val cont = integ
-      .filter(col("__pos") >= dataStart && col("__pos") < postCal)
+  /** The reference's per-file reduction: [[runAll]] with every row under
+    * one file key, so the whole input is reduced as ONE observation, as the
+    * reference reads one file. Rows of several files are not told apart: a
+    * ROWIDX repeated across them fails the ST1 scan (`duplicate ROWIDX`).
+    * Returns (t, intensity) ordered by t.
+    */
+  def run(df: DataFrame, header: Header, p: Params): DataFrame =
+    runAll(df.withColumn("FILE_ID", lit("0")), header, p)
       .select(col("t"), col("intensity"))
-    GainCal.applyGain(cont, pre, post, p.strictCompat).orderBy(col("t"))
-  }
+      .orderBy(col("t"))
 
-  /** Multi-file scale path: the whole reduction for N files in ONE Spark job
-    * chain — no per-file driver orchestration ([[run]] issues ~6 driver-
-    * synchronous jobs per file, which at 100k files makes the driver loop the
-    * bottleneck; here the driver issues a constant number of jobs total).
+  /** The whole reduction for N files in ONE Spark job chain: no per-file
+    * driver orchestration, so the driver issues a constant number of jobs
+    * whatever the file count.
     *
     * Plan shape: one checkpoint and no position window.
     *  - `base`: one narrow projection computes (t, intensity) for every row
@@ -102,8 +55,7 @@ object Continuum {
     *  - `params`: one aggregate per file over the filtered `base` joined
     *    with `idx` gathers the data window's t extent and the spike
     *    windows' diode rows; a typed map fits the A8 heights and takes the
-    *    A9 decision with [[GainCal.heights]] and [[GainCal.gain]], the
-    *    scalar code [[run]] uses.
+    *    A9 decision with [[GainCal.heights]] and [[GainCal.gain]].
     *  - The gain division rereads the filtered `base` and broadcast-joins
     *    `params`; every window test is a ROWIDX comparison.
     *
@@ -112,9 +64,9 @@ object Continuum {
     * ROWIDX, a stamped SDFITS directory, `cc`, the scan and `params` need no
     * exchange and the scan no sort; otherwise each shuffles once.
     *
-    * Semantics per file are identical to [[run]] (same scan, same fits, same
-    * A9 decision, interpolation over the data window's min/max t), pinned
-    * by ContinuumAllSpec against [[run]].
+    * Each file's rows are the reference's reduction of that file alone
+    * (interpolation over the data window's min/max t), pinned by
+    * ContinuumAllSpec against the scalar port.
     */
   def runAll(df: DataFrame, header: Header, p: Params): DataFrame = {
     val spark = df.sparkSession
@@ -138,7 +90,7 @@ object Continuum {
     // channel geometry, and under ANSI an unconditional element_at would
     // crash on another IF's shorter DATA array — besides wasting the
     // arraySum on every row F1 drops anyway. Gated, the surviving values
-    // are exactly what [[run]] computes post-filter. The gate is
+    // are those of a crop after F1. The gate is
     // CONSTRUCTED — pickChannels sits inside the when() branch directly
     // (ADVICE r13): the earlier form cropped via an unconditional
     // withColumn and depended on CollapseProject inlining it into the
@@ -203,7 +155,7 @@ object Continuum {
     // One aggregate per file feeds A8 and A9: the data window's t extent
     // and the diode rows of the two spike windows (tens of rows per file;
     // the height fit reads nothing else). A typed map then fits the heights
-    // and decides the gain with the same scalar code [[run]] uses.
+    // and decides the gain with GainCal's scalar code.
     val strictCompat = p.strictCompat
     val params = d.join(broadcast(idx), "FILE_ID")
       .groupBy(col("FILE_ID"), col("__ds"), col("__pc"))

@@ -12,6 +12,10 @@ import graft.ops.Atmosphere
   * if an audit boundary is wanted). Atmosphere correction is OFF by default,
   * matching the reference driver (main.py:31-32 keeps the stage commented
   * out) — pass `atmosphere = true` for the corrected products.
+  *
+  * [[run]] reduces its input as one observation and [[runAll]] reduces each
+  * file of it; both call the products' one implementation,
+  * [[Continuum.runAll]] and [[Spectrum.runAll]].
   */
 object Pipeline {
 
@@ -52,6 +56,9 @@ object Pipeline {
     }
   }
 
+  /** The reference's driver over ONE observation: every row of `df` is
+    * reduced as one file ([[Continuum.run]], [[Spectrum.run]]).
+    */
   def run(
       df: DataFrame,
       header: Header,
@@ -68,10 +75,10 @@ object Pipeline {
   }
 
   /** Multi-file form of [[run]]: validate and (optionally) correct are
-    * per-row maps, so they compose unchanged in front of the
-    * [[Continuum.runAll]] / [[Spectrum.runAll]] scale paths — the whole
-    * driver for N files in two job chains, no per-file driver orchestration
-    * and no caches held.
+    * per-row maps, so they compose unchanged in front of
+    * [[Continuum.runAll]] / [[Spectrum.runAll]] — the whole driver for N
+    * files in two job chains, no per-file driver orchestration and no
+    * caches held.
     */
   def runAll(
       df: DataFrame,

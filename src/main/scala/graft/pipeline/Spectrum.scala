@@ -12,10 +12,11 @@ import graft.ops._
   * integration (ON and OFF halves for onoff files) → A10 difference.
   * Returns one row per channel: (pos, frequency, intensity).
   *
-  * One shuffle total: the A2 aggregate (map-side partial vector sums via
-  * [[graft.functions.VectorSum]], over `fillNulls` of the NaN-masked DATA,
-  * both native loops — the shuffle carries one array per partition, not
-  * n_rows × n_channels exploded rows).
+  * One implementation: [[runAll]] reduces each file of its input, and
+  * [[run]] is [[runAll]] over one observation. The A2 aggregate sums
+  * vectors map-side ([[graft.functions.VectorSum]], over `fillNulls` of the
+  * NaN-masked DATA, both native loops), so a shuffle carries one array per
+  * partition, not n_rows × n_channels exploded rows.
   */
 object Spectrum {
 
@@ -27,81 +28,17 @@ object Spectrum {
       includeTime: Seq[(Double, Double)] = Nil,
       excludeTime: Seq[(Double, Double)] = Nil)
 
-  def run(df: DataFrame, header: Header, p: Params): DataFrame = {
-    val spark = df.sparkSession
-    // F1+F2 — feed/pol + science-data filter (spectrum.py:28-33).
-    var d = df.filter(
-      col("IFNUM") === p.ifnum && col("PLNUM") === p.plnum &&
-      col("CALSTATE") === 0 && col("SWPVALID") === 0)
-
-    d = RangeFilters.filterTimeRanges(d, lit(header.date), p.includeTime, p.excludeTime)
-
-    val fr = HeaderRecord.frequencyRange(header, p.ifnum)
-    val axis = ArrayOps.freqAxis(fr.high, fr.low, fr.channelCount)
-    val (freqs, d2) = RangeFilters.filterFrequencyRanges(d, axis, p.includeFreq, p.excludeFreq)
-
-    // Bucketed per-file position (graft.ops.Positions): a constant FILE_ID
-    // would constant-fold a plain per-file window's partition key away and
-    // funnel every row through one WindowExec partition. flagged is cached
-    // SLIM (only the three columns both consumers read — the off probe and
-    // the A2 aggregate): the materialization is the per-row cost here. Not
-    // unpersisted here (the returned frame is lazy) — cache lifecycle is
-    // the caller's (spark.catalog.clearCache() after consumption; the
-    // harness does this between queries); for many files use [[runAll]],
-    // which caches nothing.
-    // Cache only when the off probe will read the frame a second time (the
-    // onoff branch): otherwise the single A2 aggregate is the only
-    // consumer and the cache would be pure materialization overhead.
-    val flagged0 = Positions.withPos(d2)
-      .select(col("__pos"), col("DATA"), col("OBSMODE"))
-    val flagged = if (header.obsmode == "onoff") flagged0.cache() else flagged0
-
-    // ST1, spectrum form: the spectrum path reads ONLY the scan's
-    // offStart, which is the index of the FIRST row (in __pos order) whose
-    // OBSMODE contains 'onoff:off' (CalibrationScan.scanStreaming's
-    // offStart register) — i.e. min(__pos) over a contains filter, a fully
-    // PARALLEL aggregation. The sequential per-file state machine
-    // (secondary sort + one ordered pass) is only needed for
-    // dataStart/postCal, which the spectrum path never reads — running it
-    // here serialized the whole table through one task (the sf1 smoke's
-    // super-constant stage: 10x data = 10x single-task scan while every
-    // other stage parallelizes). Gated on header.obsmode == "onoff"
-    // exactly like CalIndices.off.
-    val offStart: Option[Int] =
-      if (header.obsmode == "onoff") {
-        val r = flagged.filter(col("OBSMODE").contains("onoff:off"))
-          .agg(min(col("__pos"))).head()
-        if (r.isNullAt(0)) None else Some(r.getLong(0).toInt)
-      } else None
-
-    // A2 (+ A10 for onoff): aggregate both halves in ONE pass by grouping on
-    // the on/off flag, then zip-subtract the two 1-row arrays.
-    val spec: DataFrame = offStart.filter(_ != 0) match { // Python truthiness: off index 0 = falsy (spectrum.py:62)
-      case Some(off) =>
-        // ONE aggregation pass: group on the on/off flag, then fold the two
-        // rows with first(when(...)) — a filter+crossJoin here would run the
-        // whole A2 aggregate twice.
-        flagged
-          .groupBy((col("__pos") < off).as("on"))
-          .agg(VectorSum.vecSum(ArrayOps.fillNulls(col("DATA"))).as("s"))
-          .agg(
-            first(when(col("on"), col("s")), ignoreNulls = true).as("s_on"),
-            first(when(!col("on"), col("s")), ignoreNulls = true).as("s_off"))
-          .select(ArrayOps.vecDiff(col("s_on"), col("s_off")).as("spectrum"))
-      case None =>
-        flagged.agg(VectorSum.vecSum(ArrayOps.fillNulls(col("DATA"))).as("spectrum"))
-    }
-
-    // Attach the frequency axis: (pos, frequency, intensity) per channel.
-    val freqLit = array(freqs.map(lit(_)).toIndexedSeq: _*)
-    spec.select(posexplode(col("spectrum")).as(Seq("pos", "intensity")))
-      .withColumn("frequency", element_at(freqLit, col("pos") + 1))
+  /** The reference's per-file reduction: [[runAll]] with every row under
+    * one file key, so the whole input is reduced as ONE observation, as the
+    * reference reads one file. Returns (pos, frequency, intensity) ordered
+    * by pos.
+    */
+  def run(df: DataFrame, header: Header, p: Params): DataFrame =
+    runAll(df.withColumn("FILE_ID", lit("0")), header, p)
       .select(col("pos"), col("frequency"), col("intensity"))
       .orderBy(col("pos"))
-  }
 
-  /** Multi-file scale path (the [[graft.pipeline.Continuum.runAll]] analog):
-    * spectra for N files in ONE job chain, with no position window and no
+  /** Spectra for N files in ONE job chain, with no position window and no
     * checkpoint. The per-file off threshold is a ROWIDX aggregate over the
     * slim flag columns (DATA pruned), broadcast-joined back; the ON and OFF
     * vector sums are two conditional sums in ONE groupBy(FILE_ID)
@@ -141,10 +78,9 @@ object Spectrum {
       .select(col("FILE_ID"), col("ROWIDX").cast("long").as("ROWIDX"),
         col("DATA"), col("OBSMODE"))
 
-    // Per-file thresholds (spectrum form of the off index, see [[run]]):
-    // a parallel groupBy aggregate, not the sequential per-file state
-    // machine (which only dataStart/postCal need, and the spectrum path
-    // reads neither). Null off threshold when the header isn't onoff or
+    // Per-file thresholds (spectrum form of the off index): a parallel
+    // groupBy aggregate, not the sequential per-file state machine (which
+    // only dataStart/postCal need, and the spectrum path reads neither). Null off threshold when the header isn't onoff or
     // the file has no off rows, like CalIndices.off.
     val offs =
       if (header.obsmode == "onoff")
@@ -159,8 +95,7 @@ object Spectrum {
 
     // ONE aggregate per file: the ON and OFF halves are two conditional
     // vector sums over the NaN-masked DATA with its nulls filled by 0.0
-    // (the vector sum skips the null rows the `when` leaves).
-    // Mirrors run() exactly: a
+    // (the vector sum skips the null rows the `when` leaves). A
     // file WITHOUT a real off index (Python truthiness, ref spectrum.py:62:
     // off index 0 or absent) returns its plain sum; a file WITH one returns
     // on−off. Neither half of a split file is empty (its first row is ON,

@@ -469,8 +469,7 @@ object RadioQueries {
     "q_pipeline_continuum" -> ((s, dir) =>
       // Flat-spike fixture (gain = intensity/6 in closed form) makes the full
       // F1→ST1→A8→A1→A9 composition hash-checkable (VERDICT r3 item 4).
-      // 1/5-sampled: the per-file path issues several driver-synchronous
-      // jobs and doesn't need a 600k-row "observation" to prove the
+      // 1/5-sampled: one observation doesn't need 600k rows to prove the
       // composition — q_continuum_all is the volume/scale demonstration.
       Continuum.run(obs(li(s, dir).filter(col("l_orderkey") % 5 === 0), 1, spikes = true,
         offAt = None), obsHeader(4), Continuum.Params(ifnum = 0, plnum = 1))),
@@ -555,9 +554,8 @@ object RadioQueries {
       // physical columns, crop 0_3 over 4 channels), so the continuum
       // product carries the closed-form q_pipeline_continuum oracle over
       // the sampled fixture — what the query adds is proof the composed
-      // stages are lossless. Bounded input (1/5): the full driver runs BOTH
-      // reductions eagerly, and the composition proof doesn't need 600k
-      // rows.
+      // stages are lossless. Bounded input (1/5): the composition proof
+      // doesn't need 600k rows.
       Pipeline.run(obs(li(s, dir).filter(col("l_orderkey") % 5 === 0), 1, spikes = true,
         offAt = None), obsHeader(4), ifnum = 0, plnum = 1).continuum),
 

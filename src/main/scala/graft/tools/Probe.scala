@@ -167,15 +167,12 @@ object Probe {
       byJob.values.asScala.foldLeft((0L, 0L)) { case ((d, r), (a, b)) => (d + a, r + b) }
   }
 
-  /** The call site of every job AQE submits from its stage thread pool. */
-  private val pooledSite = "withThreadLocalCaptured"
-
   /** Warm pass, then the measured pass with a per-job listener. A job that
     * runs under a SQL execution (every AQE stage job, whose own call site
     * is a thread-pool frame) is named by the action that started the
-    * execution, e.g. `localCheckpoint at Dedup.scala:409`. Bench runs the
-    * returned frame outside any SQL execution, so its stage jobs read
-    * `returned frame`.
+    * execution, e.g. `localCheckpoint at Dedup.scala:409`; the returned
+    * frame's jobs run under Bench's own execution, `withNewExecutionId at
+    * Bench.scala:<line>`.
     */
   private def auditJobs(spark: SparkSession, sfDir: String, name: String,
       fn: (SparkSession, String) => DataFrame): Boolean = {
@@ -210,9 +207,7 @@ object Probe {
       }
     println(f"== $name: ${r.jobs} jobs, ${r.sec}%.2f s ==")
     jobs.forEach { case (id, nStages, execution, stages) =>
-      val action = execution.flatMap(x => Option(actions.get(x)))
-        .orElse(if (execution.isEmpty && stages.contains(pooledSite)) Some("returned frame") else None)
-        .fold("")(a => s"[$a]  ")
+      val action = execution.flatMap(x => Option(actions.get(x))).fold("")(a => s"[$a]  ")
       val (deser, run) = times.of(id)
       println(f"job $id%3d  ${durs.getOrDefault(id, -1.0)}%6.2f s  deser_ms=$deser%5d run_ms=$run%6d  " +
         f"stages=$nStages%2d  $action$stages")

@@ -42,7 +42,7 @@ class IntegrationSpec extends SparkTestBase {
 
   test("A3 sweep-interleave factor = |IFNUM| x |PLNUM| distinct (ref continuum.py:24-28)") {
     val df = Seq((0, 0), (0, 1), (1, 0), (1, 1), (0, 0)).toDF("IFNUM", "PLNUM")
-    assert(Integration.sweepInterleaveFactor(df) == 4L)
+    assert(Integration.sweepInterleaveDF(df).as[Long].collect().toSeq == Seq(4L))
   }
 
   test("A10 on-off difference is element-wise") {

@@ -5,8 +5,10 @@ import org.apache.spark.sql.functions._
 import graft.SparkTestBase
 import graft.model.HeaderRecord
 
-/** The multi-file composed path must reproduce the single-file pipeline
-  * file-by-file — one Spark job chain vs a driver loop (VERDICT r2 item 6).
+/** The multi-file reduction must reproduce the reference's per-file
+  * continuum file by file: `runAll` over every file at once, and `run` (the
+  * same reduction over one observation) on each file alone, both against
+  * the scalar port in [[ReferenceReduction]].
   */
 class ContinuumAllSpec extends SparkTestBase {
   import spark.implicits._
@@ -22,11 +24,13 @@ class ContinuumAllSpec extends SparkTestBase {
     * Row i of file f sits at t = i s with ROWIDX `rowidx(f, i)`. With
     * `interleave`, every row is followed by one of another IFNUM or PLNUM
     * (a diode-on spike F1 must drop) at the next ROWIDX, so the kept rows'
-    * ROWIDX are never their positions.
+    * ROWIDX are never their positions. `data` spreads a row's level over
+    * its four channels.
     */
   private def obs(nFiles: Int, rowsPerFile: Int = 64,
       rowidx: (Int, Int) => Long = (_, i) => i.toLong,
-      interleave: Boolean = false): DataFrame = {
+      interleave: Boolean = false,
+      data: Double => Seq[Double] = Seq.fill(4)(_)): DataFrame = {
     val rows = for (f <- 0 until nFiles; i <- 0 until rowsPerFile;
         other <- if (interleave) Seq(false, true) else Seq(false)) yield {
       val (cal, swp, level) =
@@ -40,21 +44,28 @@ class ContinuumAllSpec extends SparkTestBase {
       val ridx = if (interleave) 2 * rowidx(f, i) + (if (other) 1 else 0) else rowidx(f, i)
       (f.toString, ridx,
         java.sql.Timestamp.valueOf(s"2024-01-01 00:${"%02d".format(i / 60)}:${"%02d".format(i % 60)}"),
-        Seq.fill(4)(level), ifnum, plnum, cal, swp, "onoff:on")
+        data(level), ifnum, plnum, cal, swp, "onoff:on")
     }
     rows.toDF("FILE_ID", "ROWIDX", "DATE_OBS", "DATA", "IFNUM", "PLNUM",
       "CALSTATE", "SWPVALID", "OBSMODE")
   }
 
-  /** runAll's rows for each file equal run() on that file alone. */
+  /** runAll's rows for each file, and run() on that file alone, equal the
+    * reference's reduction of that file.
+    */
   private def assertParity(df: DataFrame, nFiles: Int, p: Continuum.Params): Unit = {
+    val expected = ReferenceReduction.files(df, header).view
+      .mapValues(ReferenceReduction.continuum(_, header, p).sortBy(_._1)).toMap
     val all = Continuum.runAll(df, header, p)
       .as[(String, Double, Double)].collect()
       .groupBy(_._1).view.mapValues(_.map(r => (r._2, r._3)).toSeq).toMap
+    assert(expected.keySet == (0 until nFiles).map(_.toString).toSet)
     for (f <- 0 until nFiles) {
       val single = Continuum.run(df.filter($"FILE_ID" === f.toString), header, p)
         .as[(Double, Double)].collect().toSeq
-      assert(single.nonEmpty && all(f.toString) == single, s"file $f diverged")
+      val want = expected(f.toString)
+      assert(want.nonEmpty && all(f.toString) == want, s"runAll: file $f diverged")
+      assert(single == want, s"run: file $f diverged")
     }
   }
 
@@ -75,6 +86,23 @@ class ContinuumAllSpec extends SparkTestBase {
     // drops rows 0..5 and 59..63: the data window starts at position 10,
     // not at ROWIDX 10
     assertParity(obs(3), 3, Continuum.Params(0, 1, includeTime = Seq((5.5, 58.5))))
+  }
+
+  test("runAll reproduces run() under includeFreq/excludeFreq (F7)") {
+    // axis 1395, 1368.3, 1341.7, 1315 MHz: the include range drops channel
+    // 3 and the exclude range channel 1, so each row sums channels 0 and 2;
+    // the interleaved rows of other IFs and pols pass outside F1's crop
+    assertParity(obs(3, interleave = true, data = l => Seq(l, 2 * l, 4 * l, 8 * l)), 3,
+      Continuum.Params(0, 1, includeFreq = Seq((1320.0, 1400.0)),
+        excludeFreq = Seq((1360.0, 1370.0))))
+  }
+
+  test("run reduces its whole input as one observation: a ROWIDX shared by two files fails") {
+    val e = intercept[Exception] {
+      Continuum.run(obs(2), header, Continuum.Params(0, 1)).collect()
+    }
+    val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).map(_.getMessage)
+    assert(msgs.exists(m => m != null && m.contains("duplicate ROWIDX")), e)
   }
 
   test("a duplicate (FILE_ID, ROWIDX) fails loudly, naming the file and the ROWIDX") {

@@ -146,21 +146,29 @@ class PipelineSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
   }
 
   test("Pipeline.runAll reproduces Pipeline.run file-by-file") {
-    // Two copies of the single-file observation under different FILE_IDs.
+    // Two copies of the single-file observation under different FILE_IDs:
+    // runAll's products for each file, and run's for the one file, equal
+    // the reference's reductions of the validated rows.
     val two = obs.union(obs.withColumn("FILE_ID", lit("1")))
     val all = Pipeline.runAll(two, header, ifnum = 0, plnum = 1)
     val single = Pipeline.run(obs, header, ifnum = 0, plnum = 1)
+    val rows = ReferenceReduction.files(Validate.run(two, header), header)
+    val wantCont = rows.view
+      .mapValues(ReferenceReduction.continuum(_, header, Continuum.Params(0, 1))).toMap
+    val wantSpec = rows.view
+      .mapValues(ReferenceReduction.spectrum(_, header, Spectrum.Params(0, 1))).toMap
+    assert(wantCont.keySet == Set("0", "1"))
+    assert(wantCont.values.forall(_.nonEmpty) && wantSpec.values.forall(_.nonEmpty))
 
     val perFileCont = all.continuum.as[(String, Double, Double)].collect()
       .groupBy(_._1).view.mapValues(_.map(r => (r._2, r._3)).sortBy(_._1).toSeq).toMap
-    val expectedCont = single.continuum.as[(Double, Double)].collect().toSeq
-    assert(perFileCont.keySet == Set("0", "1"))
-    assert(perFileCont("0") == expectedCont && perFileCont("1") == expectedCont)
+    assert(perFileCont == wantCont)
+    assert(single.continuum.as[(Double, Double)].collect().toSeq == wantCont("0"))
 
     val perFileSpec = all.spectrum.as[(String, Int, Double, Double)].collect()
       .groupBy(_._1).view.mapValues(_.map(r => (r._2, r._3, r._4)).sortBy(_._1).toSeq).toMap
-    val expectedSpec = single.spectrum.as[(Int, Double, Double)].collect().toSeq
-    assert(perFileSpec("0") == expectedSpec && perFileSpec("1") == expectedSpec)
+    assert(perFileSpec == wantSpec)
+    assert(single.spectrum.as[(Int, Double, Double)].collect().toSeq == wantSpec("0"))
   }
 
   test("Pipeline.runAll issues the same number of jobs for 2 and 100 files") {

@@ -4,8 +4,11 @@ import org.apache.spark.sql.DataFrame
 import graft.SparkTestBase
 import graft.model.HeaderRecord
 
-/** The multi-file spectrum path must reproduce the single-file pipeline
-  * file-by-file, including the no-off-transition fallback.
+/** The multi-file spectrum reduction must reproduce the reference's
+  * per-file spectrum file by file, including the no-off-transition
+  * fallback: `runAll` over every file at once, and `run` (the same
+  * reduction over one observation) on each file alone, both against the
+  * scalar port in [[ReferenceReduction]].
   */
 class SpectrumAllSpec extends SparkTestBase {
   import spark.implicits._
@@ -34,19 +37,24 @@ class SpectrumAllSpec extends SparkTestBase {
       "CALSTATE", "SWPVALID", "OBSMODE")
   }
 
-  /** runAll's rows for each file equal run() on that file alone (no rows
-    * on either side for a file the filter empties); returns run()'s rows.
+  /** runAll's rows for each file, and run() on that file alone, equal the
+    * reference's reduction of that file (no rows for a file the filter
+    * empties); returns the reference's rows.
     */
   private def assertParity(files: Seq[File]): Map[Int, Seq[(Int, Double, Double)]] = {
     val df = obs(files)
-    val all = Spectrum.runAll(df, header, Spectrum.Params(0, 1))
+    val p = Spectrum.Params(0, 1)
+    val rows = ReferenceReduction.files(df, header)
+    val all = Spectrum.runAll(df, header, p)
       .as[(String, Int, Double, Double)].collect()
       .groupBy(_._1).view.mapValues(_.map(r => (r._2, r._3, r._4)).toSeq).toMap
     files.indices.map { f =>
-      val single = Spectrum.run(df.filter($"FILE_ID" === f.toString), header,
-        Spectrum.Params(0, 1)).as[(Int, Double, Double)].collect().toSeq
-      assert(all.getOrElse(f.toString, Seq.empty) == single, s"file $f diverged")
-      f -> single
+      val want = ReferenceReduction.spectrum(rows(f.toString), header, p)
+      val single = Spectrum.run(df.filter($"FILE_ID" === f.toString), header, p)
+        .as[(Int, Double, Double)].collect().toSeq
+      assert(all.getOrElse(f.toString, Seq.empty) == want, s"runAll: file $f diverged")
+      assert(single == want, s"run: file $f diverged")
+      f -> want
     }.toMap
   }
 
