@@ -3,8 +3,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.SQLExecution
 object Bench {
 
-  /** One query's measurement: seconds, whether it succeeded, and its jobs. */
-  final case class Run(name: String, sec: Double, ok: Boolean, jobs: Int)
+  /** One query's measurement: seconds, whether it succeeded, and the
+    * profile of its own job group, without the QueryExecutions (a whole
+    * run's executed plans would keep their broadcasts and checkpoint RDDs
+    * alive).
+    */
+  final case class Run(name: String, sec: Double, ok: Boolean, profile: QueryProfile) {
+    def jobs: Int = profile.jobs.size
+  }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -35,7 +41,7 @@ object Bench {
     // round-6 driver artifact was truncated mid-line and the gate total had
     // to be reconstructed (ADVICE r6) — every byte here risks the parse.
     // Full-precision per-query {sec, jobs} goes to target/bench_detail.json
-    // (the recorded-baseline artifact, VERDICT r6 item 8).
+    // (the recorded-baseline artifact, VERDICT r6 item 8), with the profile.
     // Locale.ROOT: the default-locale formatter prints "1,234" on
     // comma-decimal locales and breaks the one-line JSON contract.
     def fmt(v: Double, dp: Int): String =
@@ -43,8 +49,19 @@ object Bench {
     val qs = results.map { case Run(k, v, ok, _) => s"\"" + k + "\":" + fmt(if (ok) v else -v, 2) }
       .mkString("{", ",", "}")
     val total = results.collect { case Run(_, v, true, _) => v }.sum
-    val detail = results.map { case Run(k, v, ok, j) =>
-      s"\"$k\":{\"sec\":${fmt(if (ok) v else -v, 3)},\"jobs\":$j}"
+    // Each row leads with sec and jobs (JobGate and tools/merge_bench.py read
+    // those), then the query's profile under perfbench's per-layer counter
+    // names: stages and tasks that ran, job-covered seconds (the union of
+    // the group's job intervals), Janino compiles, Catalyst ms summed over
+    // its actions, summed task deserialize and run seconds, shuffle MB.
+    val detail = results.map { case Run(k, v, ok, p) =>
+      s"\"$k\":{\"sec\":${fmt(if (ok) v else -v, 3)},\"jobs\":${p.jobs.size}," +
+        s"\"spark.stages\":${p.stagesRun},\"spark.tasks\":${p.tasks}," +
+        s"\"spark.job_s\":${fmt(p.jobMs / 1e3, 3)},\"codegen.compiles\":${p.compiles}," +
+        s"\"catalyst.plan_ms\":${p.planMs},\"spark.task_deser_s\":${fmt(p.deserMs / 1e3, 3)}," +
+        s"\"spark.task_busy_s\":${fmt(p.runMs / 1e3, 3)}," +
+        s"\"spark.shuffle_write_mb\":${fmt(p.shuffleWrite / 1e6, 6)}," +
+        s"\"spark.shuffle_read_mb\":${fmt(p.shuffleRead / 1e6, 6)}}"
     }.mkString("{", ",", "}")
     try {
       val f = new java.io.File("target/bench_detail.json")
@@ -69,7 +86,7 @@ object Bench {
     // growth — job counts are plan-stable where seconds are load-hostage.
     sys.env.get("SPARK_GRAFT_ASSERT_JOBS").foreach { baselinePath =>
       val recorded = JobGate.loadBaseline(baselinePath)
-      val actual = results.collect { case Run(k, _, true, j) => k -> j }.toMap
+      val actual = results.collect { case r @ Run(k, _, true, _) => k -> r.jobs }.toMap
       val violations = JobGate.compare(recorded, actual)
       if (violations.nonEmpty) {
         violations.foreach(v => System.err.println(s"[jobgate] $v"))
@@ -110,36 +127,41 @@ object Bench {
   private val measurements = new java.util.concurrent.atomic.AtomicLong()
 
   /** Times one registry query the way every recorded number is taken, and
-    * counts its Spark jobs. `gc` adds a full GC after the cleanup (the
-    * caller's cadence). A failure is logged and returned as `ok = false`.
+    * profiles its Spark jobs. `sec` spans building and running the query;
+    * the profile's bus drains fall outside it. `gc` adds a full GC after the
+    * cleanup (the caller's cadence). A failure is logged and returned as
+    * `ok = false`.
     */
   def measure(spark: SparkSession, sfDir: String, name: String,
       fn: (SparkSession, String) => DataFrame, gc: Boolean): Run = {
-    // Job group per measurement → per-query job counts from the status
-    // tracker (VERDICT r6 item 8: seconds alone can't tell cold-JIT tax
-    // from a plan regression; the number of driver actions can). The
-    // tracker keeps a group's earlier jobs, so the group id is unique to
-    // this measurement; the description stays the query name.
+    // Job group per measurement → per-query job counts (VERDICT r6 item 8:
+    // seconds alone can't tell cold-JIT tax from a plan regression; the
+    // number of driver actions can). The group id is unique to this
+    // measurement, so a query measured twice counts each run's own jobs;
+    // the description stays the query name.
     val group = s"$name#${measurements.incrementAndGet()}"
-    spark.sparkContext.setJobGroup(group, name, interruptOnCancel = false)
-    val t0 = System.nanoTime()
-    // Noop sink, not count(): count() lets Catalyst prune unreferenced
-    // projections, so map-only queries would benchmark near-zero work.
-    // Evaluating every InternalRow measures the actual plan. It runs as one
-    // SQL execution named after the query, as a Dataset action would: its
-    // jobs carry `spark.sql.execution.id` and QueryExecutionListeners see
-    // the measured plan.
-    val ok =
-      try {
-        val qe = fn(spark, sfDir).queryExecution
-        SQLExecution.withNewExecutionId(qe, Some(name))(qe.toRdd.foreach(_ => ()))
-        true
-      }
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] $name failed: ${e.getMessage}"); false
-      }
-    val elapsed = (System.nanoTime() - t0) / 1e9
-    spark.sparkContext.clearJobGroup()
+    val ((ok, sec), profile) = QueryProfile.record(spark) {
+      spark.sparkContext.setJobGroup(group, name, interruptOnCancel = false)
+      val t0 = System.nanoTime()
+      // Noop sink, not count(): count() lets Catalyst prune unreferenced
+      // projections, so map-only queries would benchmark near-zero work.
+      // Evaluating every InternalRow measures the actual plan. It runs as one
+      // SQL execution named after the query, as a Dataset action would: its
+      // jobs carry `spark.sql.execution.id` and QueryExecutionListeners see
+      // the measured plan.
+      val ok =
+        try {
+          val qe = fn(spark, sfDir).queryExecution
+          SQLExecution.withNewExecutionId(qe, Some(name))(qe.toRdd.foreach(_ => ()))
+          true
+        }
+        catch { case e: Throwable =>
+          System.err.println(s"[bench] $name failed: ${e.getMessage}"); false
+        }
+      val sec = (System.nanoTime() - t0) / 1e9
+      spark.sparkContext.clearJobGroup()
+      (ok, sec)
+    }
     // Between queries: drop caches/localCheckpoint blocks (always), and
     // periodically force a GC — persisted blocks otherwise live until
     // their RDD is collected, and the accumulated block-manager +
@@ -149,9 +171,6 @@ object Bench {
     spark.catalog.clearCache()
     spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
     if (gc) System.gc()
-    // The status store is fed by the async listener bus: read the group's
-    // job ids only once every event posted so far has been delivered.
-    GraftSession.drain(spark)
-    Run(name, elapsed, ok, spark.sparkContext.statusTracker.getJobIdsForGroup(group).length)
+    Run(name, sec, ok, profile.ofGroup(group).copy(plans = Nil))
   }
 }

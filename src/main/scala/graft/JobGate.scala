@@ -29,15 +29,16 @@ object JobGate {
     }
 
   /** Parse a bench_detail-format artifact ({"queries":{"q":{"sec":…,
-    * "jobs":N},…}}) into the per-query job-count map. Regex-based on
-    * purpose: the artifact is machine-written JSON and the gate must not
-    * grow a parser dependency. Whitespace-tolerant — the recorded
-    * baseline has been pretty-printed in some rounds, and the original
-    * compact-only regex parsed ZERO entries from it, silently turning
-    * the gate into a no-op (every query "new", every run "ok").
+    * "jobs":N, …profile fields},…}}) into the per-query job-count map.
+    * Regex-based on purpose: the artifact is machine-written JSON and the
+    * gate must not grow a parser dependency. A row leads with `sec` and
+    * `jobs`; whatever follows `jobs` is ignored. Whitespace-tolerant — the
+    * recorded baseline has been pretty-printed in some rounds, and the
+    * original compact-only regex parsed ZERO entries from it, silently
+    * turning the gate into a no-op (every query "new", every run "ok").
     */
   def parseJobs(json: String): Map[String, Int] =
-    """"([A-Za-z0-9_]+)"\s*:\s*\{\s*"sec"\s*:\s*[^,]+,\s*"jobs"\s*:\s*(\d+)\s*\}""".r
+    """"([A-Za-z0-9_]+)"\s*:\s*\{\s*"sec"\s*:\s*[^,]+,\s*"jobs"\s*:\s*(\d+)\s*[,}]""".r
       .findAllMatchIn(json)
       .map(m => m.group(1) -> m.group(2).toInt)
       .toMap

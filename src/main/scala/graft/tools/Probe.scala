@@ -1,18 +1,10 @@
 package graft.tools
 
-import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
-
-import scala.jdk.CollectionConverters._
-
-import org.apache.spark.metrics.source.CodegenMetrics
-import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerTaskEnd}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.plans.logical.{Window => LWindow}
-import org.apache.spark.sql.execution.{FormattedMode, QueryExecution, SQLExecution}
-import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
-import org.apache.spark.sql.util.QueryExecutionListener
+import org.apache.spark.sql.execution.FormattedMode
 
-import graft.{Bench, GraftSession, SparkEntry}
+import graft.{Bench, GraftSession, QueryProfile, SparkEntry}
 
 /** Inspects registry queries on a `GraftSession` (`SPARK_GRAFT_CPUS` cores,
   * default 4, as Bench).
@@ -92,27 +84,38 @@ object Probe {
       val fn = registry(name)
       try mode match {
         case "time" =>
-          val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
-          val times = new TaskTimes
-          spark.sparkContext.addSparkListener(times)
-          val r = try Bench.measure(spark, sfDir, name, fn, gc = true)
-            finally spark.sparkContext.removeSparkListener(times)
-          val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0
-          println(f"TIMED $name ${r.sec}%.2f s jobs=${r.jobs} compiles=$compiles " +
-            s"deser_ms=${times.total._1}")
+          val r = Bench.measure(spark, sfDir, name, fn, gc = true)
+          println(f"TIMED $name ${r.sec}%.2f s jobs=${r.jobs} compiles=${r.profile.compiles} " +
+            s"deser_ms=${r.profile.deserMs}")
           r.ok
-        case "jobs" => auditJobs(spark, sfDir, name, fn)
+        case "jobs" =>
+          // a warm pass, then the measured pass; a job that runs under a SQL
+          // execution (every AQE stage job, whose own call site is a
+          // thread-pool frame) is named by the action that started it, e.g.
+          // `localCheckpoint at Dedup.scala:409`, and the returned frame's
+          // jobs by Bench's own, `withNewExecutionId at Bench.scala:<line>`
+          Bench.measure(spark, sfDir, name, fn, gc = true).ok && {
+            val r = Bench.measure(spark, sfDir, name, fn, gc = true)
+            println(f"== $name: ${r.jobs} jobs, ${r.sec}%.2f s ==")
+            r.profile.jobs.foreach { j =>
+              val action = j.action.fold("")(a => s"[$a]  ")
+              val stages = j.stages.map(st => s"${st.name}(${st.tasks}t)").mkString(" | ")
+              println(f"job ${j.id}%3d  ${j.sec}%6.2f s  deser_ms=${j.deserMs}%5d " +
+                f"run_ms=${j.runMs}%6d  stages=${j.stages.size}%2d  $action$stages")
+            }
+            r.ok
+          }
         case "plan" =>
           write(s"$name$suffix.txt",
             fn(spark, sfDir).queryExecution.explainString(FormattedMode))
           true
         case "trace" =>
-          val plans = traceExecuted(spark)(fn(spark, sfDir).write.format("noop")
+          val (_, profile) = QueryProfile.record(spark)(fn(spark, sfDir).write.format("noop")
             .mode("overwrite").save())
-          plans.zipWithIndex.foreach { case ((action, txt), i) =>
-            write(s"${name}_exec${i}_$action$suffix.txt", txt)
+          profile.plans.zipWithIndex.foreach { case ((action, qe), i) =>
+            write(s"${name}_exec${i}_$action$suffix.txt", qe.explainString(FormattedMode))
           }
-          plans.nonEmpty
+          profile.plans.nonEmpty
         case "windows" =>
           val bad = fn(spark, sfDir).queryExecution.optimizedPlan.collect {
             case w: LWindow if w.partitionSpec.isEmpty => w
@@ -134,100 +137,8 @@ object Probe {
     }
   }
 
-  /** `<method> at <file>:<line>`, Spark's short call-site form, from the long
-    * form (the last Spark frame, then the first user frame) that a SQL
-    * execution's start event carries as its details.
-    */
-  private[tools] def callSite(details: String): Option[String] = {
-    val Frame = """(.+)\.([^.]+)\((.*)\)""".r
-    details.linesIterator.take(2).toSeq match {
-      case Seq(Frame(cls, method, _), Frame(_, _, at)) =>
-        Some(s"${if (method == "<init>") cls.split('.').last else method} at $at")
-      case _ => None
-    }
-  }
-
-  /** Summed `(executorDeserializeTime, executorRunTime)` ms of the tasks of
-    * each job started while registered. Run time excludes deserialization,
-    * so a task payload that is slow to rebuild shows only in the first.
-    */
-  private final class TaskTimes extends SparkListener {
-    private val jobOfStage = new ConcurrentHashMap[Int, Int]()
-    private val byJob = new ConcurrentHashMap[Int, (Long, Long)]()
-    override def onJobStart(js: SparkListenerJobStart): Unit =
-      js.stageIds.foreach(jobOfStage.putIfAbsent(_, js.jobId))
-    override def onTaskEnd(te: SparkListenerTaskEnd): Unit =
-      Option(te.taskMetrics).foreach { m =>
-        byJob.merge(jobOfStage.getOrDefault(te.stageId, -1),
-          (m.executorDeserializeTime, m.executorRunTime),
-          (a: (Long, Long), b: (Long, Long)) => (a._1 + b._1, a._2 + b._2))
-      }
-    def of(jobId: Int): (Long, Long) = byJob.getOrDefault(jobId, (0L, 0L))
-    def total: (Long, Long) =
-      byJob.values.asScala.foldLeft((0L, 0L)) { case ((d, r), (a, b)) => (d + a, r + b) }
-  }
-
-  /** Warm pass, then the measured pass with a per-job listener. A job that
-    * runs under a SQL execution (every AQE stage job, whose own call site
-    * is a thread-pool frame) is named by the action that started the
-    * execution, e.g. `localCheckpoint at Dedup.scala:409`; the returned
-    * frame's jobs run under Bench's own execution, `withNewExecutionId at
-    * Bench.scala:<line>`.
-    */
-  private def auditJobs(spark: SparkSession, sfDir: String, name: String,
-      fn: (SparkSession, String) => DataFrame): Boolean = {
-    if (!Bench.measure(spark, sfDir, name, fn, gc = true).ok) return false
-    val jobs = new ConcurrentLinkedQueue[(Int, Int, Option[Long], String)]()
-    val starts = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
-    val durs = new java.util.concurrent.ConcurrentHashMap[Int, Double]()
-    val actions = new java.util.concurrent.ConcurrentHashMap[Long, String]()
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit = {
-        starts.put(js.jobId, js.time)
-        val execution = Option(js.properties)
-          .flatMap(p => Option(p.getProperty(SQLExecution.EXECUTION_ID_KEY))).map(_.toLong)
-        val stages = js.stageInfos.map(si => s"${si.name}(${si.numTasks}t)").mkString(" | ")
-        jobs.add((js.jobId, js.stageInfos.size, execution, stages))
-      }
-      override def onJobEnd(je: SparkListenerJobEnd): Unit =
-        durs.put(je.jobId, (je.time - starts.getOrDefault(je.jobId, je.time)) / 1e3)
-      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
-        case s: SparkListenerSQLExecutionStart =>
-          callSite(s.details).foreach(actions.put(s.executionId, _))
-        case _ =>
-      }
-    }
-    val times = new TaskTimes
-    spark.sparkContext.addSparkListener(listener)
-    spark.sparkContext.addSparkListener(times)
-    val r = try Bench.measure(spark, sfDir, name, fn, gc = true)
-      finally {
-        spark.sparkContext.removeSparkListener(listener)
-        spark.sparkContext.removeSparkListener(times)
-      }
-    println(f"== $name: ${r.jobs} jobs, ${r.sec}%.2f s ==")
-    jobs.forEach { case (id, nStages, execution, stages) =>
-      val action = execution.flatMap(x => Option(actions.get(x))).fold("")(a => s"[$a]  ")
-      val (deser, run) = times.of(id)
-      println(f"job $id%3d  ${durs.getOrDefault(id, -1.0)}%6.2f s  deser_ms=$deser%5d run_ms=$run%6d  " +
-        f"stages=$nStages%2d  $action$stages")
-    }
-    r.ok
-  }
-
-  /** (action, formatted executed plan) of every Dataset action `body` runs. */
-  private def traceExecuted(spark: SparkSession)(body: => Unit): Seq[(String, String)] = {
-    val plans = new ConcurrentLinkedQueue[(String, String)]()
-    val listener = new QueryExecutionListener {
-      override def onSuccess(action: String, qe: QueryExecution, durationNs: Long): Unit =
-        plans.add((action, qe.explainString(FormattedMode)))
-      override def onFailure(action: String, qe: QueryExecution, e: Exception): Unit = ()
-    }
-    spark.listenerManager.register(listener)
-    try { body; GraftSession.drain(spark) }
-    finally spark.listenerManager.unregister(listener)
-    plans.toArray(Array.empty[(String, String)]).toSeq
-  }
+  /** [[QueryProfile.callSite]], the form the `jobs` lines print. */
+  private[tools] def callSite(details: String): Option[String] = QueryProfile.callSite(details)
 
   /** Registry names containing `name` (sans `q_`), else the three nearest. */
   private def suggest(name: String, all: Seq[String]): Seq[String] = {

@@ -1,14 +1,7 @@
 package graft
 
-import java.util.concurrent.ConcurrentLinkedQueue
-
-import scala.jdk.CollectionConverters._
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.{QueryExecution, SQLExecution}
 import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Bench's per-query measurement and its environment parsing. */
 class BenchSpec extends SparkTestBase {
@@ -37,32 +30,13 @@ class BenchSpec extends SparkTestBase {
     // beside the final job
     val grouped: (SparkSession, String) => DataFrame =
       (s, _) => s.range(1000).groupBy(col("id") % 7).count()
-    val jobs = new ConcurrentLinkedQueue[Option[String]]()
-    val jobListener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit = {
-        val p = Option(js.properties)
-        if (p.exists(_.getProperty("spark.jobGroup.id", "").startsWith("bench_spec_sql#")))
-          jobs.add(p.flatMap(x => Option(x.getProperty(SQLExecution.EXECUTION_ID_KEY))))
-      }
-    }
-    val seen = new ConcurrentLinkedQueue[String]()
-    val qeListener = new QueryExecutionListener {
-      override def onSuccess(action: String, qe: QueryExecution, durationNs: Long): Unit =
-        seen.add(action)
-      override def onFailure(action: String, qe: QueryExecution, e: Exception): Unit = ()
-    }
-    spark.sparkContext.addSparkListener(jobListener)
-    spark.listenerManager.register(qeListener)
-    val r = try Bench.measure(spark, "", "bench_spec_sql", grouped, gc = false)
-      finally {
-        GraftSession.drain(spark)
-        spark.sparkContext.removeSparkListener(jobListener)
-        spark.listenerManager.unregister(qeListener)
-      }
-    val ids = jobs.asScala.toSeq
+    val (r, profile) =
+      QueryProfile.record(spark)(Bench.measure(spark, "", "bench_spec_sql", grouped, gc = false))
+    val ids = profile.jobs.filter(_.group.exists(_.startsWith("bench_spec_sql#"))).map(_.execution)
+    val seen = profile.plans.map(_._1)
     assert(r.ok && r.jobs >= 2 && ids.size == r.jobs, s"$r, job execution ids $ids")
     assert(ids.forall(_.isDefined) && ids.distinct.size == 1, ids)
-    assert(seen.asScala.toSeq == Seq("bench_spec_sql"), seen)
+    assert(seen == Seq("bench_spec_sql"), seen)
   }
 
   test("a bad SPARK_GRAFT_CPUS or SPARK_GRAFT_GC_EVERY names the variable and value") {

@@ -39,6 +39,17 @@ class JobGateSpec extends SparkTestBase {
     assert(JobGate.parseJobs(pretty) == Map("q_a" -> 3, "q_b" -> 7))
   }
 
+  test("parses rows that carry profile fields after jobs") {
+    val wide = """{"total":3.1,"sf":"/x","queries":{""" +
+      """"q_a":{"sec":1.100,"jobs":3,"spark.stages":4,"spark.tasks":16,"spark.job_s":0.912,""" +
+      """"codegen.compiles":7,"catalyst.plan_ms":41,"spark.task_deser_s":0.020,""" +
+      """"spark.task_busy_s":1.480,"spark.shuffle_write_mb":0.012345,"spark.shuffle_read_mb":0.012345},""" +
+      """"q_b":{"sec":-0.500,"jobs":7,"spark.stages":0,"spark.tasks":0,"spark.job_s":0.000,""" +
+      """"codegen.compiles":0,"catalyst.plan_ms":0,"spark.task_deser_s":0.000,""" +
+      """"spark.task_busy_s":0.000,"spark.shuffle_write_mb":0.000000,"spark.shuffle_read_mb":0.000000}}}"""
+    assert(JobGate.parseJobs(wide) == Map("q_a" -> 3, "q_b" -> 7))
+  }
+
   test("loadBaseline is loud on a zero-entry parse") {
     val f = java.nio.file.Files.createTempFile("jobs", ".json")
     try {
@@ -48,21 +59,11 @@ class JobGateSpec extends SparkTestBase {
   }
 
   test("a deliberately-regressed plan (extra driver action) is caught live") {
-    def jobsOf(name: String)(body: => Unit): Int = {
-      spark.sparkContext.setJobGroup(name, name, interruptOnCancel = false)
-      body
-      spark.sparkContext.clearJobGroup()
-      // settle the async status listener before reading the group
-      spark.sparkContext.statusTracker.getJobIdsForGroup(name).length.max {
-        Thread.sleep(200)
-        spark.sparkContext.statusTracker.getJobIdsForGroup(name).length
-      }
-    }
     val df = spark.range(1000).toDF("id")
-    val good = jobsOf("jg_good") {
+    val good = jobsOf {
       df.groupBy(col("id") % 7).count().queryExecution.toRdd.foreach(_ => ())
     }
-    val regressed = jobsOf("jg_bad") {
+    val regressed = jobsOf {
       // the regression: a driver-side count() materializes the aggregate a
       // second time before the real sink — an extra job in the same "query"
       val agg = df.groupBy(col("id") % 7).count()

@@ -5,13 +5,12 @@ import java.lang.Double.doubleToRawLongBits
 import org.apache.spark.sql.{Column, DataFrame, Encoder, Row}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.catalyst.expressions.HigherOrderFunction
-import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.util.QueryExecutionListener
 import graft.SparkTestBase
 import graft.model.HeaderRecord
 import graft.pipeline.Pipeline
@@ -272,17 +271,8 @@ class ArrayKernelsSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
     }
 
   /** The executed plan of every action `body` runs. */
-  private def executedPlans(body: => Unit): Seq[SparkPlan] = {
-    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
-    val listener = new QueryExecutionListener {
-      override def onSuccess(f: String, qe: QueryExecution, d: Long): Unit = plans.add(qe.executedPlan)
-      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
-    }
-    spark.listenerManager.register(listener)
-    try { body; graft.GraftSession.drain(spark) }
-    finally spark.listenerManager.unregister(listener)
-    plans.toArray(Array.empty[SparkPlan]).toSeq
-  }
+  private def executedPlans(body: => Unit): Seq[SparkPlan] =
+    graft.QueryProfile.record(spark)(body)._2.plans.map(_._2.executedPlan)
 
   test("Pipeline.run and runAll plan no higher-order function") {
     val header = HeaderRecord.Header(

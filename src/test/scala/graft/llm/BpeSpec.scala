@@ -44,15 +44,8 @@ class BpeSpec extends SparkTestBase {
   test("incremental trainer: O(1) Spark jobs regardless of merge count") {
     val corpus = Seq("low low low", "lower lowest", "a b ab abc").toDF("text")
       .localCheckpoint() // pin the input so both runs plan identically
-    val sc = spark.sparkContext
-    def jobsFor(group: String)(body: => Unit): Int = {
-      sc.setJobGroup(group, group, interruptOnCancel = false)
-      body
-      sc.clearJobGroup()
-      sc.statusTracker.getJobIdsForGroup(group).length
-    }
-    val j2 = jobsFor("bpe_incr_2")(Bpe.trainIncremental(corpus, numMerges = 2, minCount = 1))
-    val j16 = jobsFor("bpe_incr_16")(Bpe.trainIncremental(corpus, numMerges = 16, minCount = 1))
+    val j2 = jobsOf(Bpe.trainIncremental(corpus, numMerges = 2, minCount = 1))
+    val j16 = jobsOf(Bpe.trainIncremental(corpus, numMerges = 16, minCount = 1))
     assert(j16 === j2, "job count must not grow with the merge count")
     assert(j16 <= 4, s"expected O(1) jobs total, got $j16")
   }
