@@ -53,7 +53,8 @@ object Bench {
     // those), then the query's profile under perfbench's per-layer counter
     // names: stages and tasks that ran, job-covered seconds (the union of
     // the group's job intervals), Janino compiles, Catalyst ms summed over
-    // its actions, summed task deserialize and run seconds, shuffle MB.
+    // its actions, summed task deserialize and run seconds, shuffle and
+    // spill MB, and the max/median task run time.
     val detail = results.map { case Run(k, v, ok, p) =>
       s"\"$k\":{\"sec\":${fmt(if (ok) v else -v, 3)},\"jobs\":${p.jobs.size}," +
         s"\"spark.stages\":${p.stagesRun},\"spark.tasks\":${p.tasks}," +
@@ -61,7 +62,8 @@ object Bench {
         s"\"catalyst.plan_ms\":${p.planMs},\"spark.task_deser_s\":${fmt(p.deserMs / 1e3, 3)}," +
         s"\"spark.task_busy_s\":${fmt(p.runMs / 1e3, 3)}," +
         s"\"spark.shuffle_write_mb\":${fmt(p.shuffleWrite / 1e6, 6)}," +
-        s"\"spark.shuffle_read_mb\":${fmt(p.shuffleRead / 1e6, 6)}}"
+        s"\"spark.shuffle_read_mb\":${fmt(p.shuffleRead / 1e6, 6)}," +
+        s"\"spark.spill_mb\":${fmt(p.spill / 1e6, 6)},\"spark.task_skew\":${fmt(p.taskSkew, 3)}}"
     }.mkString("{", ",", "}")
     try {
       val f = new java.io.File("target/bench_detail.json")

@@ -35,6 +35,14 @@ final case class QueryProfile(
   def runMs: Long = jobs.map(_.runMs).sum
   def shuffleWrite: Long = jobs.map(_.shuffleWrite).sum
   def shuffleRead: Long = jobs.map(_.shuffleRead).sum
+  def spill: Long = jobs.map(_.spill).sum
+
+  /** Longest over median (upper) task run ms; 1.0 without tasks or at a 0 ms median. */
+  def taskSkew: Double = {
+    val ms = jobs.flatMap(_.taskMs).sorted
+    val median = if (ms.isEmpty) 0L else ms(ms.size / 2)
+    if (median > 0) ms.last.toDouble / median else 1.0
+  }
 
   /** Milliseconds during which at least one job ran: the length of the
     * union of the jobs' `[start, end]` intervals.
@@ -62,11 +70,13 @@ object QueryProfile {
     * @param deserMs   summed task `executorDeserializeTime`; run time excludes
     *                  it, so a task payload that is slow to rebuild shows here
     * @param runMs     summed task `executorRunTime`
+    * @param spill     summed task `diskBytesSpilled`
+    * @param taskMs    each task's `executorRunTime`, in end order
     */
   final case class Job(id: Int, group: Option[String], execution: Option[Long],
       action: Option[String], startMs: Long, endMs: Long, stages: Seq[Stage],
       stagesRun: Int, tasks: Int, deserMs: Long, runMs: Long,
-      shuffleWrite: Long, shuffleRead: Long) {
+      shuffleWrite: Long, shuffleRead: Long, spill: Long, taskMs: Vector[Long]) {
     def sec: Double = if (endMs < 0) -1.0 else (endMs - startMs) / 1e3
   }
 
@@ -129,7 +139,7 @@ object QueryProfile {
       val execution = prop(SQLExecution.EXECUTION_ID_KEY).map(_.toLong)
       jobs(js.jobId) = Job(js.jobId, prop("spark.jobGroup.id"), execution,
         execution.flatMap(actions.get), js.time, -1L,
-        js.stageInfos.map(si => Stage(si.name, si.numTasks)), 0, 0, 0L, 0L, 0L, 0L)
+        js.stageInfos.map(si => Stage(si.name, si.numTasks)), 0, 0, 0L, 0L, 0L, 0L, 0L, Vector.empty)
       // a stage runs in the first job that holds it; later jobs skip it
       js.stageIds.foreach(jobOfStage.getOrElseUpdate(_, js.jobId))
     }
@@ -146,7 +156,8 @@ object QueryProfile {
         else j.copy(tasks = j.tasks + 1,
           deserMs = j.deserMs + m.executorDeserializeTime, runMs = j.runMs + m.executorRunTime,
           shuffleWrite = j.shuffleWrite + m.shuffleWriteMetrics.bytesWritten,
-          shuffleRead = j.shuffleRead + m.shuffleReadMetrics.totalBytesRead)
+          shuffleRead = j.shuffleRead + m.shuffleReadMetrics.totalBytesRead,
+          spill = j.spill + m.diskBytesSpilled, taskMs = j.taskMs :+ m.executorRunTime)
       }
     }
 

@@ -60,9 +60,12 @@ object Continuum {
     *    `params`; every window test is a ROWIDX comparison.
     *
     * Jobs: the checkpoint, three broadcasts (`cc`, `idx`, `params`) and the
-    * final range sort's three. Over input grouped by FILE_ID and sorted by
-    * ROWIDX, a stamped SDFITS directory, `cc`, the scan and `params` need no
-    * exchange and the scan no sort; otherwise each shuffles once.
+    * collect, 5. Over a stamped SDFITS directory (grouped by FILE_ID, sorted
+    * by ROWIDX) nothing exchanges or sorts; otherwise `cc`, the scan and
+    * `params` each add a shuffle. The rows are unordered, one per
+    * (FILE_ID, t): order them with `orderBy`, or over a stamped directory,
+    * where each file's rows sit in one partition in ROWIDX order,
+    * `sortWithinPartitions`.
     *
     * Each file's rows are the reference's reduction of that file alone
     * (interpolation over the data window's min/max t), pinned by
@@ -178,6 +181,5 @@ object Continuum {
       .select(col("FILE_ID"), col("t"),
         GainCal.divide(col("intensity"), col("t"), col("__mode"),
           col("__p"), col("__q"), col("__t1"), col("__t2")).as("intensity"))
-      .orderBy(col("FILE_ID"), col("t"))
   }
 }

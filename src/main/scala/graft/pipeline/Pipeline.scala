@@ -79,6 +79,11 @@ object Pipeline {
     * [[Continuum.runAll]] / [[Spectrum.runAll]] — the whole driver for N
     * files in two job chains, no per-file driver orchestration and no
     * caches held.
+    * Both products are unordered, as the reference returns each file's
+    * arrays and no order across them. Over a stamped SDFITS directory no
+    * plan exchanges: 5 + 2 jobs whatever the file count. Order them with
+    * `orderBy`, or `sortWithinPartitions` over a stamped directory; an
+    * `orderBy` of the stamped spectrum rereads the scan in its sample job.
     */
   def runAll(
       df: DataFrame,

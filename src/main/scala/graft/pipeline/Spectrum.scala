@@ -31,11 +31,12 @@ object Spectrum {
   /** The reference's per-file reduction: [[runAll]] with every row under
     * one file key, so the whole input is reduced as ONE observation, as the
     * reference reads one file. Returns (pos, frequency, intensity) ordered
-    * by pos.
+    * by pos, sorted in one partition: one spectrum needs no range exchange.
     */
   def run(df: DataFrame, header: Header, p: Params): DataFrame =
     runAll(df.withColumn("FILE_ID", lit("0")), header, p)
       .select(col("pos"), col("frequency"), col("intensity"))
+      .coalesce(1)
       .orderBy(col("pos"))
 
   /** Spectra for N files in ONE job chain, with no position window and no
@@ -43,14 +44,13 @@ object Spectrum {
     * slim flag columns (DATA pruned), broadcast-joined back; the ON and OFF
     * vector sums are two conditional sums in ONE groupBy(FILE_ID)
     * aggregate with map-side partial whole-array sums.
-    * Output: one row per (FILE_ID, channel).
+    * Output: one row per (FILE_ID, pos), unordered.
     *
-    * Jobs: the off thresholds' broadcast, one exchange of the per-file sums
-    * and the final range sort's three, plus one exchange for the thresholds
-    * when the input is not grouped by FILE_ID. Over a stamped SDFITS
-    * directory neither aggregate needs an exchange; the sums still cross
-    * one, so that the range sort samples that stage's output instead of
-    * decoding DATA a second time.
+    * Jobs: the off thresholds' broadcast and the collect, 2. Over a stamped
+    * SDFITS directory neither aggregate exchanges; otherwise each adds a
+    * shuffle. To order the rows, `sortWithinPartitions` over a stamped
+    * directory adds no exchange; an `orderBy` there samples its input in a
+    * job that reruns the scan and decodes DATA a second time.
     */
   def runAll(df: DataFrame, header: Header, p: Params): DataFrame = {
     var d = df.filter(
@@ -110,12 +110,6 @@ object Spectrum {
         VectorSum.vecSum(when(on, data)).as("s_on"),
         VectorSum.vecSum(when(!on, data)).as("s_off"),
         first(split).as("__split"))
-      // A stage boundary over the per-file sums (one row per file): the
-      // orderBy below samples its input in a job of its own, and without a
-      // boundary that job would rerun the scan and decode DATA again. Over
-      // input not grouped by FILE_ID the aggregate's own exchange already
-      // partitions by FILE_ID, and Spark drops this one.
-      .repartition(col("FILE_ID"))
       .select(col("FILE_ID"),
         when(!col("__split"), col("s_on"))
           .otherwise(ArrayOps.vecDiff(col("s_on"), col("s_off"))).as("spectrum"))
@@ -124,6 +118,5 @@ object Spectrum {
     spec.select(col("FILE_ID"), posexplode(col("spectrum")).as(Seq("pos", "intensity")))
       .withColumn("frequency", element_at(freqLit, col("pos") + 1))
       .select(col("FILE_ID"), col("pos"), col("frequency"), col("intensity"))
-      .orderBy(col("FILE_ID"), col("pos"))
   }
 }

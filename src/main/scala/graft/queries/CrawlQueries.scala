@@ -372,19 +372,14 @@ object CrawlQueries {
         when(col("doc_id") % 5 === 0, lit(boilerLine2))).as("text"))
 
   /** Write a real on-disk WARC directory (8 files, alternating plain /
-    * concatenated-gzip) from every 5th document; idempotent per (sf dir,
-    * source fingerprint) via the sdfits marker discipline. The DSv2
+    * concatenated-gzip) from every 5th document, a [[stagedInput]] per
+    * (sf dir, source fingerprint). The DSv2
     * connector query reads THESE bytes — the full listing → sniff →
     * chain-decode → scan path, not an in-memory model of it.
     */
   private def ensureWarcDir(s: SparkSession, dir: String): String = {
     val tag = dir.replaceAll("[^A-Za-z0-9]+", "_")
-    val root = new java.io.File(stagingDir() + s"/warc/dir_$tag")
-    val marker = new java.io.File(root.getPath + ".src")
-    val fp = sourceSignature(dir, "documents")
-    val current = root.isDirectory && marker.isFile &&
-      new String(java.nio.file.Files.readAllBytes(marker.toPath), "UTF-8") == fp
-    if (!current) {
+    stagedInput(s"warc/dir_$tag", sourceSignature(dir, "documents")) { root =>
       root.mkdirs()
       val enc3 = Encoders.tuple(Encoders.scalaLong, Encoders.STRING, Encoders.STRING)
       val rows = docs(s, dir).filter(col("doc_id") % 5 === 0)
@@ -400,9 +395,7 @@ object CrawlQueries {
         java.nio.file.Files.write(
           new java.io.File(root, s"w$k.warc" + (if (gz) ".gz" else "")).toPath, bytes)
       }
-      java.nio.file.Files.write(marker.toPath, fp.getBytes("UTF-8"))
-    }
-    root.getAbsolutePath
+    }.getAbsolutePath
   }
 
   // ------------------------------------------------------------- queries

@@ -162,13 +162,11 @@ object QueryUtil {
 
   /** Per-JVM scratch root for PER-RUN staged writes (snapshot stores, ORC
     * round trips, ANN index roots — anything a query destroys and rebuilds
-    * every run). PID-scoped so a concurrently-running sibling JVM (Bench
-    * beside Verify — measured in r17: a `SnapshotStore.destroy` /
-    * `mode("overwrite")` from one JVM deleted the other's `_temporary`
-    * mid-write) can never clobber this one's scratch; swept recursively on
-    * JVM exit. PUBLISHED artifacts (fingerprint-keyed bucketed tables,
-    * `stagedOnce` graphs) intentionally do NOT live here — their reuse
-    * across queries is the thing they certify.
+    * every run) and for the staged inputs of [[stagedInput]]. PID-scoped so
+    * a concurrently-running sibling JVM (Bench beside Verify — measured in
+    * r17: a `SnapshotStore.destroy` / `mode("overwrite")` from one JVM
+    * deleted the other's `_temporary` mid-write) can never clobber this
+    * one's scratch; swept recursively on JVM exit.
     */
   lazy val scratchDir: String = {
     val p = new java.io.File(stagingDir(), "run_" + ProcessHandle.current().pid())
@@ -180,6 +178,22 @@ object QueryUtil {
       rec(p)
     }))
     p.getAbsolutePath
+  }
+
+  /** A staged input derived from source tables, built by `write` at
+    * `scratchDir/rel` on this JVM's first call and reused while its marker
+    * holds `fingerprint` ([[sourceSignature]]): every JVM's first run of a
+    * query writes it and counts the same jobs, whatever an earlier JVM left.
+    */
+  def stagedInput(rel: String, fingerprint: String)(write: java.io.File => Unit): java.io.File = {
+    val out = new java.io.File(scratchDir, rel)
+    val marker = new java.io.File(out.getPath + ".src")
+    if (!(out.exists && marker.isFile && java.nio.file.Files.readString(marker.toPath) == fingerprint)) {
+      out.getParentFile.mkdirs()
+      write(out)
+      java.nio.file.Files.writeString(marker.toPath, fingerprint)
+    }
+    out
   }
 
   /** Build-once-per-JVM staged derived input (VERDICT r15 item 2).

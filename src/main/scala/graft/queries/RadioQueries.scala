@@ -478,7 +478,7 @@ object RadioQueries {
       // Multi-file scale path: N files reduced in ONE job chain (per-file
       // ST1 + A8 + A9 executor-side; flat spikes make the gain oracle exact).
       Continuum.runAll(obs(li(s, dir), 4, spikes = true, offAt = None), obsHeader(4),
-        Continuum.Params(ifnum = 0, plnum = 1))),
+        Continuum.Params(ifnum = 0, plnum = 1)).orderBy(col("FILE_ID"), col("t"))),
 
     "q_pipeline_atmosphere" -> ((s, dir) => {
       // End-to-end atmosphere correction (ref atmosphere_correction.py:59-86):
@@ -567,7 +567,7 @@ object RadioQueries {
       // Multi-file spectrum scale path: per-file ON/OFF spectra in ONE
       // groupBy(FILE_ID) aggregation pass.
       Spectrum.runAll(obs(li(s, dir), 4, spikes = false, offAt = Some(100)), obsHeader(4),
-        Spectrum.Params(ifnum = 0, plnum = 1)))
+        Spectrum.Params(ifnum = 0, plnum = 1)).orderBy(col("FILE_ID"), col("pos")))
   )
 
   /** DuckDB oracles. Formula comments: every double expression mirrors the

@@ -304,13 +304,7 @@ object ScaleQueries {
       // the rest — output hash-checked against the documents table.
       import org.apache.spark.sql.types._
       val tag = dir.replaceAll("[^A-Za-z0-9]+", "_")
-      val out = new java.io.File(stagingDir() + s"/jsonl/docs_$tag.jsonl")
-      val marker = new java.io.File(out.getPath + ".src")
-      val fp = sourceSignature(dir, "documents")
-      val current = out.isFile && marker.isFile &&
-        new String(java.nio.file.Files.readAllBytes(marker.toPath), "UTF-8") == fp
-      if (!current) {
-        out.getParentFile.mkdirs()
+      val out = stagedInput(s"jsonl/docs_$tag.jsonl", sourceSignature(dir, "documents")) { f =>
         val rows = docs(s, dir).select(col("doc_id"), col("lang"), col("n_chars"))
           .orderBy(col("doc_id")).collect()
         val sb = new StringBuilder
@@ -319,8 +313,7 @@ object ScaleQueries {
           else sb.append(
             s"""{"doc_id": ${r.getLong(0)}, "lang": "${r.getString(1)}", "n_chars": ${r.getLong(2)}}\n""")
         }
-        java.nio.file.Files.write(out.toPath, sb.toString.getBytes("UTF-8"))
-        java.nio.file.Files.write(marker.toPath, fp.getBytes("UTF-8"))
+        java.nio.file.Files.write(f.toPath, sb.toString.getBytes("UTF-8"))
       }
       val schema = StructType(Seq(StructField("doc_id", LongType),
         StructField("lang", StringType), StructField("n_chars", LongType)))
@@ -339,13 +332,7 @@ object ScaleQueries {
       // quarantine count pinned, survivors hash-checked.
       import org.apache.spark.sql.types._
       val tag = dir.replaceAll("[^A-Za-z0-9]+", "_")
-      val out = new java.io.File(stagingDir() + s"/csv/docs_$tag.csv")
-      val marker = new java.io.File(out.getPath + ".src")
-      val fp = sourceSignature(dir, "documents")
-      val current = out.isFile && marker.isFile &&
-        new String(java.nio.file.Files.readAllBytes(marker.toPath), "UTF-8") == fp
-      if (!current) {
-        out.getParentFile.mkdirs()
+      val out = stagedInput(s"csv/docs_$tag.csv", sourceSignature(dir, "documents")) { f =>
         val rows = docs(s, dir).select(col("doc_id"), col("lang"), col("n_chars"))
           .orderBy(col("doc_id")).collect()
         val sb = new StringBuilder
@@ -354,8 +341,7 @@ object ScaleQueries {
             sb.append(s"notanumber,${r.getString(1)},${r.getLong(2)}\n")
           else sb.append(s"${r.getLong(0)},${r.getString(1)},${r.getLong(2)}\n")
         }
-        java.nio.file.Files.write(out.toPath, sb.toString.getBytes("UTF-8"))
-        java.nio.file.Files.write(marker.toPath, fp.getBytes("UTF-8"))
+        java.nio.file.Files.write(f.toPath, sb.toString.getBytes("UTF-8"))
       }
       val schema = StructType(Seq(StructField("doc_id", LongType),
         StructField("lang", StringType), StructField("n_chars", LongType)))
@@ -396,10 +382,11 @@ object ScaleQueries {
       // key at write time, so the sort-merge join runs WITHOUT an exchange
       // (LayoutWriterSpec pins the no-shuffle plan). The recurring-join
       // answer to "repartition or bucket?" at 100 TB. The tables are
-      // PUBLISHED idempotently (write once, reuse across runs and JVMs —
-      // a bucketed layout's whole point is paying the write once), with
-      // sf-specific names + a source fingerprint so a changed corpus or a
-      // different sf dir still triggers a rebuild.
+      // PUBLISHED idempotently (written once per JVM under its scratchDir,
+      // then reused by later runs — a bucketed layout's whole point is
+      // paying the write once), with sf-specific names + a source
+      // fingerprint so a changed corpus or a different sf dir still
+      // triggers a rebuild.
       val tag = dir.replaceAll("[^A-Za-z0-9]+", "_")
       val fp = sourceSignature(dir, "lineitem", "orders")
       val liName = s"graft_bk_lineitem_$tag"
@@ -407,11 +394,11 @@ object ScaleQueries {
       graft.sources.LayoutWriter.ensureBucketed(
         li(s, dir).select(col("l_orderkey"), col("l_quantity")),
         liName, "l_orderkey", numBuckets = 16, sortCol = Some("l_orderkey"),
-        location = stagingDir() + s"/bk/$liName", fingerprint = fp)
+        location = scratchDir + s"/bk/$liName", fingerprint = fp)
       graft.sources.LayoutWriter.ensureBucketed(
         ord(s, dir).select(col("o_orderkey"), col("o_orderpriority")),
         ordName, "o_orderkey", numBuckets = 16, sortCol = Some("o_orderkey"),
-        location = stagingDir() + s"/bk/$ordName", fingerprint = fp)
+        location = scratchDir + s"/bk/$ordName", fingerprint = fp)
       s.table(liName).hint("merge")
         .join(s.table(ordName), col("l_orderkey") === col("o_orderkey"))
         .groupBy(col("o_orderpriority"))

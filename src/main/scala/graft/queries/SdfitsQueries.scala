@@ -23,19 +23,12 @@ object SdfitsQueries {
     ColSpec("CALSTATE", 1, 'J'))
 
   /** Write the lineitem-derived observation (every 20th order key) as a
-    * FITS file under staging; idempotent per (sf dir, source fingerprint)
-    * via the same marker discipline as the bucketed tables. Returns the
-    * file path.
+    * FITS file, a [[stagedInput]] per (sf dir, source fingerprint). Returns
+    * the file path.
     */
   private def ensureObservation(s: org.apache.spark.sql.SparkSession, dir: String): String = {
     val tag = dir.replaceAll("[^A-Za-z0-9]+", "_")
-    val out = new java.io.File(stagingDir() + s"/sdfits/obs_$tag.fits")
-    val marker = new java.io.File(out.getPath + ".src")
-    val fp = sourceSignature(dir, "lineitem")
-    val current = out.isFile && marker.isFile &&
-      new String(java.nio.file.Files.readAllBytes(marker.toPath), "UTF-8") == fp
-    if (!current) {
-      out.getParentFile.mkdirs()
+    stagedInput(s"sdfits/obs_$tag.fits", sourceSignature(dir, "lineitem")) { out =>
       // Deterministic order — FITS row order is semantically meaningful
       // (SURVEY §1.1), so the writer pins it. rowkey alone is NOT unique
       // (the synthetic lineitem holds duplicate (l_orderkey, l_linenumber)
@@ -62,9 +55,7 @@ object SdfitsQueries {
           r.getLong(0), r.getSeq[Double](1).toArray, r.getInt(2), r.getInt(3))),
         nRows = rows.length)
       finally os.close()
-      java.nio.file.Files.write(marker.toPath, fp.getBytes("UTF-8"))
-    }
-    out.getAbsolutePath
+    }.getAbsolutePath
   }
 
   def queries: Map[String, Q] = Map(

@@ -67,11 +67,38 @@ class QueryProfileSpec extends SparkTestBase {
     assert(Listeners.count(spark) == before)
   }
 
+  private def job(start: Long, end: Long, taskMs: Vector[Long] = Vector.empty) =
+    QueryProfile.Job(0, None, None, None, start, end, Nil, 0, taskMs.size, 0L, taskMs.sum,
+      0L, 0L, 0L, taskMs)
+
   test("job-covered time is the union of the job intervals") {
-    def job(start: Long, end: Long) =
-      QueryProfile.Job(0, None, None, None, start, end, Nil, 0, 0, 0L, 0L, 0L, 0L)
     val p = QueryProfile(Seq(job(10, 20), job(15, 30), job(40, 45), job(41, 42), job(50, -1)),
       Nil, 0L, 0L)
     assert(p.jobMs == 25)
+  }
+
+  test("task skew is the longest task over the median task, across jobs") {
+    def skew(tasks: Vector[Long]*) =
+      QueryProfile(tasks.map(job(0, 1, _)), Nil, 0L, 0L).taskSkew
+    assert(skew(Vector(10L, 30L, 20L), Vector(100L)) == 100.0 / 30)
+    assert(skew(Vector(5L)) == 1.0)
+    assert(skew() == 1.0 && skew(Vector(0L, 0L, 7L)) == 1.0)
+  }
+
+  test("a window buffer over its spill threshold spills, and the profile counts the bytes") {
+    // This case only: buffer one row in memory, then spill every 1000
+    val confs = Seq("spark.sql.windowExec.buffer.in.memory.threshold" -> "1",
+      "spark.sql.windowExec.buffer.spill.threshold" -> "1000")
+    val before = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    val (_, profile) =
+      try QueryProfile.record(spark) {
+        spark.range(6000).select((col("id") % 2).as("k"), col("id"))
+          .withColumn("s", sum(col("id")).over(
+            org.apache.spark.sql.expressions.Window.partitionBy(col("k"))))
+          .collect()
+      } finally before.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+    assert(profile.spill > 0, profile.jobs)
+    assert(profile.jobs.flatMap(_.taskMs).size == profile.tasks)
   }
 }

@@ -50,15 +50,16 @@ class ContinuumAllSpec extends SparkTestBase {
       "CALSTATE", "SWPVALID", "OBSMODE")
   }
 
-  /** runAll's rows for each file, and run() on that file alone, equal the
-    * reference's reduction of that file.
+  /** runAll's rows for each file, sorted by t (its product is unordered),
+    * and run() on that file alone, in its own t order, equal the reference's
+    * reduction of that file.
     */
   private def assertParity(df: DataFrame, nFiles: Int, p: Continuum.Params): Unit = {
     val expected = ReferenceReduction.files(df, header).view
       .mapValues(ReferenceReduction.continuum(_, header, p).sortBy(_._1)).toMap
     val all = Continuum.runAll(df, header, p)
       .as[(String, Double, Double)].collect()
-      .groupBy(_._1).view.mapValues(_.map(r => (r._2, r._3)).toSeq).toMap
+      .groupBy(_._1).view.mapValues(_.map(r => (r._2, r._3)).toSeq.sortBy(_._1)).toMap
     assert(expected.keySet == (0 until nFiles).map(_.toString).toSet)
     for (f <- 0 until nFiles) {
       val single = Continuum.run(df.filter($"FILE_ID" === f.toString), header, p)

@@ -1,11 +1,9 @@
 package graft.pipeline
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
-import org.apache.spark.sql.execution.{SortExec, SparkPlan}
-import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanHelper, QueryStageExec}
-import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
-import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_COL, ShuffleExchangeExec}
+import org.apache.spark.sql.execution.SortExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
 import graft.SparkTestBase
 import graft.model.HeaderRecord
@@ -221,44 +219,38 @@ class PipelineSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
       r.spectrum.queryExecution.executedPlan)
   }
 
-  private def exchanges(plan: SparkPlan): Seq[ShuffleExchangeExec] =
-    collect(plan) { case e: ShuffleExchangeExec => e }
-
-  /** Whether evaluating `p` up to the previous stage boundaries decodes the source. */
-  private def scansSource(p: SparkPlan): Boolean = p match {
-    case _: QueryStageExec => false
-    case _: BatchScanExec  => true
-    case other             => other.children.exists(scansSource)
-  }
-
-  test("Pipeline.runAll over stamped SDFITS shuffles only for the final sorts") {
+  test("Pipeline.runAll plans no exchange over stamped SDFITS") {
     val (jc, js, cont, spec, contPlan, specPlan) = runAllOn(sdfitsDir(4, stamped = true))
     val (ujc, ujs, ucont, uspec, _, _) = runAllOn(sdfitsDir(4, stamped = false))
-    assert(cont == ucont && spec == uspec && cont.nonEmpty && spec.nonEmpty)
-    // No Exchange below the ST1 scan, the cc and params aggregates or the
-    // off thresholds, and no per-file sort: the continuum's one exchange is
-    // its final range sort. The spectrum keeps one hash exchange, over the
-    // per-file vector sums, so its range sort samples that stage's output
-    // and DATA is decoded once.
-    assert(exchanges(contPlan).map(_.outputPartitioning.getClass) == Seq(classOf[RangePartitioning]))
-    assert(collect(contPlan) { case s: SortExec if !s.global => s }.isEmpty)
-    val specEx = exchanges(specPlan)
-    assert(specEx.map(e => (e.outputPartitioning.isInstanceOf[RangePartitioning], e.shuffleOrigin))
-      .toSet == Set((true, org.apache.spark.sql.execution.exchange.ENSURE_REQUIREMENTS),
-        (false, REPARTITION_BY_COL)), specPlan)
-    for (e <- (exchanges(contPlan) ++ specEx).filter(_.outputPartitioning.isInstanceOf[RangePartitioning]))
-      assert(!scansSource(e.child), s"the range sort's sample would rescan the source:\n$e")
-    assert((jc, js) == (7, 5), s"stamped jobs: continuum $jc, spectrum $js")
-    // Unstamped copies of the same files plan as before, but for A3's one
-    // aggregate (the continuum's two countDistincts planned two exchanges).
-    assert((ujc, ujs) == (10, 6), s"unstamped jobs: continuum $ujc, spectrum $ujs")
+    // The products are unordered: the same rows in any order.
+    def sorted(rows: Seq[org.apache.spark.sql.Row]) = rows.sortBy(_.toString)
+    assert(sorted(cont) == sorted(ucont) && sorted(spec) == sorted(uspec))
+    assert(cont.nonEmpty && spec.nonEmpty)
+    // No Exchange below the ST1 scan, the cc and params aggregates, the off
+    // thresholds or the vector sums, and no sort of either kind.
+    for (plan <- Seq(contPlan, specPlan)) {
+      assert(collect(plan) { case e: ShuffleExchangeExec => e }.isEmpty, plan)
+      assert(collect(plan) { case s: SortExec => s }.isEmpty, plan)
+    }
+    // Each file's rows arrive in one partition in ROWIDX order (t = ROWIDX
+    // in this fixture) and its spectrum in pos order.
+    for ((_, rows) <- cont.groupBy(_.getString(0))) {
+      val t = rows.map(_.getDouble(1))
+      assert(t == t.sorted)
+    }
+    for ((_, rows) <- spec.groupBy(_.getString(0)))
+      assert(rows.map(_.getInt(1)) == rows.indices)
+    assert((jc, js) == (5, 2), s"stamped jobs: continuum $jc, spectrum $js")
+    // Unstamped copies of the same files shuffle once per per-file step
+    // (three continuum aggregates, two spectrum ones).
+    assert((ujc, ujs) == (8, 4), s"unstamped jobs: continuum $ujc, spectrum $ujs")
   }
 
   test("Pipeline.runAll over stamped SDFITS issues the same jobs for 2 and 100 files") {
     val (j2c, j2s, _, _, _, _) = runAllOn(sdfitsDir(2, stamped = true))
     val (j100c, j100s, c100, _, _, _) = runAllOn(sdfitsDir(100, stamped = true))
     assert(c100.map(_.getString(0)).distinct.length == 100)
-    assert((j2c, j2s) == (7, 5) && (j100c, j100s) == (7, 5),
+    assert((j2c, j2s) == (5, 2) && (j100c, j100s) == (5, 2),
       s"jobs at 2 files: ($j2c, $j2s), at 100 files: ($j100c, $j100s)")
   }
 }

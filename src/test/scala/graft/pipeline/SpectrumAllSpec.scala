@@ -37,8 +37,9 @@ class SpectrumAllSpec extends SparkTestBase {
       "CALSTATE", "SWPVALID", "OBSMODE")
   }
 
-  /** runAll's rows for each file, and run() on that file alone, equal the
-    * reference's reduction of that file (no rows for a file the filter
+  /** runAll's rows for each file, sorted by pos (its product is
+    * unordered), and run() on that file alone, in its own pos order, equal
+    * the reference's reduction of that file (no rows for a file the filter
     * empties); returns the reference's rows.
     */
   private def assertParity(files: Seq[File]): Map[Int, Seq[(Int, Double, Double)]] = {
@@ -47,7 +48,7 @@ class SpectrumAllSpec extends SparkTestBase {
     val rows = ReferenceReduction.files(df, header)
     val all = Spectrum.runAll(df, header, p)
       .as[(String, Int, Double, Double)].collect()
-      .groupBy(_._1).view.mapValues(_.map(r => (r._2, r._3, r._4)).toSeq).toMap
+      .groupBy(_._1).view.mapValues(_.map(r => (r._2, r._3, r._4)).toSeq.sortBy(_._1)).toMap
     files.indices.map { f =>
       val want = ReferenceReduction.spectrum(rows(f.toString), header, p)
       val single = Spectrum.run(df.filter($"FILE_ID" === f.toString), header, p)
