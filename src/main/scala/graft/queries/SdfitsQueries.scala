@@ -78,7 +78,7 @@ object SdfitsQueries {
       import s.implicits._
       val path = ensureObservation(s, dir)
       val bytes = java.nio.file.Files.readAllBytes(new java.io.File(path).toPath)
-      val bad = new java.io.File(stagingDir() + "/sdfits/obs_corrupted.fits")
+      val bad = new java.io.File(new java.io.File(path).getParentFile, "obs_corrupted.fits")
       java.nio.file.Files.write(bad.toPath, SdfitsFormat.corruptStripEnd(bytes))
       val rejected =
         try { s.read.format("sdfits").load(bad.getPath).count(); false }

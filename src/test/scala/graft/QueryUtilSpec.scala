@@ -37,6 +37,27 @@ class QueryUtilSpec extends SparkTestBase {
     assert(QueryUtil.stagedOnce(spark, key, build(3)).count() == 5 && builds == 2)
   }
 
+  test("q_sdfits_verify runs alone on a checkout with no shared sdfits staging directory") {
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    val sf = "/root/testdata/sf0.001"
+    assume(Files.exists(Paths.get(sf, "lineitem.parquet")), s"testdata missing at $sf")
+    // What a fresh checkout has: no staging/sdfits, which only
+    // q_sdfits_roundtrip creates. Set an existing one aside for the run.
+    val shared = Paths.get(QueryUtil.stagingDir(), "sdfits")
+    val aside = Paths.get(shared.toString + s".aside_${System.nanoTime()}")
+    if (Files.exists(shared)) Files.move(shared, aside)
+    try {
+      val row = SparkEntry.queries("q_sdfits_verify")(spark, sf).head()
+      assert(row.getAs[Boolean]("rejected") && row.getAs[Long]("valid_rows") > 0, row)
+      assert(!Files.exists(shared), "q_sdfits_verify wrote outside this JVM's scratch directory")
+    } finally {
+      if (Files.exists(shared))
+        Files.walk(shared).iterator.asScala.toList.reverse.foreach(Files.deleteIfExists)
+      if (Files.exists(aside)) Files.move(aside, shared)
+    }
+  }
+
   test("a staged input an earlier JVM left does not change a query's first-run jobs") {
     import java.nio.file.{Files, Path, Paths}
     import java.nio.file.StandardCopyOption.{COPY_ATTRIBUTES, REPLACE_EXISTING}

@@ -8,8 +8,9 @@ queries they share (old -> new), then one line per query whose jobs,
 Janino compiles, shuffle bytes or spill bytes moved, and the queries only
 one side ran or that failed on one side (a negative `sec`).
 
-Exit status: 1 when any shared query ran more jobs in NEW than in OLD,
-else 0. Compiles, shuffle and spill are flagged but do not fail: compiles
+A report only: it exits 0 whatever moved. The one gate on job growth is
+Bench's JobGate; to fail a run whose jobs rose over an earlier profile, run
+Bench with SPARK_GRAFT_ASSERT_JOBS=<that bench_detail.json>. Compiles
 follow Spark's codegen cache, so they move with the queries run before.
 Shuffle and spill MB are flagged when they move by more than 1 %: the same
 plan writes compressed blocks a few bytes apart when its rows arrive in
@@ -53,7 +54,6 @@ def main(argv):
         b = sum(new[q][k] for q in shared if old[q]["sec"] > 0 and new[q]["sec"] > 0)
         print(f"  {k:24s} {a:14.3f} -> {b:14.3f}  ({b - a:+.3f})")
 
-    rises = []
     print("moved rows:")
     for q in shared:
         o, n = old[q], new[q]
@@ -64,17 +64,11 @@ def main(argv):
                  if k in o and k in n and moved_by(o[k], n[k])]
         if moved:
             print(f"  {q}: " + ", ".join(moved))
-        if n["jobs"] > o["jobs"]:
-            rises.append(f"{q}: jobs {o['jobs']} -> {n['jobs']}")
     for q in sorted(set(old) - set(new)):
         print(f"  {q}: only in old")
     for q in sorted(set(new) - set(old)):
         print(f"  {q}: only in new")
 
-    for r in rises:
-        print("JOB INCREASE:", r)
-    return 1 if rises else 0
-
 
 if __name__ == "__main__":
-    sys.exit(main(sys.argv))
+    main(sys.argv)
